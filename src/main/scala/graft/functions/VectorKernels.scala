@@ -255,8 +255,8 @@ object VectorKernels {
     var c = 0
     while (c < n) {
       val d = distance(v, centroids(c), metric)
-      // NaN (corrupt centroid, Inf-Inf) must be rejected like TopKBuf /
-      // TopKHeap do: a NaN accepted while the buffer fills compares false
+      // NaN (corrupt centroid, Inf-Inf) must be rejected as TopKBuf
+      // does: a NaN accepted while the buffer fills compares false
       // against every later candidate and permanently blocks the tail of
       // the scan — silent recall loss on an otherwise-healthy probe.
       // Centroid ids arrive ascending, so on a tie the incumbent wins.

@@ -109,7 +109,7 @@ case class BroadcastProbeTopKExec(
     corpus.execute().mapPartitions({ rows =>
       // the factory memoizes the heavy per-executor fold; the scorer
       // itself is per-task (it may hold mutable scan state)
-      new TopKScanIterator(rows, factoryLocal.scorer(bcRows.value),
+      TopKScanIterator(rows, factoryLocal.scorer(bcRows.value),
         kLocal, maxLocal, outRows, cands)
     }, preservesPartitioning = true)
   }

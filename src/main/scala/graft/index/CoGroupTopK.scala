@@ -141,7 +141,7 @@ object CoGroupTopK {
    * list_id INT) — one row per (query, probe); `corpus` is (id LONG,
    * list_id INT, vec ARRAY<FLOAT>). Returns (qid, id, dist, rank) with the
    * (dist, id) tie order, bit-identical to the static path (same
-   * [[VectorKernels.distance]] kernel, same [[TopKBuf]] order).
+   * [[VectorKernels.distance]] kernel, same [[TopKBuf]] keep-set and order).
    *
    * Queries sort FIRST within each group (tag 0: they are the buffered
    * side); corpus rows then stream, each payload decoding once and feeding
@@ -344,29 +344,21 @@ object CoGroupTopK {
     }
     val n = qids.length
     if (n == 0) return Iterator.empty
-    val useHeap = k > PartialTopK.HeapThreshold
-    val bufs = if (useHeap) null else Array.fill(n)(TopKBuf.empty(k))
-    val heaps = if (useHeap) Array.fill(n)(new TopKHeap(k)) else null
+    val bufs = Array.fill(n)(new TopKBuf(k))
     while (cs.hasNext) {
       val (_, id, vec) = cs.next()
       if (vec != null) {
         var i = 0
         while (i < n) {
           val d = VectorKernels.distance(vec, qvecs(i), metricId)
-          if (useHeap) heaps(i).insert(d, id) else bufs(i).insert(d, id)
+          bufs(i).insert(d, id)
           i += 1
         }
       }
     }
     Iterator.range(0, n).flatMap { i =>
-      if (useHeap) {
-        val h = heaps(i)
-        h.sortAscending()
-        Iterator.range(0, h.size).map(j => (qids(i), h.ids(j), h.dists(j)))
-      } else {
-        val b = bufs(i)
-        Iterator.range(0, b.size).map(j => (qids(i), b.ids(j), b.dists(j)))
-      }
+      val b = bufs(i).drain()
+      Iterator.range(0, b.size).map(j => (qids(i), b.id(j), b.dist(j)))
     }
   }
 
@@ -400,7 +392,6 @@ object CoGroupTopK {
     // exposed (PQ flood taskCpu 20x the brute-force exact scan's on the
     // same candidate count)
     val cap = math.min(k, nC)
-    val useHeap = cap > PartialTopK.HeapThreshold
     val buildTable = nC >= books(0).length // ks — the amortization point
     // first-qvec-wins for duplicated qids, like scoreFlatList (and every
     // static-path peer) — see the comment there
@@ -414,18 +405,11 @@ object CoGroupTopK {
         @inline def dist(i: Int): Double =
           if (table != null) PqKernels.adcDistanceBytes(table, codeRows(i))
           else PqKernels.adcDistanceDirectBytes(prepped, books, metricId, codeRows(i))
-        if (useHeap) {
-          val h = new TopKHeap(cap)
-          var i = 0
-          while (i < nC) { h.insert(dist(i), ids(i)); i += 1 }
-          h.sortAscending()
-          Iterator.range(0, h.size).map(j => (qid, h.ids(j), h.dists(j)))
-        } else {
-          val b = TopKBuf.empty(cap)
-          var i = 0
-          while (i < nC) { b.insert(dist(i), ids(i)); i += 1 }
-          Iterator.range(0, b.size).map(j => (qid, b.ids(j), b.dists(j)))
-        }
+        val b = new TopKBuf(cap)
+        var i = 0
+        while (i < nC) { b.insert(dist(i), ids(i)); i += 1 }
+        b.drain()
+        Iterator.range(0, b.size).map(j => (qid, b.id(j), b.dist(j)))
       }
     }
   }

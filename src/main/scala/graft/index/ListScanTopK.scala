@@ -5,7 +5,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
-import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -91,7 +90,7 @@ case class ListScanTopKExec(
     val outRows = longMetric("numOutputRows")
     val cands = longMetric("numCandidates")
     child.execute().mapPartitions({ rows =>
-      new TopKScanIterator(rows, scorerLocal, kLocal, maxLocal, outRows, cands)
+      TopKScanIterator(rows, scorerLocal, kLocal, maxLocal, outRows, cands)
     }, preservesPartitioning = true)
   }
 
@@ -104,83 +103,27 @@ case class ListScanTopKExec(
  * deopt-immune operator ([[ListScanTopKExec]] over a driver-built probe
  * broadcast, [[BroadcastProbeTopKExec]] over an in-plan broadcast
  * exchange): pulls corpus rows `(id LONG, list_id INT, payload)` by
- * position, routes each through the scorer into per-query top-k buffers,
- * and drains `(_1 qid, _2 id, _3 dist)` partial rows. Bounded memory at
- * any query cardinality — past `maxKeys` distinct qids the buffer map
- * flushes and restarts (fragments re-merge in the final aggregation).
+ * position and routes each through the scorer into the task's
+ * [[PartialTopKCombine]], which drains `(_1 qid, _2 id, _3 dist)` partial
+ * rows.
  */
-final class TopKScanIterator(
-    rows: Iterator[InternalRow],
-    scorer: ListScorer,
-    k: Int,
-    maxKeys: Int,
-    outRows: SQLMetric,
-    cands: SQLMetric) extends Iterator[InternalRow] with TopKSink {
-
-  private val useHeap = k > PartialTopK.HeapThreshold
-  private val bufMap =
-    if (useHeap) null else new LongTopKMap[TopKBuf](1 << 10, maxKeys)
-  private val heapMap =
-    if (useHeap) new LongTopKMap[TopKHeap](1 << 10, maxKeys) else null
-  private val writer = new UnsafeRowWriter(3)
-  private var out: Iterator[InternalRow] = Iterator.empty
-  private var exhausted = false
-  private var scored = 0L
-
-  override def insert(qid: Long, id: Long, dist: Double): Unit = {
-    scored += 1
-    if (useHeap) {
-      var h = heapMap.get(qid)
-      if (h == null) { h = new TopKHeap(k); heapMap.put(qid, h) }
-      h.insert(dist, id)
-    } else {
-      var buf = bufMap.get(qid)
-      if (buf == null) { buf = TopKBuf.empty(k); bufMap.put(qid, buf) }
-      buf.insert(dist, id)
-    }
-  }
-
-  override def hasNext: Boolean = {
-    while (!out.hasNext && !exhausted) advance()
-    out.hasNext
-  }
-  override def next(): InternalRow = { hasNext; out.next() }
-
-  @inline private def mapSize: Int = if (useHeap) heapMap.size else bufMap.size
-
-  private def advance(): Unit = {
-    while (rows.hasNext && mapSize < maxKeys) {
-      val r = rows.next()
+object TopKScanIterator {
+  def apply(
+      rows: Iterator[InternalRow],
+      scorer: ListScorer,
+      k: Int,
+      maxKeys: Int,
+      outRows: SQLMetric,
+      cands: SQLMetric): Iterator[InternalRow] =
+    new PartialTopKCombine(rows, k, maxKeys, outRows, Some(cands))((r, sink) =>
       // null payload/list (e.g. a predicate-filtered projection) is
-      // skipped, matching the old path where a null distance row was
-      // dropped inside PartialTopKExec
+      // skipped, as a null candidate is inside PartialTopKExec
       if (!(r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-        scorer.scoreInto(r.getInt(1), r.getArray(2), r.getLong(0), this)
-    }
-    if (!rows.hasNext) exhausted = true
-    @inline def emit(qid: Long, id: Long, dist: Double): InternalRow = {
-      writer.reset()
-      writer.write(0, qid)
-      writer.write(1, id)
-      writer.write(2, dist)
-      outRows += 1
-      writer.getRow
-    }
-    cands += scored
-    scored = 0L
-    out =
-      if (useHeap) heapMap.drain().iterator.flatMap { case (qid, h) =>
-        h.sortAscending()
-        Iterator.range(0, h.size).map(j => emit(qid, h.ids(j), h.dists(j)))
-      }
-      else bufMap.drain().iterator.flatMap { case (qid, buf) =>
-        Iterator.range(0, buf.size).map(j => emit(qid, buf.ids(j), buf.dists(j)))
-      }
-  }
+        scorer.scoreInto(r.getInt(1), r.getArray(2), r.getLong(0), sink))
 }
 
 /** Candidate receiver for [[ListScorer.scoreInto]] — implemented by the
-  * exec's per-partition top-k buffer map. */
+  * task's [[PartialTopKCombine]]. */
 trait TopKSink {
   def insert(qid: Long, id: Long, dist: Double): Unit
 }

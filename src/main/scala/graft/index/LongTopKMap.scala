@@ -10,14 +10,14 @@ package graft.index
  *
  * Not thread-safe; one instance per partition-task.
  */
-final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int) {
+final class LongTopKMap(initialCapacity: Int, maxKeys: Int) {
   require(maxKeys > 0, s"maxKeys must be positive, got $maxKeys")
 
   private var cap = Integer.highestOneBit(
     math.max(8, math.min(initialCapacity, maxKeys)) * 2 - 1) * 2
   private var mask = cap - 1
   private var keys = new Array[Long](cap)
-  private var vals = new Array[AnyRef](cap)
+  private var vals = new Array[TopKBuf](cap)
   private var n = 0
 
   def size: Int = n
@@ -28,10 +28,10 @@ final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int)
     ((h >>> 32) ^ h).toInt & mask
   }
 
-  def get(k: Long): V = {
+  def get(k: Long): TopKBuf = {
     var i = slot(k)
     while (vals(i) != null) {
-      if (keys(i) == k) return vals(i).asInstanceOf[V]
+      if (keys(i) == k) return vals(i)
       i = (i + 1) & mask
     }
     null
@@ -39,11 +39,11 @@ final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int)
 
   /** Caller must ensure the key is absent. `maxKeys` is the caller's FLUSH
     * budget, not a hard capacity: a caller that inserts several keys
-    * between flush checks (ListScanTopKExec scores one corpus row against
-    * a whole list's queries) may overshoot it by one batch, so capacity
+    * between flush checks ([[PartialTopKCombine]] under a list scan scores
+    * one corpus row against a whole list's queries) may overshoot it by one batch, so capacity
     * always follows `n` — a full table would turn the linear probe into an
     * infinite loop. */
-  def put(k: Long, v: V): Unit = {
+  def put(k: Long, v: TopKBuf): Unit = {
     var i = slot(k)
     while (vals(i) != null) i = (i + 1) & mask
     keys(i) = k
@@ -59,7 +59,7 @@ final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int)
     cap <<= 1
     mask = cap - 1
     keys = new Array[Long](cap)
-    vals = new Array[AnyRef](cap)
+    vals = new Array[TopKBuf](cap)
     var i = 0
     while (i < oldVals.length) {
       val v = oldVals(i)
@@ -74,8 +74,8 @@ final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int)
   }
 
   /** Snapshot entries into an array (for the flush drain) and clear. */
-  def drain(): Array[(Long, V)] = {
-    val out = new Array[(Long, AnyRef)](n)
+  def drain(): Array[(Long, TopKBuf)] = {
+    val out = new Array[(Long, TopKBuf)](n)
     var i = 0
     var o = 0
     while (i < vals.length) {
@@ -87,6 +87,6 @@ final class LongTopKMap[V >: Null <: AnyRef](initialCapacity: Int, maxKeys: Int)
       i += 1
     }
     n = 0
-    out.asInstanceOf[Array[(Long, V)]]
+    out
   }
 }

@@ -21,21 +21,15 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
  * per-thread partial buffers (ivf_flat_index.cpp:474-518) as the merge
  * half of [[PartialTopKExec]].
  *
- * This replaces the typed-Aggregator final merge
- * ([[TopKAggregator.finalizePartial]]'s former `groupByKey.agg` shape),
- * which at flood cardinality paid for every partial row twice through
- * ExpressionEncoder boxing (a Tuple3 + three boxed primitives on emit,
- * the same again on the aggregator's decode) plus full-capacity TopKBuf
- * buffer serialization across the partial/final shuffle — at k=600 a
- * ~95%-empty 9.6 KB payload per (task x qid). Here the stream crosses the
- * exchange as 24-byte UnsafeRows, the run walk reads primitive getters,
- * and nothing allocates per candidate.
+ * The stream crosses the exchange as 24-byte UnsafeRows (no encoder
+ * boxing, no top-k buffers serialized across the partial/final shuffle),
+ * the run walk reads primitive getters, and nothing allocates per
+ * candidate.
  *
- * Memory is one k-sized buffer regardless of query cardinality (the sort
+ * Memory is one [[TopKBuf]] regardless of query cardinality (the sort
  * that groups runs is Spark's spillable UnsafeExternalSorter); semantics
- * are bit-identical to the aggregator it replaces: (dist, id) ascending
- * ties, NaN never ranks, null slots skipped, exact (dist, id) duplicates
- * collapse ([[TopKBuf]]/[[TopKHeap]] insert contracts).
+ * are the buffer's: (dist, id) ascending ties, NaN never ranks, exact
+ * (dist, id) duplicates collapse. Null slots are skipped.
  *
  * Callers provide the clustering + in-partition sort explicitly
  * (`repartition(n, qid)` + `sortWithinPartitions(qid)`) so the exchange
@@ -79,11 +73,9 @@ case class RankTopKExec(k: Int, override val output: Seq[Attribute], child: Spar
     val outRows = longMetric("numOutputRows")
     child.execute().mapPartitions({ rows =>
       new Iterator[InternalRow] {
-        private val useHeap = kLocal > PartialTopK.HeapThreshold
         // fresh buffer per run: the drained iterator reads the RETIRED
         // buffer lazily while the next run fills a new one
         private var buf: TopKBuf = null
-        private var heap: TopKHeap = null
         private var curQid = 0L
         private var haveRun = false
         private var exhausted = false
@@ -99,11 +91,8 @@ case class RankTopKExec(k: Int, override val output: Seq[Attribute], child: Spar
         private def newRun(qid: Long): Unit = {
           curQid = qid
           haveRun = true
-          if (useHeap) heap = new TopKHeap(kLocal) else buf = TopKBuf.empty(kLocal)
+          buf = new TopKBuf(kLocal)
         }
-
-        @inline private def insert(d: Double, id: Long): Unit =
-          if (useHeap) heap.insert(d, id) else buf.insert(d, id)
 
         /** Retire the current run's buffer into an output iterator. The
           * writer's UnsafeRow is reused per row — consumers (exchanges,
@@ -120,14 +109,8 @@ case class RankTopKExec(k: Int, override val output: Seq[Attribute], child: Spar
             outRows += 1
             writer.getRow
           }
-          if (useHeap) {
-            val h = heap
-            h.sortAscending()
-            Iterator.range(0, h.size).map(j => emit(h.ids(j), h.dists(j), j + 1))
-          } else {
-            val b = buf
-            Iterator.range(0, b.size).map(j => emit(b.ids(j), b.dists(j), j + 1))
-          }
+          val b = buf.drain()
+          Iterator.range(0, b.size).map(j => emit(b.id(j), b.dist(j), j + 1))
         }
 
         private def advance(): Unit = {
@@ -139,10 +122,10 @@ case class RankTopKExec(k: Int, override val output: Seq[Attribute], child: Spar
               else if (qid != curQid) {
                 out = drainRun()
                 newRun(qid)
-                insert(r.getDouble(2), r.getLong(1))
+                buf.insert(r.getDouble(2), r.getLong(1))
                 return
               }
-              insert(r.getDouble(2), r.getLong(1))
+              buf.insert(r.getDouble(2), r.getLong(1))
             }
           }
           exhausted = true

@@ -28,10 +28,8 @@ object TopKAggregator {
    * physical operators over primitive getters — no per-candidate (or
    * per-partial-row) encoder boxing, no aggregation buffers crossing the
    * shuffle, and the surrounding plan (probe join, partition-pruned scan)
-   * stays visible in `explain`. (The previous typed-Aggregator final merge
-   * paid ExpressionEncoder boxing twice per partial row plus full-capacity
-   * TopKBuf serialization per (task x qid) — at flood cardinality that
-   * outweighed the actual distance work.)
+   * stays visible in `explain`. Both levels keep one [[TopKBuf]] per
+   * query.
    */
   def topKPerQuery(scored: DataFrame, k: Int,
       queryCol: String = "qid", idCol: String = "id",

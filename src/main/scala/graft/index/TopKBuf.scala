@@ -1,77 +1,157 @@
 package graft.index
 
 /**
- * Mutable bounded top-k buffer: two fixed primitive arrays sorted ascending
- * by (dist, id) — the JVM twin of the reference's per-thread top-32
- * insertion-sorted register buffer (reference engine/kernels.cuh:120-170).
- * Zero allocation per candidate: the common reject case is one comparison
- * against the current worst, and an accepted candidate is a binary search
- * plus an arraycopy shift within the k-sized arrays.
+ * Mutable bounded top-k buffer: keeps the k smallest (dist, id) pairs,
+ * rejects NaN (it would win every `<` slot; Window sorts it last), and
+ * collapses exact (dist, id) duplicates. Top-k is over the candidate SET:
+ * a multi-probe self-join scores a pair once per shared list and the
+ * copies must not crowd out real neighbors; for every other producer
+ * (unique (qid, id) streams) the duplicate check never fires.
  *
  * Top-k under the total order (dist, id) is set-determined, so insertion
  * order never changes the final contents — safe for partial/merge
  * aggregation in any partitioning.
  *
- * Historical note: the encoder-friendly case-class shape dates from the
- * typed-Aggregator era, when the buffer crossed the partial/final shuffle
- * through ExpressionEncoder serialization. Since RankTopKExec replaced
- * that path, buffers live only inside per-task iterators
- * (TopKScanIterator, RankTopKExec, the co-group scorers) and never
- * serialize — the shape is kept for its plain-arrays performance, not an
- * encoder constraint. [[merge]] likewise has no production caller today
- * (the per-task paths insert candidate-by-candidate); it remains the S5
- * reference semantics, exercised by TopKAggregatorSpec's partition-merge
- * property test.
+ * The representation is chosen from k:
+ *  - k <= [[PartialTopK.HeapThreshold]]: two k-sized primitive arrays kept
+ *    sorted ascending — the JVM twin of the reference's per-thread top-32
+ *    insertion-sorted register buffer (reference
+ *    engine/kernels.cuh:120-170). The common reject is one comparison
+ *    against the current worst; an accept is a binary search plus an
+ *    arraycopy shift. The binary search lands AFTER an equal (dist, id)
+ *    entry, so an exact duplicate is always at the slot before it.
+ *  - above it: a binary max-heap on (dist, id) over lazily grown arrays.
+ *    The sorted insert's O(size) shift would make a rerank-all search
+ *    (k >= candidate count, used to make the exact-rerank oracle
+ *    exhaustive) cost O(n^2/4) element moves per query; the heap keeps
+ *    accepts at O(log n) and pays one in-place heapsort at [[drain]]. A
+ *    heap cannot find a duplicate in place, so a companion id → dist map
+ *    mirrors the kept set and is probed only on the ACCEPT path. It keys
+ *    on id alone, so it detects duplicates whose distance matches the kept
+ *    entry — true for every real producer, where distance is a
+ *    deterministic function of (qid, id).
+ *
+ * Zero allocation per candidate on the array side.
  */
-case class TopKBuf(k: Int, dists: Array[Double], ids: Array[Long], var size: Int) {
+final class TopKBuf(val k: Int) {
+  private val heap = k > PartialTopK.HeapThreshold
+  private var dists = new Array[Double](if (heap) math.min(k, 32) else k)
+  private var ids = new Array[Long](dists.length)
+  private var n = 0
+  /** Heap side: id → dist of the kept entries. Starts small and rehashes
+    * as it fills, so a producer supplying far fewer than k candidates
+    * (the rerank-preK flood shape) pays no k-proportional table. */
+  private val kept =
+    if (heap) new java.util.HashMap[java.lang.Long, java.lang.Double](32) else null
 
-  /** (d, id) >= the current worst kept entry (call only when size == k). */
-  private def gteWorst(d: Double, id: Long): Boolean = {
-    val l = size - 1
-    d > dists(l) || (d == dists(l) && id >= ids(l))
-  }
+  def size: Int = n
 
   def insert(d: Double, id: Long): TopKBuf = {
-    if (d.isNaN) return this // NaN would win every `<` slot; Window sorts it last
-    if (size == k && gteWorst(d, id)) return this
+    if (!d.isNaN) { if (heap) heapInsert(d, id) else sortedInsert(d, id) }
+    this
+  }
+
+  /** Arranges the kept entries ascending by (dist, id); read them back
+    * with [[dist]] and [[id]] over [0, size). On the heap side this
+    * consumes the heap: no insert or second drain may follow. */
+  def drain(): TopKBuf = {
+    if (heap) heapSort()
+    this
+  }
+
+  def dist(j: Int): Double = dists(j)
+  def id(j: Int): Long = ids(j)
+
+  /** Merge another buffer in (S5 k-way merge); drains `o`. The reference
+    * semantics the partial/final operators are tested against. */
+  def merge(o: TopKBuf): TopKBuf = {
+    o.drain()
+    var j = 0
+    while (j < o.n) { insert(o.dists(j), o.ids(j)); j += 1 }
+    this
+  }
+
+  /** (d1, i1) orders strictly after (d2, i2)? */
+  @inline private def gt(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
+    d1 > d2 || (d1 == d2 && i1 > i2)
+
+  private def sortedInsert(d: Double, id: Long): Unit = {
+    if (n == k && !gt(dists(n - 1), ids(n - 1), d, id)) return
     var lo = 0
-    var hi = size
+    var hi = n
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (d < dists(mid) || (d == dists(mid) && id < ids(mid))) hi = mid else lo = mid + 1
+      if (gt(dists(mid), ids(mid), d, id)) hi = mid else lo = mid + 1
     }
-    // the search lands AFTER an equal (d, id) entry, so an exact duplicate
-    // is always at lo-1: keep one. Top-k is over the candidate SET; a
-    // multi-probe self-join scores a pair once per shared list and the
-    // copies must not crowd out real neighbors. For every other producer
-    // (unique (qid, id) streams) this check never fires.
-    if (lo > 0 && dists(lo - 1) == d && ids(lo - 1) == id) return this
-    val tail = math.min(size, k - 1) // last slot falls off when full
+    if (lo > 0 && dists(lo - 1) == d && ids(lo - 1) == id) return
+    val tail = math.min(n, k - 1) // last slot falls off when full
     System.arraycopy(dists, lo, dists, lo + 1, tail - lo)
     System.arraycopy(ids, lo, ids, lo + 1, tail - lo)
     dists(lo) = d
     ids(lo) = id
-    if (size < k) size += 1
-    this
+    if (n < k) n += 1
   }
 
-  /** Merge another buffer in (S5 k-way merge). `o` is sorted ascending, so
-    * the first rejected element ends the loop. */
-  def merge(o: TopKBuf): TopKBuf = {
-    var i = 0
-    while (i < o.size) {
-      if (size == k && gteWorst(o.dists(i), o.ids(i))) return this
-      insert(o.dists(i), o.ids(i))
-      i += 1
+  private def heapInsert(d: Double, id: Long): Unit = {
+    // full: accept only if strictly better than the worst kept (the root)
+    if (n == k && !gt(dists(0), ids(0), d, id)) return
+    val prev = kept.get(id)
+    if (prev != null && prev.doubleValue() == d) return
+    if (n == k) {
+      kept.remove(ids(0))
+      kept.put(id, d)
+      dists(0) = d
+      ids(0) = id
+      siftDown(0, n)
+    } else {
+      kept.put(id, d)
+      if (n == dists.length) {
+        val cap = math.min(k, n << 1)
+        dists = java.util.Arrays.copyOf(dists, cap)
+        ids = java.util.Arrays.copyOf(ids, cap)
+      }
+      dists(n) = d
+      ids(n) = id
+      n += 1
+      siftUp(n - 1)
     }
-    this
   }
 
-  def toSeq: Seq[(Double, Long)] =
-    (0 until size).map(i => (dists(i), ids(i)))
-}
+  private def siftUp(start: Int): Unit = {
+    var i = start
+    while (i > 0) {
+      val p = (i - 1) >>> 1
+      if (gt(dists(i), ids(i), dists(p), ids(p))) { swap(i, p); i = p }
+      else return
+    }
+  }
 
-object TopKBuf {
-  def empty(k: Int): TopKBuf =
-    TopKBuf(k, new Array[Double](k), new Array[Long](k), 0)
+  private def siftDown(start: Int, end: Int): Unit = {
+    var i = start
+    while (true) {
+      val l = 2 * i + 1
+      if (l >= end) return
+      val r = l + 1
+      var m = l
+      if (r < end && gt(dists(r), ids(r), dists(l), ids(l))) m = r
+      if (gt(dists(m), ids(m), dists(i), ids(i))) { swap(i, m); i = m }
+      else return
+    }
+  }
+
+  @inline private def swap(a: Int, b: Int): Unit = {
+    val d = dists(a); dists(a) = dists(b); dists(b) = d
+    val i = ids(a); ids(a) = ids(b); ids(b) = i
+  }
+
+  /** In-place heapsort: consumes the heap property, leaves [0, size)
+    * ascending. */
+  private def heapSort(): Unit = {
+    var m = n
+    while (m > 1) {
+      m -= 1
+      swap(0, m)
+      siftDown(0, m)
+    }
+  }
 }

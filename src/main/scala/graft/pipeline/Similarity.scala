@@ -268,9 +268,8 @@ object Similarity {
       maxBucket: Int = Dedup.DefaultMaxBucket,
       maxSelfIndexRows: Int = MaxSelfIndexRows): DataFrame = {
     val spark = vectors.sparkSession
-    // heap-sized k is fast-path-eligible too since TopKHeap gained the
-    // exact-duplicate skip (round 7) — both partial buffers now collapse
-    // the twice-scored shared-list pairs
+    // any k is fast-path-eligible: TopKBuf collapses the twice-scored
+    // shared-list pairs on both sides of its heap threshold
     val batch = selfIndexBatch(vectors, maxSelfIndexRows,
       dimHint = centroids.value.head.length)
     if (batch != null) {

@@ -80,7 +80,7 @@ case class SearchParams(
     nprobe: Int = 8,
     metric: Option[Metric.Value] = None) {
   // fail at construction, not as an ArrayIndexOutOfBounds inside an
-  // executor task (TopKBuf/TopKHeap assume k >= 1)
+  // executor task (TopKBuf assumes k >= 1)
   require(k >= 1, s"Invalid topk value: $k")
   require(nprobe >= 1, s"Invalid nprobe value: $nprobe")
 }

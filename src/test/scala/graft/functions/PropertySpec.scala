@@ -105,31 +105,66 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  /** A top-k input: k on both sides of [[graft.index.PartialTopK.HeapThreshold]]
+    * and a stream shorter or longer than k, with distance ties between
+    * different ids, NaN, and exact (dist, id) duplicates placed both
+    * adjacent to and apart from their twin. The heap side detects
+    * duplicates by id (its documented contract: distance is a function of
+    * (qid, id) for every producer), so there each id has one distance. */
+  private val topKInputGen: Gen[(Int, Vector[(Double, Long)])] = for {
+    k <- Gen.oneOf(1, 3, 1024, 1025, 2000)
+    n <- Gen.oneOf(Gen.chooseNum(0, k), Gen.chooseNum(k + 1, 2 * k + 10))
+    // coarse distances force ties across ids and exercise the (dist, id) order
+    raw <- Gen.listOfN(n, for {
+      d <- Gen.chooseNum(0, 5)
+      id <- Gen.chooseNum(0L, 2L * n + 1)
+      nan <- Gen.chooseNum(0, 19)
+    } yield (if (nan == 0) Double.NaN else d.toDouble, id))
+    dups <- Gen.listOfN(n / 4 + 1, Gen.zip(Gen.chooseNum(0, math.max(0, n - 1)), Gen.oneOf(0, 1, 7)))
+  } yield {
+    val base =
+      if (k > graft.index.PartialTopK.HeapThreshold) raw.map { case (d, id) =>
+        (if (d.isNaN) d else (id * 31 % 6).toDouble, id)
+      }.toVector
+      else raw.toVector
+    // re-insert chosen entries right after themselves (offset 0), one
+    // later, or further on
+    (k, dups.foldLeft(base) { case (s, (at, off)) =>
+      if (s.isEmpty) s
+      else {
+        val i = at % s.size
+        val (a, b) = s.splitAt(math.min(s.size, i + 1 + off))
+        (a :+ s(i)) ++ b
+      }
+    })
+  }
+
+  /** The oracle: sort by (dist, id), distinct, take k; NaN never ranks. */
+  private def sortDistinctTake(k: Int, cands: Seq[(Double, Long)]) =
+    cands.filterNot(_._1.isNaN).distinct.sorted.take(k)
+
+  private def drained(b: graft.index.TopKBuf): Seq[(Double, Long)] = {
+    b.drain()
+    (0 until b.size).map(j => (b.dist(j), b.id(j)))
+  }
+
   test("TopKBuf: any insert order + any partition into merged buffers == sort-take-k") {
     import graft.index.TopKBuf
-    val candsGen: Gen[(Int, List[(Double, Long)], Long)] = for {
-      k <- Gen.chooseNum(1, 8)
-      n <- Gen.chooseNum(0, 60)
-      // coarse value/id ranges force duplicate distances and exercise the
-      // (dist, id) tie order
-      cands <- Gen.listOfN(n, for {
-        d <- Gen.chooseNum(0, 5).map(_.toDouble)
-        id <- Gen.chooseNum(0L, 20L)
-      } yield (d, id))
-      seed <- Gen.chooseNum(0L, 1000L)
-    } yield (k, cands, seed)
-    check(forAll(candsGen) { case (k, cands, seed) =>
-      val expected = cands.distinct.sorted.take(k) // total (dist, id) order
-      // NOTE: TopKBuf does not dedup identical (dist,id) pairs, so feed
-      // distinct candidates (the IVF candidate stream has unique ids)
+    check(Prop.forAllNoShrink(topKInputGen, Gen.chooseNum(0L, 1000L)) { case ((k, cands), seed) =>
+      val expected = sortDistinctTake(k, cands)
+      // generated order keeps each duplicate where it was placed
+      val inOrder = new TopKBuf(k)
+      val bounded = cands.forall { case (d, id) => inOrder.insert(d, id).size <= k }
       val rnd = new scala.util.Random(seed)
-      val shuffled = rnd.shuffle(cands.distinct)
-      val direct = shuffled.foldLeft(TopKBuf.empty(k))((b, c) => b.insert(c._1, c._2))
-      // arbitrary partition into sub-buffers, then pairwise merge
+      val shuffled = rnd.shuffle(cands)
+      val direct = shuffled.foldLeft(new TopKBuf(k))((b, c) => b.insert(c._1, c._2))
+      // arbitrary partition into sub-buffers, then pairwise merge: a
+      // duplicate split across two parts collapses in the merge
       val parts = shuffled.grouped(math.max(1, 1 + rnd.nextInt(7))).map(
-        _.foldLeft(TopKBuf.empty(k))((b, c) => b.insert(c._1, c._2)))
-      val merged = parts.foldLeft(TopKBuf.empty(k))((a, b) => a.merge(b))
-      direct.toSeq == expected && merged.toSeq == expected
+        _.foldLeft(new TopKBuf(k))((b, c) => b.insert(c._1, c._2)))
+      val merged = parts.foldLeft(new TopKBuf(k))((a, b) => a.merge(b))
+      bounded && drained(inOrder) == expected && drained(direct) == expected &&
+        drained(merged) == expected
     })
   }
 

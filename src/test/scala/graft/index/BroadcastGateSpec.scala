@@ -76,13 +76,18 @@ class BroadcastGateSpec extends SparkSpec {
 
   test("flat flood results are identical above and below the gate, and match static") {
     val qdf = queriesDF(floodQueries)
-    val params = SearchParams(k = 5, nprobe = 8) // nprobe = nlist -> exact, fully determined
-    val static = sortedKeys(flat.searchBatch(floodQueries.toArray, params))
-    withConf(gate = "1", auto = "-1") {
-      assert(sortedKeys(flat.search(qdf, params)) === static)
-    }
-    withConf(gate = (1L << 40).toString, auto = "-1") {
-      assert(sortedKeys(flat.search(qdf, params)) === static)
+    // k past the heap threshold (and past the 400-row corpus) sends the
+    // co-partition scorer down TopKBuf's heap side
+    for (k <- Seq(5, PartialTopK.HeapThreshold + 1)) {
+      val params = SearchParams(k = k, nprobe = 8) // nprobe = nlist -> exact, fully determined
+      val static = sortedKeys(flat.searchBatch(floodQueries.toArray, params))
+      withConf(gate = "1", auto = "-1") {
+        assert(sortedKeys(flat.search(qdf, params)) === static, s"k=$k")
+        assert(sortedKeys(Knn.exact(qdf, vectorsDF(corpus), k)) === static, s"k=$k")
+      }
+      withConf(gate = (1L << 40).toString, auto = "-1") {
+        assert(sortedKeys(flat.search(qdf, params)) === static, s"k=$k")
+      }
     }
   }
 

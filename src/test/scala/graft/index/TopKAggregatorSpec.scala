@@ -97,12 +97,13 @@ class TopKAggregatorSpec extends SparkSpec {
   }
 
   test("buffer never exceeds k during insert/merge") {
-    val buf = (1 to 100).foldLeft(TopKBuf.empty(3))((b, i) => b.insert(i.toDouble, i.toLong))
+    def dists(b: TopKBuf) = { b.drain(); (0 until b.size).map(b.dist) }
+    val buf = (1 to 100).foldLeft(new TopKBuf(3))((b, i) => b.insert(i.toDouble, i.toLong))
     assert(buf.size === 3)
-    assert(buf.toSeq.map(_._1) === Seq(1.0, 2.0, 3.0))
+    assert(dists(buf) === Seq(1.0, 2.0, 3.0))
     val merged = buf.merge(
-      (101 to 200).foldLeft(TopKBuf.empty(3))((b, i) => b.insert(-i.toDouble, i.toLong)))
+      (101 to 200).foldLeft(new TopKBuf(3))((b, i) => b.insert(-i.toDouble, i.toLong)))
     assert(merged.size === 3)
-    assert(merged.toSeq.map(_._1) === Seq(-200.0, -199.0, -198.0))
+    assert(dists(merged) === Seq(-200.0, -199.0, -198.0))
   }
 }

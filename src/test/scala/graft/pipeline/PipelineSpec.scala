@@ -175,7 +175,8 @@ class PipelineSpec extends SparkSpec {
 
   test("self-join broadcast fast path equals the salted equi-join path exactly") {
     // multi-probe (2 lists) with few centroids: many pairs share BOTH
-    // probed lists, exercising the exact-duplicate skip in TopKBuf; the
+    // probed lists, exercising the array side of TopKBuf's exact-duplicate
+    // skip; the
     // clustered layout also gives real distance ties a chance
     val rnd = new scala.util.Random(11)
     val rows = (0 until 150).map { i =>
@@ -196,8 +197,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("self-join fast path opens at heap-sized k and equals the blocked path (round 7)") {
-    // k above PartialTopK.HeapThreshold exercises TopKHeap's new exact-
-    // duplicate skip: with few centroids and 2-probe assignment, many
+    // k above PartialTopK.HeapThreshold exercises the heap side of
+    // TopKBuf's exact-duplicate skip: with few centroids and 2-probe assignment, many
     // pairs share BOTH probed lists and score twice bit-identically — at
     // k > candidate count, a missed dedup would KEEP the twin (nothing
     // falls off the buffer), so equality with the distinct()-based
