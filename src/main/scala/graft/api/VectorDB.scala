@@ -38,12 +38,12 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
   val instanceId: String =
     s"$dataPath#${VectorDB.instanceSeq.incrementAndGet()}"
 
-  private case class Served(
+  private[api] case class Served(
       manifest: Manifest,
       index: IvfFlatIndex,
       epochId: String)
 
-  private val served = TrieMap.empty[String, Served]
+  private[api] val served = TrieMap.empty[String, Served]
   private val epochManagers = TrieMap.empty[String, EpochManager]
 
   /** C1/LFU hotness: per-index probe counts and last access per list
@@ -268,7 +268,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
         IvfFlatIndex.writeListErrsTable(spark, errs, s"$path/pqerrs")
       }
 
-      val shardCounts = spark.read.parquet(s"$path/vectors")
+      val shardCounts = IvfFlatIndex.readEpoch(spark, s"$path/vectors")
         .groupBy("list_id").count().collect()
         .map(r => ShardInfo(r.getInt(0), s"$path/vectors/list_id=${r.getInt(0)}", r.getLong(1)))
         .sortBy(_.listId)
@@ -456,7 +456,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
           sqlRegistered.get(name).foreach { case (p, view, _, _) =>
             if (p == s"$path/vectors" &&
                 graft.plans.SqlAnn.viewBoundTo(spark, view, p)) {
-              spark.read.parquet(p).createOrReplaceTempView(view); ()
+              IvfFlatIndex.readEpoch(spark, p).createOrReplaceTempView(view); ()
             }
           }
         }
@@ -521,12 +521,16 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     // a DIFFERENT epoch remaps list ids (retrain) — stale hotness stats
     // would make warmupHot pin the wrong partitions. Same-epoch reloads
     // (addVectors append) keep their stats.
-    if (served.get(name).exists(_.epochId != epochId)) listStats.remove(name)
+    val prev = served.get(name)
+    if (prev.exists(_.epochId != epochId)) listStats.remove(name)
     val em = epochManager(name)
     val path = em.epochPath(epochId)
     val manifest = Manifest.load(s"$path/manifest.json")
-    val cents = readCentroids(s"$path/centroids")
-    val bc = IvfFlatIndex.broadcastCentroids(spark, cents)
+    // centroids never change within an epoch: a same-epoch reload keeps
+    // the served broadcast instead of re-reading `centroids/` and leaving
+    // one superseded executor copy per append for the ContextCleaner
+    val bc = prev.filter(_.epochId == epochId).map(_.index.centroids).getOrElse(
+      IvfFlatIndex.broadcastCentroids(spark, readCentroids(s"$path/centroids")))
     val vectors = IvfFlatIndex.readEpoch(spark, s"$path/vectors")
     val stats = listStats.getOrElseUpdate(name, TrieMap.empty)
     val listener: Array[(Long, Int)] => Unit = pairs => {
@@ -844,7 +848,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     // in it, under arbitrary foreign-writer interleaving. The listing's
     // byte size becomes the registration's freshness signature and the
     // same DataFrame backs the temp view below (one listing, not two).
-    val viewDf = spark.read.parquet(path)
+    val viewDf = IvfFlatIndex.readEpoch(spark, path)
     val regListingBytes = graft.plans.SqlAnn.relationListingBytes(viewDf)
     val boundsMeta: Option[(Array[Double], Array[Double])] =
       if (!pqRangeAccel) None
@@ -1433,7 +1437,8 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     // Compaction is a maintenance op; blocking serve-state mutations
     // (not searches) for its duration is the correct trade.
     stateLock(name).synchronized {
-      IvfFlatIndex.writeEpoch(spark.read.parquet(s"$src/vectors"), s"$dst/vectors", filesPerList)
+      IvfFlatIndex.writeEpoch(
+        IvfFlatIndex.readEpoch(spark, s"$src/vectors"), s"$dst/vectors", filesPerList)
       writeCentroids(readCentroids(s"$src/centroids"), s"$dst/centroids")
       // compaction preserves list membership exactly, so the source
       // epoch's covering radii stay valid — copy them rather than force
@@ -1458,7 +1463,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
         graft.index.IvfPqIndex.writeCodebooks(spark,
           graft.index.IvfPqIndex.readCodebooks(spark, s"$src/codebooks"),
           s"$dst/codebooks")
-      val shardCounts = spark.read.parquet(s"$dst/vectors")
+      val shardCounts = IvfFlatIndex.readEpoch(spark, s"$dst/vectors")
         .groupBy("list_id").count().collect()
         .map(r => ShardInfo(r.getInt(0), s"$dst/vectors/list_id=${r.getInt(0)}", r.getLong(1)))
         .sortBy(_.listId)

@@ -369,8 +369,8 @@ object IvfPqIndex {
         Metric.parseStrict(java.nio.file.Files.readString(metricPath).trim)
       else Metric.L2 // pre-metric epochs were L2-built
     new IvfPqIndex(spark,
-      spark.read.parquet(s"$epochPath/codes"),
-      spark.read.parquet(s"$epochPath/vectors"), // carries list_id -> pruned rerank
+      IvfFlatIndex.readEpoch(spark, s"$epochPath/codes"),
+      IvfFlatIndex.readEpoch(spark, s"$epochPath/vectors"), // carries list_id -> pruned rerank
       spark.sparkContext.broadcast(cents),
       spark.sparkContext.broadcast(books),
       metric)

@@ -795,9 +795,12 @@ object SqlAnn {
     * rewrite sees at plan time (an InMemoryFileIndex over the dir —
     * hidden files excluded, leaf files summed): creating a throwaway
     * relation makes the registration-side signature and the
-    * plan-side `location.sizeInBytes` consistent by construction. */
+    * plan-side `location.sizeInBytes` consistent by construction. The
+    * relation is opened the way the facade opens its epochs
+    * ([[graft.index.IvfFlatIndex.readEpoch]]: one listing rule, and no
+    * listing job after every append). */
   private[graft] def listingSize(spark: SparkSession, path: String): Long =
-    relationListingBytes(spark.read.parquet(path))
+    relationListingBytes(graft.index.IvfFlatIndex.readEpoch(spark, path))
 
   /** The listing byte size behind an already-created file-backed
     * DataFrame — i.e. the size of the SNAPSHOT the DataFrame will scan

@@ -15,6 +15,10 @@ object graftshims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The schema with every field nullable — what a file source read
+    * declares as its data schema (`DataSource.resolveRelation`). */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Drain the shared listener bus — lets tests assert deterministically on
     * SparkListener-observed state (job counts etc.). */
   def drainListenerBus(spark: SparkSession): Unit =

@@ -51,6 +51,70 @@ class VectorDBSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("epoch lifecycle schedules no per-list job; appends write from every task, keep the centroid broadcast") {
+    val nlist = 64
+    val ldb = new VectorDB(spark, Files.createTempDirectory("graft-lifecycle").toString)
+    ldb.createIndex(IndexConfig("lc", dimension = 8, nlist = nlist))
+    val epoch = ldb.buildEpoch("lc", vectorsDF(randomVectors(3000, 8, seed = 11)))
+    val em = new graft.storage.EpochManager(ldb.dataPath + "/lc/epochs")
+    // the widest stage each operation submits: a listing job over the
+    // list directories would run one task per list
+    val widest = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+        widest.accumulateAndGet(s.stageInfo.numTasks, math.max); ()
+      }
+    }
+    def widestStage(op: => Any): Int = {
+      org.apache.spark.sql.graftshims.drainListenerBus(spark)
+      widest.set(0)
+      op
+      org.apache.spark.sql.graftshims.drainListenerBus(spark)
+      widest.get()
+    }
+    def listFiles(epochId: String): Map[String, Set[String]] =
+      new java.io.File(s"${em.epochPath(epochId)}/vectors")
+        .listFiles().filter(_.getName.startsWith("list_id=")).map(d =>
+          d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
+        .toMap
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val activate = widestStage(ldb.activateEpoch("lc", epoch))
+      assert(activate < nlist, s"activateEpoch ran a $activate-task stage")
+      // centroids never change within an epoch: appends keep the broadcast
+      val centroidsBc = ldb.served("lc").index.centroids.id
+      for (round <- 0 until 2) {
+        val before = listFiles(epoch)
+        val base = 100000L + round * 1000L
+        val append = widestStage(ldb.addVectors("lc",
+          vectorsDF(randomVectors(400, 8, seed = 20 + round).map { case (i, v) => (base + i, v) })))
+        assert(append < nlist, s"addVectors ran a $append-task stage")
+        val added = listFiles(epoch).map { case (l, fs) =>
+          l -> (fs -- before.getOrElse(l, Set.empty)) }.filter(_._2.nonEmpty)
+        // exactly one new file in every list the batch touched
+        val touched = graft.index.IvfFlatIndex.readEpoch(spark, s"${em.epochPath(epoch)}/vectors")
+          .filter(s"id >= $base AND id < ${base + 400}")
+          .select("list_id").distinct().collect().map(r => s"list_id=${r.getInt(0)}").toSet
+        assert(added.keySet === touched)
+        assert(added.values.forall(_.size == 1), added)
+        // part-NNNNN is the writing task's partition: more than one writer
+        val writers = added.values.flatten.map(_.take("part-00000".length)).toSet
+        assert(writers.size > 1, s"append written by one task: $writers")
+        assert(ldb.served("lc").index.centroids.id === centroidsBc)
+      }
+      var compacted = ""
+      val compact = widestStage { compacted = ldb.compactEpoch("lc") }
+      assert(compact < nlist, s"compactEpoch ran a $compact-task stage")
+      assert(listFiles(compacted).values.forall(_.size == 1))
+      assert(ldb.served("lc").index.centroids.id !== centroidsBc)
+      assert(ldb.stats("lc")("num_vectors") === 3800L)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      ldb.close()
+    }
+  }
+
   test("epoch-backed search prunes the parquet scan (PartitionFilters on list_id)") {
     ready
     // nprobe=1 of nlist=4: the probed lists reach the on-disk epoch scan as

@@ -180,6 +180,47 @@ class IvfFlatIndexSpec extends SparkSpec {
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") || pruned.count() ==
       index.vectors.filter(col("list_id") === 3).count())
+
+    // the driver-side listing must open exactly what spark.read.parquet
+    // opens: over an appended epoch, and past the leftovers a finished,
+    // crashed or in-flight write leaves (_SUCCESS, .crc, _temporary/)
+    val root = new java.io.File(s"$tmp/vectors")
+    IvfFlatIndex.appendToEpoch(
+      index.vectors.filter(col("id") < 50).withColumn("id", col("id") + 5000L),
+      root.getPath)
+    val list1 = new java.io.File(root, "list_id=1")
+    val part = list1.listFiles().find(_.getName.endsWith(".parquet")).get
+    val stale = new java.io.File(root, "_temporary/0/list_id=1")
+    assert(stale.mkdirs())
+    java.nio.file.Files.copy(part.toPath, new java.io.File(stale, "part-x.parquet").toPath)
+    java.nio.file.Files.write(new java.io.File(root, "_SUCCESS").toPath, Array.emptyByteArray)
+    java.nio.file.Files.copy(part.toPath, new java.io.File(list1, ".part-x.parquet.crc").toPath)
+
+    val epoch = IvfFlatIndex.readEpoch(spark, root.getPath)
+    val old = spark.read.parquet(root.getPath)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "list_id", "vec").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))).sortBy(_._1).toSeq
+    assert(rows(epoch).length === 1050)
+    assert(rows(epoch) === rows(old))
+    assert(epoch.inputFiles.sorted.toSeq === old.inputFiles.sorted.toSeq)
+    assert(!epoch.inputFiles.exists(f => f.contains("_temporary") || f.endsWith(".crc")))
+    assert(epoch.schema("list_id").dataType === org.apache.spark.sql.types.IntegerType)
+    val relation = epoch.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.get.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+    assert(relation.partitionSchema.fieldNames.toSeq === Seq("list_id"))
+    val inFilter = epoch.filter(col("list_id").isin(1, 3))
+    val inPlan = inFilter.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*list_id".r.findFirstIn(inPlan).isDefined, inPlan)
+    assert(inFilter.count() === old.filter(col("list_id").isin(1, 3)).count())
+    // refresh() re-lists (through Spark, the pre-filled listing is dropped)
+    IvfFlatIndex.appendToEpoch(
+      index.vectors.filter(col("id") < 7).withColumn("id", col("id") + 6000L),
+      root.getPath)
+    assert(epoch.count() === 1050)
+    relation.location.refresh()
+    assert(epoch.count() === 1057)
   }
 
   test("null vectors never enter the top-k (nulls would win an ascending sort)") {
