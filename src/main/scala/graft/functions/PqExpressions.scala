@@ -462,7 +462,7 @@ case class PqAdcDistanceCol(
     * immutable pair: a racing reader sees a consistent (key, prepped)
     * snapshot or recomputes — never a torn pair.
     *
-    * ADAPTIVE INSTALL (measured, tools/AdcMemoBench): the broadcast-hash
+    * ADAPTIVE INSTALL (measured, dev/ROUND18.md): the broadcast-hash
     * candidate join streams the CODES side, so its output can interleave
     * the batch's queries per corpus row — a naive install-on-every-miss
     * memo pays a tuple allocation per pair on that pattern and measured

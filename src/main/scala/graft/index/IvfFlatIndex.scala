@@ -14,16 +14,20 @@ import graft.kmeans.Lloyd
 /**
  * IVF-Flat index on Spark (reference engine/ivf_flat_index.cpp). The
  * inverted lists are a Hive-partitioned Parquet table (`list_id=<n>/`),
- * the centroids a broadcast matrix, and a search is ONE declarative plan:
+ * the centroids a broadcast matrix, and a search is S2 -> S3 -> S5
+ * composed (ivf_flat_index.cpp:205-256) along one of three paths:
  *
- *   queries -> ProbeLists(bcast centroids) -> explode -> join(vectors,
- *   "list_id") [partition-pruned] -> distance -> per-query top-k
+ *  - **static** (a bounded batch): driver probe -> [[ListScanTopK]] over
+ *    the `list_id IN (...)` partition-pruned scan (the Spark equivalent of
+ *    "only load the probed lists") -> [[RankTopK]] merge + rank;
+ *  - **flood below the broadcast gate**: probed query rows ship through
+ *    the lazy broadcast exchange into [[BroadcastProbeTopK]] over the
+ *    unshuffled corpus scan -> [[RankTopK]];
+ *  - **flood above the gate**: [[CoGroupTopK]] co-partitions probed
+ *    queries and corpus on list_id.
  *
- * which is S2 -> S3 -> S5 composed (ivf_flat_index.cpp:205-256). The probe
- * pairs are broadcast, so the join triggers parquet partition pruning —
- * the Spark equivalent of "only load the probed lists" — and the top-k
- * runs as partial-per-partition + final WindowGroupLimit, the same
- * partial/merge shape as the reference's per-list top-k + merge.
+ * Every path keeps the reference's partial/merge shape: per-list top-k
+ * buffers, then one merge per query.
  *
  * @param vectors   (id LONG, vec ARRAY<FLOAT>, list_id INT) — usually a
  *                  partitionBy("list_id") epoch read
@@ -200,7 +204,7 @@ class IvfFlatIndex(
     // different qvecs probe DIFFERENT list sets, so any per-group
     // first-wins downstream still lets finalizePartial merge candidates
     // scored against two different vectors into one top-k. The static
-    // path dedups globally at the driver (ProbeIndex.apply); the flood
+    // path dedups globally at the driver (dropNullQueries); the flood
     // path must too — the extra query-side exchange is nprobe-times
     // smaller than the probe-replica shuffle that follows.
     val probed = IvfFlatIndex.onePerQid(queries).withColumn("list_id",
@@ -383,6 +387,11 @@ object IvfFlatIndex {
     * silently on that path either. */
   val droppedNullQueries = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The shared prelude of the static (bounded-batch) paths: drops null
+    * query vectors (counted + logged), then keeps the FIRST remaining row
+    * per qid. From here on the search batch is unique by qid, so the
+    * probe index, the PQ rerank map and the range query map all score
+    * the same single qvec — the driver-side twin of [[onePerQid]]. */
   private[index] def dropNullQueries(
       batch: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] = {
     val live = batch.filter(_._2 != null)
@@ -394,7 +403,14 @@ object IvfFlatIndex {
         s"[graft] dropped $dropped null query vector(s) from batch (qids: $qids" +
           (if (dropped > 8) ", ..." else "") + ")")
     }
-    live
+    firstPerQid(live)
+  }
+
+  /** First row per qid, batch order kept. */
+  private[index] def firstPerQid(
+      batch: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] = {
+    val seen = new java.util.HashSet[java.lang.Long](batch.length * 2)
+    batch.filter(q => seen.add(q._1))
   }
 
   /** Probe-strategy override for [[IvfFlatIndex.searchWhere]]: Auto picks
@@ -499,7 +515,7 @@ object IvfFlatIndex {
     (r.getLong(offset), Option(r.getSeq[Float](offset + 1)).map(_.toArray).orNull)
 
   /** One row per qid for the distributed flood paths — the global twin of
-    * ProbeIndex.apply's first-entry-wins. Which duplicate survives is
+    * the static paths' [[firstPerQid]]. Which duplicate survives is
     * Spark's pick (deterministic for a deterministic input plan); the
     * invariant every path must share is that exactly ONE qvec per qid is
     * ever scored. */

@@ -79,8 +79,9 @@ object Knn {
     IvfFlatIndex.snapshotQueries(qdf).batch match {
       case Some(batch) =>
         // null query vectors yield no rows either way (the join path's
-        // null distance is skipped inside the top-k) — drop them here
-        val live = batch.filter(_._2 != null)
+        // null distance is skipped inside the top-k) — drop them here;
+        // then one qvec per qid, the static paths' first-wins rule
+        val live = IvfFlatIndex.firstPerQid(batch.filter(_._2 != null))
         val bc = qdf.sparkSession.sparkContext.broadcast(
           ProbeIndex(live, live.map(q => (q._1, 0)), nlist = 1))
         val corpus = vectors.select(

@@ -202,9 +202,10 @@ object ProbeIndex {
       qids(i) = batch(i)._1
       qvecs(i) = batch(i)._2
       // first entry wins on a duplicated qid — matching the flood fold
-      // (BroadcastProbeTopK keeps the first qvec); last-wins here would
-      // make the static and flood paths silently disagree on which of
-      // the duplicates gets scored
+      // (BroadcastProbeTopK keeps the first qvec). The search paths hand
+      // in batches already unique by qid (IvfFlatIndex.firstPerQid); the
+      // self-join and near-dup fast paths pass corpora that may still
+      // repeat ids
       posOf.putIfAbsent(batch(i)._1, i)
       i += 1
     }

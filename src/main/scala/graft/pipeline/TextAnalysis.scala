@@ -70,7 +70,7 @@ object TextAnalysis {
     // blend stays unconditional (null text evaluates it to a harmless
     // 0.5) and null propagation through the sum nulls the result. Chosen
     // while chasing the r12 text_analysis bench delta on a CSE-in-branch
-    // hypothesis; tools/CodegenProbe measured all three guard shapes
+    // hypothesis; dev/ROUND13.md records all three guard shapes
     // (none / when()-wrap / this) at parity within noise — the projection
     // shares the tokenize via subexpression elimination either way (since
     // r20's codegen'd fingerprint un-blocked whole-stage codegen for the

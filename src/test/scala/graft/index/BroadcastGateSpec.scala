@@ -11,8 +11,9 @@ import graft.{SearchParams, SparkSpec}
  * exchange into [[BroadcastProbeTopK]] (the corpus scan stays
  * unshuffled); above it NOTHING is broadcast — the flood co-partitions
  * through [[CoGroupTopK]] instead of forcing an unbounded query set
- * through a driver-side broadcast. The PQ ADC stage always co-partitions
- * (the shuffled codes are m+8 B/row); its gate governs only the rerank
+ * through a driver-side broadcast. The PQ flood follows the same rule
+ * for its ADC stage (broadcast-probing the codes scan below the gate,
+ * co-partitioning it above), and the gate also governs its rerank
  * candidate join-back. Results are identical either way (plan-string
  * assert + hash equality).
  */
@@ -124,6 +125,25 @@ class BroadcastGateSpec extends SparkSpec {
           s"qid $q merged candidates from two different qvecs")
       }
     }
+    // the static (bounded-batch) paths: each qid repeated with its reversed
+    // vector must answer exactly as its first qvec alone — the probe index,
+    // the PQ rerank map and the range query map all see one qvec per qid
+    val first = floodQueries.take(200).toArray
+    val staticDupes = first ++ first.map { case (qid, v) => (qid, v.reverse) }
+    assert(sortedKeys(flat.searchBatch(staticDupes, params)) ===
+      sortedKeys(flat.searchBatch(first, params)), "static flat searchBatch")
+    for (rerank <- Seq(0, 20))
+      assert(sortedKeys(pqIndex.searchBatch(staticDupes, params, rerank)) ===
+        sortedKeys(pqIndex.searchBatch(first, params, rerank)),
+        s"static pq searchBatch rerankK=$rerank")
+    def rangeKeys(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(x => (x._1, x._2)).toSeq
+    val radius = 4.0
+    val rangeFirst = rangeKeys(flat.rangeSearch(queriesDF(first.toSeq), radius))
+    assert(rangeFirst.nonEmpty, "radius too small to exercise the range path")
+    assert(rangeKeys(flat.rangeSearch(queriesDF(staticDupes.toSeq), radius)) === rangeFirst,
+      "static rangeSearch")
   }
 
   test("pq flood broadcast-probes below the gate, co-partitions above it") {

@@ -117,7 +117,7 @@ class QualityFiltersSpec extends SparkSpec {
     import s.implicits._
     // pins the null-propagation contract independent of HOW the guard is
     // expressed (round 13 moved it from a when() wrapper to a guarded-zero
-    // addend — measured cost-neutral either way, tools/CodegenProbe — so
+    // addend — measured cost-neutral either way, dev/ROUND13.md — so
     // the shape must be free to change, the semantics must not)
     val d = Seq((0L, "the quick brown fox jumps over the lazy dog again"),
       (1L, null.asInstanceOf[String])).toDF("doc_id", "text")
