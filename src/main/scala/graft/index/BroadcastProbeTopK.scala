@@ -45,7 +45,7 @@ import graft.functions.PqKernels
  *  - plan construction stays lazy (no driver jobs) — the ForceJoin /
  *    streaming-serve contract; the exchange collects the probed side only
  *    at execution, exactly like the hint-based join did internally.
- * Callers gate entry by [[IvfFlatIndex.fitsBroadcastGate]]; above the gate
+ * Callers gate entry by [[Sizing.fitsBroadcastGate]]; above the gate
  * the flood goes through [[CoGroupTopK]] (co-partitioned, nothing
  * broadcast). Reference semantics unchanged: engine/kernels.cuh:84-185
  * per-list scan into per-thread insertion buffers; kernels.cuh:226-312

@@ -53,79 +53,6 @@ object CoGroupTopK {
 
   private val PartialEncoder = ExpressionEncoder[(Long, Long, Double)]()
 
-  /** Conf key for the flood co-partition salt (sub-buckets per list).
-    * k-means lists are skewed by nature; with salt S every list's CORPUS
-    * rows split S ways by id hash (each candidate lands in exactly one
-    * sub-bucket — lossless) and the list's probing queries replicate into
-    * all S, so one hot list becomes S tasks instead of one quadratic
-    * straggler. S multiplies only the shuffled QUERY rows (the small
-    * side); corpus data movement is unchanged.
-    *
-    * Unset (the default), the salt is DERIVED from the corpus size
-    * (r20, optimization-guide §2.2/§2.5: partitioning scale-adaptive,
-    * not a constant tuned for one scale): buckets target
-    * [[TargetBucketBytes]] of corpus payload each, so a bench-sized list
-    * (KBs) takes salt 1 — no query replication, no empty sub-bucket
-    * tasks — while a 100 TB list (GBs) splits into enough sub-buckets to
-    * keep every core busy, capped by the session's shuffle parallelism
-    * (more sub-buckets than partitions adds replication without adding
-    * parallelism). The r19 constant (8) was wrong at BOTH scales. Set
-    * the conf to pin a specific salt (tests, A/B runs). */
-  val SaltKey = "spark.graft.flood.salt"
-
-  /** Corpus bytes per sub-bucket the derived salt aims for. A bucket is
-    * one task's sequential scan unit; 4 MB keeps tasks in the hundreds of
-    * milliseconds even at one-query-per-list floods while staying far
-    * above the per-task scheduling constant. */
-  val TargetBucketBytes: Long = 4L << 20
-
-  private[index] def saltOf(
-      spark: org.apache.spark.sql.SparkSession,
-      corpus: DataFrame,
-      nlist: Int): Int =
-    spark.conf.getOption(SaltKey) match {
-      case Some(s) =>
-        val v = s.toInt
-        require(v >= 1, s"$SaltKey must be >= 1, got $v")
-        v
-      case None =>
-        // logical-plan stats: free at plan time (no job), scan-accurate
-        // for file sources; an unknown (huge) estimate degrades to the
-        // parallelism cap, never below 1
-        val bytes = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-        // an UNKNOWN list count (the Int.MaxValue sentinel of callers
-        // that skip nlist) must not divide the estimate to zero and
-        // silently disable skew protection (r20 advice): with no list
-        // information the pessimistic per-list estimate is the whole
-        // corpus — one list could hold everything
-        val perList =
-          if (nlist <= 0 || nlist == Int.MaxValue) bytes
-          else bytes / BigInt(nlist)
-        // 4x skew headroom (r20 advice): the mean bytes-per-list
-        // under-splits a hot k-means list several times the mean in the
-        // below-cap regime; above the cap the clamp saturates either way
-        val want = (perList * 4 + TargetBucketBytes - 1) / TargetBucketBytes
-        want.min(BigInt(numParts(spark))).max(BigInt(1)).toInt
-    }
-
-  private def numParts(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.sessionState.conf.numShufflePartitions
-
-  /** Partition count for the co-partition shuffle: bounded by the
-    * distinct salted-key space — nlist x salt groups spread over MANY
-    * more partitions than groups just schedules empty tasks (each paying
-    * the shuffle-writer's per-task file fan-out, the dominant fixed cost
-    * the r20 stage profiles attributed). The 2x factor compensates hash
-    * collisions (r20 advice): hashing g groups into exactly g partitions
-    * co-locates ~1/e of them, so realized parallelism lands well under
-    * one-group-per-partition; at 2g the expected busy-partition count is
-    * ~0.8 g for the cost of g mostly-empty buckets. At scale
-    * nlist x salt >> partitions and this is the session parallelism
-    * unchanged. */
-  private[index] def groupParts(spark: org.apache.spark.sql.SparkSession, nlist: Int, salt: Int): Int =
-    math.max(1, math.min(numParts(spark),
-      math.min(nlist.toLong * salt * 2, Int.MaxValue.toLong).toInt))
-
   /** (list_id, salt) composite grouping keys: corpus rows by id hash,
     * query rows replicated to every sub-bucket of their probed list. */
   private def saltedKey(listCol: String, salt: Int) =
@@ -143,21 +70,19 @@ object CoGroupTopK {
    * (dist, id) tie order, bit-identical to the static path (same
    * [[VectorKernels.distance]] kernel, same [[TopKBuf]] keep-set and order).
    *
+   * `salt` is the number of sub-buckets each list splits into
+   * ([[Sizing.salt]], or for the exact-kNN flood over one virtual list
+   * [[Sizing.floodParts]]); results are identical at any salt.
+   *
    * Queries sort FIRST within each group (tag 0: they are the buffered
    * side); corpus rows then stream, each payload decoding once and feeding
    * every probing query's buffer.
    */
-  def flatSearch(probed: DataFrame, corpus: DataFrame, k: Int, metricId: Int,
-      nlist: Int = Int.MaxValue, saltHint: Int = 0): DataFrame = {
+  private[index] def flatSearch(probed: DataFrame, corpus: DataFrame, k: Int,
+      metricId: Int, nlist: Int, salt: Int): DataFrame = {
     val spark = probed.sparkSession
     import spark.implicits._
-    // saltHint: a caller that knows the real work shape better than the
-    // corpus-bytes heuristic (e.g. the exact-kNN flood, whose work is the
-    // query x corpus byte PRODUCT over ONE virtual list) pins the
-    // sub-bucket count directly; the conf still wins for tests/A-B runs
-    val salt =
-      if (saltHint > 0 && spark.conf.getOption(SaltKey).isEmpty) saltHint
-      else saltOf(spark, corpus, nlist)
+    val groups = Sizing.groupParts(spark, nlist, salt)
     val q = probed
       // uniform null-drop semantics: a null qid would kill the task at
       // the primitive-tuple decode below, where the broadcast path
@@ -182,7 +107,7 @@ object CoGroupTopK {
         col("id").cast("long").as("id"),
         col("vec"))
     val partial = q.unionByName(c)
-      .repartition(groupParts(spark, nlist, salt), col("_skey"))
+      .repartition(groups, col("_skey"))
       .sortWithinPartitions("_skey", "_tag")
       .as[(Long, Int, Long, Array[Float])]
       .mapPartitions { rows =>
@@ -195,16 +120,8 @@ object CoGroupTopK {
           scoreFlatList(qs.iterator, group.map(r => (r._1, r._3, r._4)), k, metricId)
         }
       }(PartialEncoder)
-    // merge parallelism tracks the scoring fan-out at a 4:1 compaction
-    // ratio (r21): the partial stage already reduced each task's stream
-    // to <= qids x k rows, so fewer merge tasks than scorers cuts the
-    // maps x reducers shuffle-file matrix (guide §2.2) — but ONE merge
-    // task ranking a preK-sized flood serially (measured: 720k partial
-    // rows ~1.5 s single-task) is the other ditch. The mapPartitions
-    // plan's stats inherit the scan estimate, so finalizePartial's own
-    // derivation cannot see the partial compaction.
     TopKAggregator.finalizePartial(partial.toDF("_1", "_2", "_3"), k,
-      parts = math.max(1, groupParts(spark, nlist, salt) / 4))
+      Sizing.coGroupMergeParts(groups))
       .select("qid", "id", "dist", "rank")
   }
 
@@ -216,18 +133,19 @@ object CoGroupTopK {
    * table once per probed list (m x ks x dsub madds, noise next to scoring
    * the list) and scans the buffer through [[PqKernels.adcDistanceBytes]],
    * the byte-array twin of the static path's lookup-sum. Returns
-   * (qid, id, dist, rank) at `k`.
+   * (qid, id, dist, rank) at `k`. `salt` as in [[flatSearch]].
    */
-  def pqSearch(
+  private[index] def pqSearch(
       probed: DataFrame,
       codes: DataFrame,
       codebooks: Broadcast[Array[Array[Array[Float]]]],
       metricId: Int,
       k: Int,
-      nlist: Int = Int.MaxValue): DataFrame = {
+      nlist: Int,
+      salt: Int): DataFrame = {
     val spark = probed.sparkSession
     import spark.implicits._
-    val salt = saltOf(spark, codes, nlist)
+    val groups = Sizing.groupParts(spark, nlist, salt)
     // codes are ARRAY<TINYINT> in the plan (the PQ encoder's type); the
     // Array[Byte] encoder would demand BINARY, so decode as Seq and copy
     // to a primitive array once per row at buffer time (off the hot loop)
@@ -251,7 +169,7 @@ object CoGroupTopK {
         col("codes"))
     val books = codebooks
     val partial = q.unionByName(c)
-      .repartition(groupParts(spark, nlist, salt), col("_skey"))
+      .repartition(groups, col("_skey"))
       .sortWithinPartitions("_skey", "_tag")
       .as[(Long, Int, Long, Array[Float], scala.collection.Seq[Byte])]
       .mapPartitions { rows =>
@@ -265,27 +183,10 @@ object CoGroupTopK {
             books.value)
         }
       }(PartialEncoder)
-    // merge parallelism tracks the scoring fan-out at a 4:1 compaction
-    // ratio (r21): the partial stage already reduced each task's stream
-    // to <= qids x k rows, so fewer merge tasks than scorers cuts the
-    // maps x reducers shuffle-file matrix (guide §2.2) — but ONE merge
-    // task ranking a preK-sized flood serially (measured: 720k partial
-    // rows ~1.5 s single-task) is the other ditch. The mapPartitions
-    // plan's stats inherit the scan estimate, so finalizePartial's own
-    // derivation cannot see the partial compaction.
     TopKAggregator.finalizePartial(partial.toDF("_1", "_2", "_3"), k,
-      parts = math.max(1, groupParts(spark, nlist, salt) / 4))
+      Sizing.coGroupMergeParts(groups))
       .select("qid", "id", "dist", "rank")
   }
-
-  // The distributed exact rerank that lived here through r19 (queries
-  // cogrouped with fat (qid, id, vec) candidate rows on qid) was replaced
-  // in r20 by a join + codegen'd-distance + TopKAggregator shape at its
-  // only call site (IvfPqIndex.searchJoin): the cogroup repartitioned AND
-  // sorted ~260 B/candidate payload rows and decoded them through a typed
-  // encoder, which the r20 stage profile measured at 3x the join+kernel
-  // cost — and below the broadcast gate the join shape moves no candidate
-  // payload at all.
 
   /** Walk a partition's `(key-sorted)` row stream as one lazy iterator per
     * key run. `score` receives a BufferedIterator scoped to the current

@@ -173,7 +173,9 @@ class IvfFlatIndex(
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
     val partial = ListScanTopK(pruned,
       new FlatListScorer(probeIdx, m.id), k)
-    val result = TopKAggregator.finalizePartial(partial, k)
+    // a list-scan partial keeps its corpus side's estimate (Sizing)
+    val parts = Sizing.mergeParts(spark, Sizing.bytes(corpus))
+    val result = TopKAggregator.finalizePartial(partial, k, parts)
       .select("qid", "id", "dist", "rank")
     // stats record when the plan RUNS, not here at construction — an
     // abandoned DataFrame must leave hot-list stats untouched
@@ -207,15 +209,17 @@ class IvfFlatIndex(
     // path dedups globally at the driver (dropNullQueries); the flood
     // path must too — the extra query-side exchange is nprobe-times
     // smaller than the probe-replica shuffle that follows.
-    val probed = IvfFlatIndex.onePerQid(queries).withColumn("list_id",
-      explode(vector.probe_lists(col("qvec"), centroids, nprobe, m)))
-      .select("qid", "qvec", "list_id")
-    if (IvfFlatIndex.fitsBroadcastGate(queries, nprobe)) {
+    val probed = IvfFlatIndex.probeRows(IvfFlatIndex.onePerQid(queries), centroids, nprobe, m)
+    val qB = Sizing.bytes(queries)
+    val cB = Sizing.bytes(corpus)
+    if (Sizing.fitsBroadcastGate(spark, qB, nprobe)) {
       val partial = BroadcastProbeTopK.flat(probed,
         IvfFlatIndex.widenScan(
-          corpus.select(col("id"), col("list_id"), col("vec")), "list_id"), k, m.id)
-      TopKAggregator.finalizePartial(partial, k).select("qid", "id", "dist", "rank")
-    } else CoGroupTopK.flatSearch(probed, corpus, k, m.id, nlist = nlist)
+          corpus.select(col("id"), col("list_id"), col("vec")), cB, sortCols = Seq("list_id")),
+        k, m.id)
+      TopKAggregator.finalizePartial(partial, k, Sizing.mergeParts(spark, qB * cB))
+        .select("qid", "id", "dist", "rank")
+    } else CoGroupTopK.flatSearch(probed, corpus, k, m.id, nlist, Sizing.salt(spark, cB, nlist))
   }
 
   /** Exact brute-force scan (S1) — also the recall oracle for IVF. */
@@ -427,23 +431,6 @@ object IvfFlatIndex {
     * worst case is ~8 MB of driver metadata). */
   val MaxStaticBatch = 1024
 
-  /** Conf key bounding the join-path broadcast hint, in bytes of estimated
-    * probed-side size (query-plan stats x nprobe). Above the gate the
-    * probed side goes through a plain equi-join instead of an explicit
-    * broadcast (which would bypass autoBroadcastJoinThreshold entirely). */
-  val BroadcastGateKey = "spark.graft.broadcast.gateBytes"
-
-  /** Default gate: 256 MB — far below Spark's 8 GB broadcast hard limit
-    * and any sane driver heap, far above every coalesced serving batch
-    * (a 10k x 768D probed side at nprobe 8 is ~250 MB). */
-  val DefaultBroadcastGateBytes: Long = 256L << 20
-
-  /** Cap for [[widenScan]]: only a corpus this small (plan-stats bytes)
-    * may be round-robin widened — the point is rescuing a compute-starved
-    * scan of a SMALL input, never adding a shuffle to a corpus that
-    * already fans out. */
-  val MaxWidenBytes: Long = 256L << 20
-
   /**
    * Widen a small corpus scan whose partition count would starve the
    * flood scorers: file sources split by BYTES, but flood scoring is
@@ -453,39 +440,25 @@ object IvfFlatIndex {
    * while one task builds every ADC table. Measured on the sf0.1 bench:
    * the PQ flood's ADC scan ran ~1.0 s on ONE task that ~30 ms/task wide.
    *
-   * No-op unless plan stats prove the input small AND its planned
-   * partition count undercuts the session's parallelism. The explicit
-   * partition count keeps AQE's byte-based coalescing from re-folding the
-   * shuffle, and the cheap local sort restores per-list locality for
-   * scorers that amortize per-list state (PQ ADC tables).
+   * No-op unless `bytes` (the caller's [[Sizing.bytes]] read of the
+   * input) proves the input small AND its planned partition count
+   * undercuts the target ([[Sizing.widenParts]]; reading that count still
+   * plans `df` once). The explicit partition count keeps AQE's byte-based
+   * coalescing from re-folding the shuffle, and the cheap local sort
+   * restores per-list locality for scorers that amortize per-list state
+   * (PQ ADC tables).
    *
    * `bytesPerTask` (r20) scales the widening to the caller's WORK
-   * DENSITY instead of a flat fan-out to full parallelism: the flood
-   * scorers' work per byte is query-count-proportional (a 32 KB codes
-   * scan measured ~1.0 s on one task — widen maximally, the default 0),
-   * while a per-row text projection is ~1000x lighter per byte — for
-   * those callers a positive target derives the partition count as
-   * ceil(bytes / target) clamped to [1, parallelism], so a KB-to-MB
-   * input stops paying (parallelism x per-task fixed cost) in scheduling
-   * and shuffle-writer file fan-out for microseconds of work
-   * (optimization guide §2: derive partitioning from input size). At
-   * production sizes ceil(bytes/target) saturates the clamp and the
-   * behavior matches the flat widen.
+   * DENSITY: flood scorers widen maximally (the default 0), while a
+   * per-row text projection, ~1000x lighter per byte, asks for
+   * ceil(bytes / bytesPerTask) tasks (guide §2: derive partitioning from
+   * input size).
    */
-  private[graft] def widenScan(df: DataFrame, sortCols: String*): DataFrame =
-    widenScanSized(df, 0L, sortCols: _*)
-
-  private[graft] def widenScanSized(
-      df: DataFrame, bytesPerTask: Long, sortCols: String*): DataFrame = {
-    val spark = df.sparkSession
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes > BigInt(MaxWidenBytes)) return df
-    val maxP = spark.sparkContext.defaultParallelism
-    val p =
-      if (bytesPerTask <= 0) maxP
-      else ((bytes + bytesPerTask - 1) / bytesPerTask)
-        .min(BigInt(maxP)).max(BigInt(1)).toInt
-    if (df.rdd.getNumPartitions >= p) df
+  private[graft] def widenScan(
+      df: DataFrame, bytes: BigInt, bytesPerTask: Long = 0L,
+      sortCols: Seq[String] = Nil): DataFrame = {
+    val p = Sizing.widenParts(df.sparkSession, bytes, bytesPerTask)
+    if (p == 0 || df.rdd.getNumPartitions >= p) df
     else {
       val wide = df.repartition(p)
       if (sortCols.isEmpty) wide
@@ -493,20 +466,13 @@ object IvfFlatIndex {
     }
   }
 
-  /**
-   * Should the join path's probed side carry a broadcast hint? Decided
-   * from Catalyst's plan-stats estimate (driver-only, no job): the query
-   * plan's sizeInBytes x nprobe approximates the exploded probe rows.
-   * Unknown-size sources (foreachBatch LogicalRDDs, streams) estimate to
-   * defaultSizeInBytes = huge -> no hint, which is exactly the safe
-   * default for a flood; AQE can still re-promote to broadcast at runtime
-   * once the true size is known — and unlike the hint, AQE validates it.
-   */
-  def fitsBroadcastGate(queries: DataFrame, nprobe: Int): Boolean = {
-    val gate = queries.sparkSession.conf
-      .get(BroadcastGateKey, DefaultBroadcastGateBytes.toString).toLong
-    queries.queryExecution.optimizedPlan.stats.sizeInBytes * nprobe <= BigInt(gate)
-  }
+  /** One row per (query, probed list): the flood paths' probe explosion
+    * over one-row-per-qid queries. */
+  private[index] def probeRows(
+      uniq: DataFrame, centroids: Broadcast[Array[Array[Float]]],
+      nprobe: Int, m: Metric.Value): DataFrame =
+    uniq.withColumn("list_id", explode(vector.probe_lists(col("qvec"), centroids, nprobe, m)))
+      .select("qid", "qvec", "list_id")
 
   /** (qid, qvec) row decode shared by every snapshot site; a missing qvec
     * stays null so callers choose their own error contract. `offset`

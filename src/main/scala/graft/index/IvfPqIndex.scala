@@ -109,7 +109,8 @@ class IvfPqIndex(
       .select(col("id").cast("long"), col("list_id").cast("int"), col("codes"))
     val preK = if (rerankK > 0) math.max(rerankK, params.k) else params.k
     val partial = ListScanTopK(prunedCodes, new PqListScorer(bcT), preK)
-    val adcTop = TopKAggregator.finalizePartial(partial, preK)
+    val adcTop = TopKAggregator.finalizePartial(partial, preK,
+      Sizing.mergeParts(spark, Sizing.bytes(codes)))
       .select("qid", "id", "dist", "rank")
     if (rerankK <= 0) (adcTop, () => bcT.destroy())
     else {
@@ -133,13 +134,11 @@ class IvfPqIndex(
         .join(rerankSource, "id")
         .withColumn("dist", vector.distance_to_query(col("vec"), col("qid"), bcQ, m))
         .select("qid", "id", "dist")
-      // merge bound from the EXACT batch row count (r21): the join's plan
-      // stats would otherwise size the merge at the session fan-out for a
+      // merge bound from the EXACT batch row count (r21): the join's
+      // estimate would size the merge at the session fan-out for a
       // serving batch whose merge stream is <= batch x k 24 B rows
-      val mergeParts = math.max(1, math.min(
-        spark.sessionState.conf.numShufflePartitions,
-        (live.length.toLong * params.k * 24 / TopKAggregator.MergeTargetBytes + 1).toInt))
-      (TopKAggregator.topKPerQuery(exact, params.k, mergeParts = mergeParts)
+      (TopKAggregator.topKPerQuery(exact, params.k,
+        Sizing.batchMergeParts(spark, live.length, params.k))
         .select("qid", "id", "dist", "rank"),
         () => { bcT.destroy(); bcQ.destroy() })
     }
@@ -194,29 +193,32 @@ class IvfPqIndex(
     // IvfFlatIndex.searchJoinPruned (duplicated qids probe different
     // list sets; dedup after the fact cannot prevent cross-qvec mixing)
     val uniq = IvfFlatIndex.onePerQid(queries)
-    val probed = uniq
-      .withColumn("list_id",
-        explode(vector.probe_lists(col("qvec"), centroids, nprobe, probeMetric)))
-      .select("qid", "qvec", "list_id")
+    val probed = IvfFlatIndex.probeRows(uniq, centroids, nprobe, probeMetric)
     val preK = if (rerankK > 0) math.max(rerankK, params.k) else params.k
+    // the deduped query frame keeps its input's estimate (Sizing), so
+    // every query-side decision below prices the input once
+    val qB = Sizing.bytes(queries)
+    val codesB = Sizing.bytes(codes)
     val adcTop =
-      if (IvfFlatIndex.fitsBroadcastGate(queries, nprobe))
+      if (Sizing.fitsBroadcastGate(spark, qB, nprobe))
         TopKAggregator.finalizePartial(
-          BroadcastProbeTopK.pq(probed, IvfFlatIndex.widenScan(codes, "list_id"),
-            preK, codebooks, probeMetric.id), preK)
+          BroadcastProbeTopK.pq(probed,
+            IvfFlatIndex.widenScan(codes, codesB, sortCols = Seq("list_id")),
+            preK, codebooks, probeMetric.id), preK,
+          Sizing.mergeParts(spark, qB * codesB))
           .select("qid", "id", "dist", "rank")
       else CoGroupTopK.pqSearch(probed, codes, codebooks, probeMetric.id, preK,
-        nlist = nlist)
+        nlist, Sizing.salt(spark, codesB, nlist))
     if (rerankK <= 0) adcTop
     else {
       val m = params.metric.getOrElse(metric)
       // id-only candidate stream (<= queries x preK 16-byte rows) joins
-      // back to the raw payloads; the gate estimate (query-plan stats x
-      // preK) safely overestimates it, since stats price the qvec column
-      // the stream no longer carries
+      // back to the raw payloads; the gate estimate (query bytes x preK)
+      // safely overestimates it, since the query bytes price the qvec
+      // column the stream no longer carries
       val candIds = adcTop.select("qid", "id")
       val hinted =
-        if (IvfFlatIndex.fitsBroadcastGate(queries, preK)) broadcast(candIds)
+        if (Sizing.fitsBroadcastGate(spark, qB, preK)) broadcast(candIds)
         else {
           // above the gate, pin the join-back's parallelism to the
           // CANDIDATE OUTPUT volume (r21, guide §2.5): the skinny candIds
@@ -228,15 +230,12 @@ class IvfPqIndex(
           // as qBytes x preK (query rows and raw rows share the vector
           // width) and spread accordingly; REPARTITION_BY_NUM is exempt
           // from coalescing and the raw side aligns to it.
-          val cap = spark.sessionState.conf.numShufflePartitions
-          val qB = uniq.queryExecution.optimizedPlan.stats.sizeInBytes
-          val candParts = ((qB * preK + TopKAggregator.MergeTargetBytes - 1) /
-            TopKAggregator.MergeTargetBytes).min(BigInt(cap)).max(BigInt(1)).toInt
-          candIds.repartition(candParts, col("id"))
+          candIds.repartition(Sizing.mergeParts(spark, qB * preK), col("id"))
         }
       // widen a small raw scan for the same reason as the ADC stage: the
       // join fans the candidate stream out over the RAW side's partitions
-      val cands = IvfFlatIndex.widenScan(rawVectors.select("id", "vec")).join(hinted, "id")
+      val cands = IvfFlatIndex.widenScan(rawVectors.select("id", "vec"), Sizing.bytes(rawVectors))
+        .join(hinted, "id")
       // the SAME deduped query rows: joining the raw duplicates back in
       // would re-introduce the second qvec at the rerank stage. Below the
       // gate the query side broadcasts (no shuffle of the candidate
@@ -247,18 +246,16 @@ class IvfPqIndex(
       // null/NaN internally; qids absent from either side drop at the
       // inner join exactly as the cogroup emitted nothing for them.
       val qSide = uniq.select(col("qid"), col("qvec"))
-      val qHinted =
-        if (IvfFlatIndex.fitsBroadcastGate(qSide, 1)) broadcast(qSide)
-        else qSide.hint("SHUFFLE_HASH")
+      val qBroadcast = Sizing.fitsBroadcastGate(spark, qB, 1)
+      val qHinted = if (qBroadcast) broadcast(qSide) else qSide.hint("SHUFFLE_HASH")
       val exact = cands.join(qHinted, "qid")
         .select(col("qid"), col("id"),
           vector.distance(col("qvec"), col("vec"), m).as("dist"))
-      // query-side merge bound (r21): the joined plan's stats are a join
-      // product, so finalizePartial's own derivation would plan the full
-      // session fan-out for a KB merge
-      val mergeParts = TopKAggregator.mergePartsFor(uniq, params.k)
-      val ranked = TopKAggregator.topKPerQuery(exact, params.k,
-        mergeParts = mergeParts)
+      // query-side merge bound (r21): the joined stream's estimate is a
+      // join product, which would plan the full session fan-out for a KB
+      // merge
+      val mergeParts = Sizing.queryMergeParts(spark, qB, params.k)
+      val ranked = TopKAggregator.topKPerQuery(exact, params.k, mergeParts)
         .select("qid", "id", "dist", "rank")
       // materialization barrier (r21, guide §2.4): when the shuffled-hash
       // rerank join leaves the stream hash-clustered on qid, the merge's
@@ -268,8 +265,11 @@ class IvfPqIndex(
       // its child (measured: the 180 MB-read rerank stage ran twice per
       // action). A round-robin exchange of the <= nq x k result rows is
       // never elided and never satisfies a downstream requirement, so
-      // everything above it materializes exactly once.
-      ranked.repartition(mergeParts)
+      // everything above it materializes exactly once. Below the gate the
+      // query side broadcasts, the stream is not clustered on qid, the
+      // merge exchange stays in the plan, and the barrier would only be
+      // one more shuffle.
+      if (qBroadcast) ranked else ranked.repartition(mergeParts)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,28 +20,6 @@ import graft.functions.vector
  * and the kernel evaluates once.
  */
 object Knn {
-
-  /** Scoring-work target per flood task, in PAIR-BYTES (query-side bytes x
-    * corpus-side bytes, both from free plan-time stats): brute force
-    * evaluates one distance kernel per (query, corpus) pair, so work per
-    * task ∝ the byte product. 4e11 pair-bytes ≈ 1.5M 128-D float pairs
-    * ≈ ~100 ms of kernel time — tasks in the hundreds of milliseconds,
-    * far above the per-task scheduling + shuffle-writer fixed cost the
-    * r20 stage profiles attributed (guide §2.5), without the flat
-    * full-parallelism fan-out that made 8 cores beat 32 on KB floods. */
-  private[index] val TargetPairBytes: BigInt = BigInt(400L) * 1000000000L
-
-  /** Plan-stats-derived partition count for the unbounded flood's scoring
-    * stage: ceil(qBytes x cBytes / TargetPairBytes) clamped to
-    * [1, spark.sql.shuffle.partitions]. Unknown stats estimate huge and
-    * saturate the cap — the safe default for a genuine flood. */
-  private[index] def floodParts(queries: DataFrame, corpus: DataFrame): Int = {
-    val n = queries.sparkSession.sessionState.conf.numShufflePartitions
-    val qB = queries.queryExecution.optimizedPlan.stats.sizeInBytes
-    val cB = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-    val want = (qB * cB + TargetPairBytes - 1) / TargetPairBytes
-    want.min(BigInt(n)).max(BigInt(1)).toInt
-  }
 
   /**
    * @param queries  (qid: LONG, qvec: ARRAY<FLOAT>) — small batch, broadcast
@@ -76,18 +54,21 @@ object Knn {
       k: Int,
       metric: Metric.Value = Metric.L2): (DataFrame, () => Unit) = {
     val qdf = queries.select(col("qid"), col("qvec"))
+    val spark = qdf.sparkSession
+    // the whole corpus as ONE virtual list
+    val corpus = vectors.select(
+      col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec"))
     IvfFlatIndex.snapshotQueries(qdf).batch match {
       case Some(batch) =>
         // null query vectors yield no rows either way (the join path's
         // null distance is skipped inside the top-k) — drop them here;
         // then one qvec per qid, the static paths' first-wins rule
         val live = IvfFlatIndex.firstPerQid(batch.filter(_._2 != null))
-        val bc = qdf.sparkSession.sparkContext.broadcast(
+        val bc = spark.sparkContext.broadcast(
           ProbeIndex(live, live.map(q => (q._1, 0)), nlist = 1))
-        val corpus = vectors.select(
-          col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec"))
+        val parts = Sizing.mergeParts(spark, Sizing.bytes(vectors))
         (TopKAggregator.finalizePartial(
-          ListScanTopK(corpus, new FlatListScorer(bc, metric.id), k), k)
+          ListScanTopK(corpus, new FlatListScorer(bc, metric.id), k), k, parts)
           .select("qid", "id", "dist", "rank"),
           () => bc.destroy())
       case None =>
@@ -99,19 +80,20 @@ object Knn {
         // because the batch is large, so an unconditional hint would
         // bypass autoBroadcastJoinThreshold for an arbitrarily big set
         // (round-7 fix): the plain cross join lets AQE plan the flood.
-        if (IvfFlatIndex.fitsBroadcastGate(qdf, 1)) {
+        val qB = Sizing.bytes(qdf)
+        val cB = Sizing.bytes(vectors)
+        if (Sizing.fitsBroadcastGate(spark, qB, 1)) {
           val probed = qdf.withColumn("list_id", lit(0))
-          val corpus = IvfFlatIndex.widenScan(vectors.select(
-            col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec")))
-          (TopKAggregator.finalizePartial(
-            BroadcastProbeTopK.flat(probed, corpus, k, metric.id), k)
+          (TopKAggregator.finalizePartial(BroadcastProbeTopK.flat(
+            probed, IvfFlatIndex.widenScan(corpus, cB), k, metric.id), k,
+            Sizing.mergeParts(spark, qB * cB))
             .select("qid", "id", "dist", "rank"), () => ())
         } else {
           // r21: the above-gate flood scores through CoGroupTopK's
           // deopt-immune co-partition loops over ONE virtual list with
-          // the salt pinned to the plan-stats-derived scoring
-          // parallelism. This replaces the r20 cross-join + per-pair
-          // codegen shape, which was wrong twice over:
+          // the salt pinned to the byte-derived scoring parallelism.
+          // This replaces the r20 cross-join + per-pair codegen shape,
+          // which was wrong twice over:
           //  - its repartition(n, qid) pre-satisfied finalizePartial's
           //    exchange; the optimizer elided it and the WHOLE quadratic
           //    scoring pipeline landed on the map side of a consumer's
@@ -123,20 +105,15 @@ object Knn {
           //    code candidate row (measured ~1.9 us/pair vs ~0.1 us for
           //    the same kernel inside the scalac scan loop — the exact
           //    overhead ListScanTopK removed from the static path).
-          // The salt (corpus sub-buckets = scoring tasks) comes from the
-          // query x corpus byte product, not a flat constant (r20
-          // verdict #2, guide §2.5): a KB flood takes few tasks — no
-          // shuffle-writer file-matrix tax for microseconds of work —
-          // while any production-sized flood saturates the session cap.
+          // The salt (corpus sub-buckets = scoring tasks) is
+          // Sizing.floodParts of the query x corpus byte product.
           // One row per qid BEFORE scoring: two duplicate rows would
           // both replicate into the salt buckets, and per-bucket
           // first-wins could score DIFFERENT qvecs of one qid in
           // different buckets — same invariant as every other path.
           val probed = IvfFlatIndex.onePerQid(qdf).withColumn("list_id", lit(0))
-          val corpus = vectors.select(
-            col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec"))
           (CoGroupTopK.flatSearch(probed, corpus, k, metric.id,
-            nlist = 1, saltHint = floodParts(qdf, vectors))
+            nlist = 1, salt = Sizing.floodParts(spark, qB, cB))
             .select("qid", "id", "dist", "rank"),
             () => ())
         }
@@ -171,7 +148,9 @@ object Knn {
     // broadcast only under the size gate (same contract as exact():
     // an unconditional hint would bypass autoBroadcastJoinThreshold
     // for an arbitrarily large query set)
-    val q = if (IvfFlatIndex.fitsBroadcastGate(qdf, 1)) broadcast(qdf) else qdf
+    val q =
+      if (Sizing.fitsBroadcastGate(qdf.sparkSession, Sizing.bytes(qdf), 1)) broadcast(qdf)
+      else qdf
     vectors.select(col("id"), col("vec"))
       .crossJoin(q)
       .withColumn("dist", vector.distance(col("qvec"), col("vec"), metric))

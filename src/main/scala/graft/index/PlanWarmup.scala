@@ -115,14 +115,10 @@ object PlanWarmup {
     val params = SearchParams(k = 5, nprobe = 16)
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
       df.queryExecution.toRdd.foreach(_ => ())
-    val conf = spark.conf
-    val oldGate = conf.getOption(IvfFlatIndex.BroadcastGateKey)
-    try {
-      // above-gate flood: salted co-partition ADC + plain rerank join
-      conf.set(IvfFlatIndex.BroadcastGateKey, "1")
+    // above-gate flood: salted co-partition ADC + plain rerank join
+    Sizing.withGate(spark, "1") {
       consume(idx.search(queries, params, rerankK = 600).orderBy("qid", "rank"))
-    } finally oldGate.fold(conf.unset(IvfFlatIndex.BroadcastGateKey))(
-      conf.set(IvfFlatIndex.BroadcastGateKey, _))
+    }
     // below-gate flood: broadcast-probe ADC + broadcast rerank
     consume(idx.search(queries, params, rerankK = 600).orderBy("qid", "rank"))
     // static serving batch: driver probe + ListScanTopK codes scan
@@ -135,13 +131,10 @@ object PlanWarmup {
     // and salted flat entries share these stages
     val flat = new IvfFlatIndex(spark,
       IvfFlatIndex.assign(vecs, idx.centroids), idx.centroids, Metric.L2)
-    val oldGate2 = conf.getOption(IvfFlatIndex.BroadcastGateKey)
-    try {
-      conf.set(IvfFlatIndex.BroadcastGateKey, "1")
+    Sizing.withGate(spark, "1") {
       consume(flat.searchWhere(queries, params, None, IvfFlatIndex.ForceJoin)
         .orderBy("qid", "rank"))
-    } finally oldGate2.fold(conf.unset(IvfFlatIndex.BroadcastGateKey))(
-      conf.set(IvfFlatIndex.BroadcastGateKey, _))
+    }
   }
 
   private val warmedSql =

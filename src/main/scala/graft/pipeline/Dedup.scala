@@ -268,9 +268,9 @@ object Dedup {
     // inherit the LEFT scan's partitioning — a small corpus in one parquet
     // file would run the whole CPU-bound verify on one core. widenScan
     // spreads an under-partitioned small input to defaultParallelism
-    // (size-gated via plan stats; at 100 TB the scan is already wider
-    // than the cluster and this is a no-op).
-    val wide = graft.index.IvfFlatIndex.widenScan(docs)
+    // (size-gated on the input's bytes; at 100 TB the scan is already
+    // wider than the cluster and this is a no-op).
+    val wide = graft.index.IvfFlatIndex.widenScan(docs, graft.index.Sizing.bytes(docs))
     val a = wide.select(
       col(langCol),
       col(idCol).as("a_id"), col(textCol).as("a_text"),
@@ -790,8 +790,8 @@ object Dedup {
     // the ContextCleaner when the returned plan is unreachable (see the
     // knnSelfJoin scaladoc for the serving-loop alternative).
     val spark = vectors.sparkSession
-    val batch = Similarity.selfIndexBatch(vectors, maxSelfIndexRows,
-      dimHint = centroids.value.head.length)
+    val batch = Similarity.selfIndexBatch(vectors, graft.index.Sizing.bytes(vectors),
+      maxSelfIndexRows, dimHint = centroids.value.head.length)
     if (batch != null) {
       val pairs = graft.index.IvfFlatIndex.localProbe(
         batch, centroids.value, assignProbes, Metric.L2)

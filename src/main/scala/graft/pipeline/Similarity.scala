@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{Metric, SearchParams}
 import graft.functions.vector
 import graft.index.{FlatListScorer, IvfFlatIndex, Knn, ListScanTopK,
-  ProbeIndex, TopKAggregator}
+  ProbeIndex, Sizing, TopKAggregator}
 
 /**
  * Similarity-search operators over an embedding column:
@@ -47,16 +47,20 @@ object Similarity {
       vectors: DataFrame, // (id, vec, label)
       k: Int,
       metric: Metric.Value = Metric.L2): DataFrame = {
+    val spark = queries.sparkSession
+    val qB = Sizing.bytes(queries)
     val qdf = queries.select(col("qid"), col("qvec"), col("q_label"))
     // broadcast only under the size gate (round-7 lesson: an unconditional
     // hint bypasses autoBroadcastJoinThreshold for an arbitrarily big
     // set); above it the plain cross join lets AQE plan the flood
-    val q = if (IvfFlatIndex.fitsBroadcastGate(qdf, 1)) broadcast(qdf) else qdf
+    val q = if (Sizing.fitsBroadcastGate(spark, qB, 1)) broadcast(qdf) else qdf
     val scored = vectors.select(col("id"), col("vec"), col("label"))
       .crossJoin(q)
       .filter(col("label") =!= col("q_label") && col("id") =!= col("qid"))
       .withColumn("dist", vector.distance(col("qvec"), col("vec"), metric))
-    TopKAggregator.topKPerQuery(scored, k).select("qid", "id", "dist", "rank")
+    // a top-k over a cross join: priced at the join's qBytes x cBytes
+    TopKAggregator.topKPerQuery(scored, k, Sizing.mergeParts(spark, qB * Sizing.bytes(vectors)))
+      .select("qid", "id", "dist", "rank")
   }
 
   /**
@@ -171,15 +175,11 @@ object Similarity {
     * shape. */
   val MaxSelfIndexRows: Int = 1 << 18
 
-  /** Byte budget for one snapshot ([[selfIndexBatch]]): bounds BOTH the
-    * plan-stats pre-gate and the dimension-aware row cap. */
-  val MaxSelfIndexBytes: Long = 256L << 20
-
   /**
    * Snapshot the corpus for a broadcast fast path, or null when it is (or
-   * plan-stats say it obviously is) too big. Three defenses, cheapest
-   * first: the stats pre-check keeps a 100 TB table from paying even a
-   * bounded scan; the vector WIDTH (`dimHint` — the self-join callers
+   * its `bytes` estimate says it obviously is) too big. Three defenses,
+   * cheapest first: the bytes pre-check keeps a 100 TB table from paying
+   * even a bounded scan; the vector WIDTH (`dimHint` — the self-join callers
    * read it off their broadcast centroids, zero jobs and zero extra plan
    * evaluations) shrinks the row cap to the same byte budget (stats can
    * underestimate — e.g. optimistic filter selectivity — and a row gate
@@ -191,14 +191,10 @@ object Similarity {
    * blocked paths either (an exploded null probe list emits nothing).
    */
   private[pipeline] def selfIndexBatch(
-      vectors: DataFrame, maxRows: Int, dimHint: Int,
-      maxBytes: Long = MaxSelfIndexBytes): Array[(Long, Array[Float])] = {
-    if (maxRows <= 0) return null
-    val statBytes = vectors.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (statBytes > BigInt(maxBytes)) return null
-    val effMax =
-      if (dimHint <= 0) maxRows
-      else math.min(maxRows.toLong, maxBytes / (4L * dimHint + 24L)).toInt
+      vectors: DataFrame, bytes: BigInt, maxRows: Int, dimHint: Int,
+      maxBytes: Long = Sizing.MaxSelfIndexBytes): Array[(Long, Array[Float])] = {
+    val effMax = Sizing.selfIndexRows(bytes, maxRows, dimHint, maxBytes)
+    if (effMax < 0) return null
     // rdd.take, not limit().collect() — a limit plan can never hit the
     // codegen cache (see IvfFlatIndex.snapshotQueries), so the probe
     // would recompile on every gate evaluation
@@ -268,9 +264,10 @@ object Similarity {
       maxBucket: Int = Dedup.DefaultMaxBucket,
       maxSelfIndexRows: Int = MaxSelfIndexRows): DataFrame = {
     val spark = vectors.sparkSession
+    val cB = Sizing.bytes(vectors)
     // any k is fast-path-eligible: TopKBuf collapses the twice-scored
     // shared-list pairs on both sides of its heap threshold
-    val batch = selfIndexBatch(vectors, maxSelfIndexRows,
+    val batch = selfIndexBatch(vectors, cB, maxSelfIndexRows,
       dimHint = centroids.value.head.length)
     if (batch != null) {
       val pairs = IvfFlatIndex.localProbe(batch, centroids.value, assignProbes, Metric.L2)
@@ -284,7 +281,8 @@ object Similarity {
         .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
       val partial = ListScanTopK(exploded,
         new FlatListScorer(bc, Metric.Cosine.id, excludeSelf = true), k)
-      return TopKAggregator.finalizePartial(partial, k)
+      return TopKAggregator.finalizePartial(partial, k,
+        Sizing.snapshotMergeParts(spark, batch.length))
         .select("qid", "id", "dist", "rank")
     }
     val assigned = vectors.select(
@@ -300,9 +298,11 @@ object Similarity {
       .select(col("qid"), col("id"),
         vector.cosine_distance(col("qvec"), col("vec")).as("dist"))
     // bounded-buffer top-k (every vector is a query here — the partial
-    // mapPartitions combine keeps the shuffle at nVectors x k rows)
-    TopKAggregator.topKPerQuery(scored, k) // pairs already unique; rank by (dist, id)
-      .select("qid", "id", "dist", "rank")
+    // mapPartitions combine keeps the shuffle at nVectors x k rows). The
+    // stream joins both corpus sides onto pairs from a self-join of the
+    // corpus' list assignments: a product of four corpus-sized estimates
+    TopKAggregator.topKPerQuery(scored, k, Sizing.mergeParts(spark, cB.pow(4)))
+      .select("qid", "id", "dist", "rank") // pairs already unique; rank by (dist, id)
   }
 
   /**
@@ -350,7 +350,11 @@ object Similarity {
       queries: DataFrame, // (qid, qvec)
       corpus: DataFrame, // (id, vec)
       dim: Int,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    hamming(queries, corpus, dim, k, Sizing.bytes(queries), Sizing.bytes(corpus))
+
+  private def hamming(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
+      qB: BigInt, cB: BigInt): DataFrame = {
     require(dim % 32 == 0, s"dim must pack into 32-bit words, got $dim")
     val words = dim / 32
     val q = queries.select(
@@ -365,9 +369,11 @@ object Similarity {
     // size-gated hint (the hardNegatives round-7 lesson): an unconditional
     // broadcast bypasses autoBroadcastJoinThreshold for an arbitrarily
     // large query flood; above the gate AQE plans the cross join
-    val qb = if (IvfFlatIndex.fitsBroadcastGate(q, 1)) broadcast(q) else q
+    val spark = queries.sparkSession
+    val qb = if (Sizing.fitsBroadcastGate(spark, qB, 1)) broadcast(q) else q
     val scored = c.crossJoin(qb).withColumn("hdist", hdist)
-    TopKAggregator.topKPerQuery(scored, k, distCol = "hdist")
+    TopKAggregator.topKPerQuery(scored, k, Sizing.mergeParts(spark, qB * cB),
+      distCol = "hdist")
       .select(col("qid"), col("id"), col("dist").cast("long").as("dist"), col("rank"))
   }
 
@@ -389,34 +395,39 @@ object Similarity {
     // swapped/misconfigured args would silently return candK < k rows per
     // query — indistinguishable from a small corpus
     require(candK >= k, s"candK ($candK) must be >= k ($k)")
-    val cands = hammingSearch(queries, corpus, dim, candK).select("qid", "id")
-    rerankExact(cands, queries, corpus, k, metric, candK)
+    val qB = Sizing.bytes(queries)
+    val cB = Sizing.bytes(corpus)
+    val cands = hamming(queries, corpus, dim, candK, qB, cB).select("qid", "id")
+    rerankExact(cands, queries, corpus, k, metric, candK, qB, cB)
   }
 
   /** Exact-metric rerank of a bounded candidate set: the (qid, id) pairs
     * broadcast onto the raw corpus scan, so the fp32 read touches only
     * candidates. Shared tail of the quantized two-pass pipelines.
-    * Both hints are size-gated on the QUERY batch (whose plan stats are
-    * known; cands is bounded by |queries| x candK 16-byte pairs, so
-    * gating it by queries x candK is a conservative over-estimate) —
-    * above the gate AQE plans the joins for the flood. */
+    * Both hints are size-gated on the QUERY batch (`qB`; cands is
+    * bounded by |queries| x candK 16-byte pairs, so gating it by
+    * queries x candK is a conservative over-estimate) — above the gate
+    * AQE plans the joins for the flood. */
   private def rerankExact(
       cands: DataFrame, // (qid, id)
       queries: DataFrame, // (qid, qvec)
       corpus: DataFrame, // (id, vec)
       k: Int,
       metric: Metric.Value,
-      candK: Int): DataFrame = {
+      candK: Int, qB: BigInt, cB: BigInt): DataFrame = {
+    val spark = queries.sparkSession
     val cb =
-      if (IvfFlatIndex.fitsBroadcastGate(queries, math.max(1, candK))) broadcast(cands)
+      if (Sizing.fitsBroadcastGate(spark, qB, math.max(1, candK))) broadcast(cands)
       else cands
-    val qb = if (IvfFlatIndex.fitsBroadcastGate(queries, 1)) broadcast(queries) else queries
+    val qb = if (Sizing.fitsBroadcastGate(spark, qB, 1)) broadcast(queries) else queries
     val rescored = corpus
       .join(cb, "id")
       .join(qb, "qid")
       .select(col("qid"), col("id"),
         vector.distance(col("qvec"), col("vec"), metric).as("dist"))
-    TopKAggregator.topKPerQuery(rescored, k)
+    // corpus x candidates x queries, the candidates priced at the first
+    // pass's qBytes x cBytes
+    TopKAggregator.topKPerQuery(rescored, k, Sizing.mergeParts(spark, (qB * cB).pow(2)))
       .select("qid", "id", "dist", "rank")
   }
 
@@ -440,6 +451,9 @@ object Similarity {
     // same contract as hammingSearchRerank: a swapped pair silently
     // shrinks every result set
     require(candK >= k, s"candK ($candK) must be >= k ($k)")
+    val spark = queries.sparkSession
+    val qB = Sizing.bytes(queries)
+    val cB = Sizing.bytes(corpus)
     val scale = EmbeddingOps.sq8Scale(col("vec")) // shared: codes/oracle can't drift
     // The codes table is the SQ8 index artifact — one BINARY byte per dim
     // (the true 4x scan-byte reduction) + a double scale, built once and
@@ -452,12 +466,12 @@ object Similarity {
     // dequant-distance kernel (stable compiled loop, no per-pair scratch),
     // bounded partial top-k — the same shape as the exact flood path but
     // over int8 bytes
-    val qb =
-      if (IvfFlatIndex.fitsBroadcastGate(queries, 1)) broadcast(queries) else queries
+    val qb = if (Sizing.fitsBroadcastGate(spark, qB, 1)) broadcast(queries) else queries
     val scored = codesTable.crossJoin(qb)
       .select(col("qid"), col("id"),
         vector.sq8_distance(col("qvec"), col("codes"), col("scale"), metric).as("dist"))
-    val cands = TopKAggregator.topKPerQuery(scored, candK).select("qid", "id")
-    rerankExact(cands, queries, corpus, k, metric, candK)
+    val cands = TopKAggregator.topKPerQuery(scored, candK, Sizing.mergeParts(spark, qB * cB))
+      .select("qid", "id")
+    rerankExact(cands, queries, corpus, k, metric, candK, qB, cB)
   }
 }

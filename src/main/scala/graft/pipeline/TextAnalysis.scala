@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.index.{IvfFlatIndex, Sizing}
 
 /**
  * Text-analysis operators for training-data curation: language ID
@@ -14,11 +15,6 @@ import graft.functions.text
  * the oracle gate.
  */
 object TextAnalysis {
-
-  /** Text bytes per task for the regex-class projections ([[analyze]],
-    * [[piiScrub]]): ~512 KB ≈ 100-200 ms of regex work per task (engines run single-digit MB/s per core on these patterns), the
-    * density-derived widening target (see IvfFlatIndex.widenScanSized). */
-  val RegexTaskBytes: Long = 512L << 10
 
   /** Stopword lists for the n-gram language heuristic. Deterministic and
     * tiny by design — the point is the operator shape, not NLP accuracy. */
@@ -193,7 +189,7 @@ object TextAnalysis {
     // ~100-200 ms of work, well above the per-task fixed cost, unlike a flat
     // full-parallelism widen, which r20 stage profiles measured as ~90%
     // scheduling + shuffle-writer file fan-out at bench scale)
-    graft.index.IvfFlatIndex.widenScanSized(docs, RegexTaskBytes).select(
+    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes).select(
       col(idCol),
       regexp_count(t, lit(EmailRe)).cast("long").as("n_emails"),
       regexp_count(t, lit(PhoneRe)).cast("long").as("n_phones"),
@@ -207,7 +203,7 @@ object TextAnalysis {
     * an under-partitioned small input is widened first — sized to regex
     * work density like [[piiScrub]], not flat to full parallelism. */
   def analyze(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.index.IvfFlatIndex.widenScanSized(docs, RegexTaskBytes).select(
+    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes).select(
       col(idCol),
       text.token_count(col(textCol)).as("n_tokens"),
       langId(col(textCol)).as("lang_pred"),

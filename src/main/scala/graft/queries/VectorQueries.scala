@@ -227,24 +227,12 @@ object VectorQueries {
       .orderBy("qid", "rank")
   }
 
-  /** Run `f` with the flood confs pinned (path selection happens at plan
-    * CONSTRUCTION — fitsBroadcastGate and the salt read the conf then —
-    * so restoring after the DataFrame is built is safe). */
-  private def withFloodConfs(spark: SparkSession, gate: String)(f: => DataFrame): DataFrame = {
-    val conf = spark.conf
-    val oldGate = conf.getOption(graft.index.IvfFlatIndex.BroadcastGateKey)
-    try {
-      conf.set(graft.index.IvfFlatIndex.BroadcastGateKey, gate)
-      f
-    } finally oldGate.fold(conf.unset(graft.index.IvfFlatIndex.BroadcastGateKey))(
-      conf.set(graft.index.IvfFlatIndex.BroadcastGateKey, _))
-  }
-
   /**
    * The ABOVE-gate flat flood: same query/oracle shape as
    * ivf_search_batch_all, but with the broadcast gate pinned to 1 byte so
-   * the plan takes the salted co-partition path ([[CoGroupTopK]], default
-   * salt 8 — every list split into sub-bucket tasks). Exhaustive probe ⇒
+   * the plan takes the salted co-partition path ([[CoGroupTopK]], salt
+   * from [[graft.index.Sizing.salt]] — every list split into sub-bucket
+   * tasks). Exhaustive probe ⇒
    * the exact-kNN SQL stays the oracle, hash-gating losslessness of the
    * salt tiling and the cogroup scoring end to end.
    */
@@ -255,7 +243,7 @@ object VectorQueries {
     val queries = e.filter(col("vec_id") < 300)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val index = ivfIndex(spark, dir, 16)
-    withFloodConfs(spark, gate = "1") {
+    graft.index.Sizing.withGate(spark, "1") {
       index.searchWhere(queries, SearchParams(k = 5, nprobe = 16), None,
         IvfFlatIndex.ForceJoin)
     }.orderBy("qid", "rank")
@@ -280,7 +268,7 @@ object VectorQueries {
     val e = emb(spark, dir)
     val vectors = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val queries = floodQuerySet(spark, dir)
-    withFloodConfs(spark, gate = "1") {
+    graft.index.Sizing.withGate(spark, "1") {
       Knn.exact(queries, vectors, 5)
     }.orderBy("qid", "rank")
   }
@@ -315,7 +303,7 @@ object VectorQueries {
     import graft.SearchParams
     val index = ivfpqIndex(spark, dir, 16, 8)
     val queries = floodQuerySet(spark, dir)
-    withFloodConfs(spark, gate = "1") {
+    graft.index.Sizing.withGate(spark, "1") {
       index.search(queries, SearchParams(k = 5, nprobe = 16), rerankK = FloodRerankK)
     }.orderBy("qid", "rank")
   }

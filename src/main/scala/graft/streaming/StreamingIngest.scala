@@ -40,9 +40,8 @@ object StreamingIngest {
   def replayConfs(
       spark: org.apache.spark.sql.SparkSession, batchBytes: Long): (Int, Boolean) = {
     val cap = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1L, math.min(cap.toLong,
-      (batchBytes + ReplayBytesPerPartition - 1) / ReplayBytesPerPartition)).toInt
-    (parts, batchBytes < ReplayCodegenBytes)
+    (graft.index.Sizing.parts(batchBytes, ReplayBytesPerPartition, cap),
+      batchBytes < ReplayCodegenBytes)
   }
 
   case class Event(

@@ -27,7 +27,7 @@ class BroadcastGateSpec extends SparkSpec {
   private lazy val pqIndex =
     IvfPqIndex.build(spark, vectorsDF(corpus), nlist = 8, m = 4, nbits = 6)
 
-  private val GateKey = IvfFlatIndex.BroadcastGateKey
+  private val GateKey = Sizing.BroadcastGateKey
   private val AutoKey = "spark.sql.autoBroadcastJoinThreshold"
 
   /** Run `body` with the gate and Spark's auto-broadcast threshold set,
@@ -167,11 +167,32 @@ class BroadcastGateSpec extends SparkSpec {
       assert(!adcPlan.contains("Join"), s"below-gate ADC-only should be join-free:\n$adcPlan")
       // rerank: the id-only ADC winners broadcast into the raw-payload
       // join-back so the (100 TB) raw scan stays unshuffled
-      val rrPlan = initialPlan(pqIndex.search(qdf, params, 20))
+      val rrDf = pqIndex.search(qdf, params, 20)
+      val rrPlan = initialPlan(rrDf)
       assert(rrPlan.contains("BroadcastProbeTopK") && rrPlan.contains("BroadcastHashJoin"),
         s"below-gate PQ rerank should broadcast-probe ADC and hint the join-back:\n$rrPlan")
+      // the broadcast rerank join leaves the merge exchange in the plan,
+      // so no round-robin materialization barrier is added on top of it
+      assert(roundRobinExchanges(rrDf) === 0,
+        s"below-gate PQ rerank must not add the round-robin barrier:\n$rrPlan")
+    }
+    withConf(gate = "1", auto = "-1") {
+      // above the gate the shuffled-hash rerank join can satisfy the
+      // merge's clustering, so the barrier stays
+      val rrDf = pqIndex.search(qdf, params, 20)
+      assert(roundRobinExchanges(rrDf) >= 1,
+        s"above-gate PQ rerank must keep the round-robin barrier:\n${initialPlan(rrDf)}")
     }
   }
+
+  /** Round-robin materialization barriers in the initial physical plan:
+    * shuffles directly on top of the final merge (a one-partition
+    * round robin plans as SinglePartition). */
+  private def roundRobinExchanges(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.child.isInstanceOf[RankTopKExec] => e
+    }.size
 
   test("pq flood results are bit-identical above/below the gate and vs static") {
     val qdf = queriesDF(floodQueries)
@@ -197,73 +218,106 @@ class BroadcastGateSpec extends SparkSpec {
     // by id hash, queries replicated) so a skewed hot list becomes S
     // tasks; each candidate lands in exactly ONE sub-bucket, so results
     // must be bit-identical at any salt — including salt 1 (no split)
-    val qdf = queriesDF(floodQueries)
+    val uniq = IvfFlatIndex.onePerQid(queriesDF(floodQueries))
     val params = SearchParams(k = 5, nprobe = 8) // nprobe = nlist -> fully determined
     val flatStatic = sortedKeys(flat.searchBatch(floodQueries.toArray, params))
+    val flatProbed = IvfFlatIndex.probeRows(uniq, flat.centroids, params.nprobe, flat.metric)
     val pqParams = SearchParams(k = 5, nprobe = 4)
-    val pqStatic = sortedKeys(pqIndex.searchBatch(floodQueries.toArray, pqParams, 20))
-    val conf = spark.conf
-    val old = conf.getOption(CoGroupTopK.SaltKey)
-    try {
-      withConf(gate = "1", auto = "-1") { // force the co-partition path
-        for (salt <- Seq("1", "4", "13")) {
-          conf.set(CoGroupTopK.SaltKey, salt)
-          assert(sortedKeys(flat.search(qdf, params)) === flatStatic,
-            s"flat flood diverged at salt=$salt")
-          assert(sortedKeys(pqIndex.search(qdf, pqParams, 20)) === pqStatic,
-            s"pq flood diverged at salt=$salt")
-        }
-      }
-    } finally old.fold(conf.unset(CoGroupTopK.SaltKey))(conf.set(CoGroupTopK.SaltKey, _))
+    val pqStatic = sortedKeys(pqIndex.searchBatch(floodQueries.toArray, pqParams))
+    val pqProbed =
+      IvfFlatIndex.probeRows(uniq, pqIndex.centroids, pqParams.nprobe, pqIndex.metric)
+    for (salt <- Seq(1, 4, 13)) {
+      assert(sortedKeys(CoGroupTopK.flatSearch(flatProbed, flat.vectors, params.k,
+        flat.metric.id, flat.nlist, salt)) === flatStatic,
+        s"flat flood diverged at salt=$salt")
+      assert(sortedKeys(CoGroupTopK.pqSearch(pqProbed, pqIndex.codes, pqIndex.codebooks,
+        pqIndex.metric.id, pqParams.k, pqIndex.nlist, salt)) === pqStatic,
+        s"pq flood diverged at salt=$salt")
+    }
   }
 
-  test("derived flood salt is scale-adaptive: 1 at bench scale, grows with corpus, conf pins") {
-    // r20: the salt defaults to a corpus-stats derivation instead of a
-    // constant — a KB-sized corpus must take salt 1 (no query replication,
-    // no empty sub-bucket tasks) and the derived value must scale with
+  test("derived flood salt is scale-adaptive: 1 at bench scale, more at scale") {
+    // r20: the salt is a corpus-bytes derivation instead of a constant — a
+    // KB-sized corpus must take salt 1 (no query replication, no empty
+    // sub-bucket tasks) and the derived value must scale with
     // bytes-per-list, capped by the session's shuffle parallelism
-    val corpus = flat.vectors // tiny test corpus, stats well under 4 MB/list
-    assert(CoGroupTopK.saltOf(spark, corpus, nlist = 8) === 1)
+    val bytes = Sizing.bytes(flat.vectors) // tiny test corpus, well under 4 MB/list
+    assert(Sizing.salt(spark, bytes, nlist = 8) === 1)
     // nlist=1 concentrates all bytes in one list; still tiny here -> 1
-    assert(CoGroupTopK.saltOf(spark, corpus, nlist = 1) === 1)
-    // derivation math at scale (pure function of stats/nlist/cap): a
+    assert(Sizing.salt(spark, bytes, nlist = 1) === 1)
+    // derivation math at scale (pure function of bytes/nlist/cap): a
     // 1 GiB list wants 256 x 4 MB buckets, capped by parallelism
     val parts = spark.sessionState.conf.numShufflePartitions
-    val bigPerList = (1L << 30) / CoGroupTopK.TargetBucketBytes // 256
-    assert(CoGroupTopK.groupParts(spark, nlist = 4, salt = 1) === math.min(parts, 4))
-    assert(CoGroupTopK.groupParts(spark, nlist = 1 << 20, salt = 64) === parts)
+    val bigPerList = (1L << 30) / Sizing.TargetBucketBytes // 256
+    assert(Sizing.groupParts(spark, nlist = 4, salt = 1) === math.min(parts, 4))
+    assert(Sizing.groupParts(spark, nlist = 1 << 20, salt = 64) === parts)
     assert(bigPerList === 256L)
-    // conf override wins over the derivation
-    val conf = spark.conf
-    val old = conf.getOption(CoGroupTopK.SaltKey)
-    try {
-      conf.set(CoGroupTopK.SaltKey, "13")
-      assert(CoGroupTopK.saltOf(spark, corpus, nlist = 8) === 13)
-    } finally old.fold(conf.unset(CoGroupTopK.SaltKey))(conf.set(CoGroupTopK.SaltKey, _))
+    assert(Sizing.salt(spark, BigInt(1L << 30), nlist = 1) === parts)
     // r21 (r20 advice): the formula applies 4x skew headroom on the mean
     // bytes-per-list, and an UNKNOWN nlist (the Int.MaxValue sentinel)
     // prices the whole corpus as one potential hot list instead of
     // dividing the estimate to zero and silently disabling salting
-    val bytes = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-    val t = BigInt(CoGroupTopK.TargetBucketBytes)
+    val t = BigInt(Sizing.TargetBucketBytes)
     def clamp(v: BigInt) = v.min(BigInt(parts)).max(BigInt(1)).toInt
-    assert(CoGroupTopK.saltOf(spark, corpus, nlist = 8) ===
+    assert(Sizing.salt(spark, bytes, nlist = 8) ===
       clamp((bytes / 8 * 4 + t - 1) / t))
-    assert(CoGroupTopK.saltOf(spark, corpus, nlist = Int.MaxValue) ===
+    assert(Sizing.salt(spark, bytes, nlist = Int.MaxValue) ===
       clamp((bytes * 4 + t - 1) / t))
   }
 
   test("gate decision pins to the plan-stats estimate boundary") {
     val qdf = queriesDF(floodQueries.take(64))
     val nprobe = 4
-    val est = qdf.queryExecution.optimizedPlan.stats.sizeInBytes * nprobe
+    val qB = Sizing.bytes(qdf)
+    val est = qB * nprobe
     assert(est > 0)
     withConf(gate = est.toString, auto = "-1") {
-      assert(IvfFlatIndex.fitsBroadcastGate(qdf, nprobe), "estimate == gate must fit")
+      assert(Sizing.fitsBroadcastGate(spark, qB, nprobe), "estimate == gate must fit")
     }
     withConf(gate = (est - 1).toString, auto = "-1") {
-      assert(!IvfFlatIndex.fitsBroadcastGate(qdf, nprobe), "estimate > gate must not fit")
+      assert(!Sizing.fitsBroadcastGate(spark, qB, nprobe), "estimate > gate must not fit")
     }
+  }
+
+  test("building a search runs no optimizer pass over a graft top-k plan or an Aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.catalyst.rules.Rule
+    // every plan an optimizer pass sees while the searches are BUILT (not
+    // run): sizing must read only the input frames, never price a plan
+    // graft has just assembled on top of them
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    object Spy extends Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = { seen.add(plan); plan }
+    }
+    def offenders(plan: LogicalPlan): Seq[String] = plan.collect {
+      case _: ListScanTopKNode => "ListScanTopKNode"
+      case _: BroadcastProbeTopKNode => "BroadcastProbeTopKNode"
+      case _: PartialTopKNode => "PartialTopKNode"
+      case _: RankTopKNode => "RankTopKNode"
+      case _: Aggregate => "Aggregate"
+    }
+    val (flatIdx, pq) = (flat, pqIndex) // built before counting
+    val static = queriesDF(floodQueries.take(64))
+    val flood = queriesDF(floodQueries)
+    val corpusDf = vectorsDF(corpus)
+    val params = SearchParams(k = 5, nprobe = 4)
+    val searches = Seq[(String, () => DataFrame)](
+      "static 64-query search" -> (() => flatIdx.search(static, params)),
+      "flat flood" -> (() => flatIdx.search(flood, params)),
+      "pq flood with rerank 20" -> (() => pq.search(flood, params, 20)),
+      "Knn.exact flood" -> (() => Knn.exact(flood, corpusDf, 5)))
+    val exp = spark.experimental
+    val before = exp.extraOptimizations
+    val bad = try {
+      exp.extraOptimizations = before :+ Spy
+      searches.flatMap { case (name, build) =>
+        seen.clear()
+        build()
+        val hit = seen.toArray(Array.empty[LogicalPlan]).flatMap(offenders).distinct
+        if (hit.isEmpty) None else Some(s"$name: ${hit.mkString(", ")}")
+      }
+    } finally exp.extraOptimizations = before
+    assert(bad.isEmpty, s"optimizer passes over graft-built plans during construction: $bad")
   }
 
   test("pq flood scorer is bit-identical across list orderings and the table cutover") {

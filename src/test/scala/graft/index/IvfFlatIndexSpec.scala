@@ -149,10 +149,10 @@ class IvfFlatIndexSpec extends SparkSpec {
     // in the plan could only come from a planted hint — there must be none
     val conf = spark.conf
     val autoKey = "spark.sql.autoBroadcastJoinThreshold"
-    val oldGate = conf.getOption(IvfFlatIndex.BroadcastGateKey)
+    val oldGate = conf.getOption(Sizing.BroadcastGateKey)
     val oldAuto = conf.getOption(autoKey)
     try {
-      conf.set(IvfFlatIndex.BroadcastGateKey, "1")
+      conf.set(Sizing.BroadcastGateKey, "1")
       conf.set(autoKey, "-1")
       val joinPlan = Knn.exact(wide, index.vectors.select("id", "vec"), 5)
         .queryExecution.executedPlan.toString
@@ -163,8 +163,8 @@ class IvfFlatIndexSpec extends SparkSpec {
       assert(!joinPlan.contains("BroadcastExchange"),
         s"above-gate exact plan must not broadcast the query set:\n$joinPlan")
     } finally {
-      oldGate.fold(conf.unset(IvfFlatIndex.BroadcastGateKey))(
-        conf.set(IvfFlatIndex.BroadcastGateKey, _))
+      oldGate.fold(conf.unset(Sizing.BroadcastGateKey))(
+        conf.set(Sizing.BroadcastGateKey, _))
       oldAuto.fold(conf.unset(autoKey))(conf.set(autoKey, _))
     }
   }

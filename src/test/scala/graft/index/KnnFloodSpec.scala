@@ -29,7 +29,7 @@ class KnnFloodSpec extends SparkSpec {
         .zipWithIndex.map { case ((_, id, d), i) => (qid, i + 1, id, d) }
     }.sortBy(t => (t._1, t._2)).toArray
     val conf = spark.conf
-    val key = IvfFlatIndex.BroadcastGateKey
+    val key = Sizing.BroadcastGateKey
     val old = conf.getOption(key)
     try {
       conf.set(key, "1") // force the above-gate branch
@@ -45,14 +45,18 @@ class KnnFloodSpec extends SparkSpec {
     val cap = spark.sessionState.conf.numShufflePartitions
     val q = queriesDF(randomVectors(50, 8))
     val v = vectorsDF(randomVectors(300, 8, seed = 7))
-    val small = Knn.floodParts(q, v)
+    val small = Sizing.floodParts(spark, Sizing.bytes(q), Sizing.bytes(v))
     assert(small >= 1 && small <= cap)
     // KB x KB product stays far under one TargetPairBytes bucket -> 1 task
     assert(small === 1, s"tiny flood must not fan out (got $small)")
-    // derivation math at scale (pure function of the stats product):
+    // derivation math at scale (pure function of the bytes product):
     // 1 GB x 1 GB of pair-bytes wants ~2.5M buckets -> clamped to cap
-    val want = (BigInt(1L << 30) * BigInt(1L << 30) + Knn.TargetPairBytes - 1) /
-      Knn.TargetPairBytes
+    val gb = BigInt(1L << 30)
+    val want = (gb * gb + Sizing.TargetPairBytes - 1) / Sizing.TargetPairBytes
     assert(want > cap)
+    assert(Sizing.floodParts(spark, gb, gb) === cap)
+    // between the two: exactly ceil(product / TargetPairBytes)
+    val mid = Sizing.TargetPairBytes * 2 + 1
+    assert(Sizing.floodParts(spark, mid, 1) === math.min(cap, 3))
   }
 }

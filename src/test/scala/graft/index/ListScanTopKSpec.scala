@@ -44,7 +44,7 @@ class ListScanTopKSpec extends SparkSpec {
     val pruned = flat.vectors
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
     def run(maxKeys: Int) = sortedHits(TopKAggregator.finalizePartial(
-      ListScanTopK(pruned, new FlatListScorer(bc, Metric.L2.id), 5, maxKeys), 5))
+      ListScanTopK(pruned, new FlatListScorer(bc, Metric.L2.id), 5, maxKeys), 5, parts = 1))
     // maxKeys=1: every corpus row's first insert fills the map -> flush
     // storm; results must still merge to the unfragmented answer
     assert(run(1) === run(Int.MaxValue))
@@ -66,7 +66,7 @@ class ListScanTopKSpec extends SparkSpec {
     ).toDF("id", "list_id", "vec")
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
     val hits = sortedHits(TopKAggregator.finalizePartial(
-      ListScanTopK(rows, new FlatListScorer(bc, Metric.L2.id), 3), 3))
+      ListScanTopK(rows, new FlatListScorer(bc, Metric.L2.id), 3), 3, parts = 1))
     assert(hits.map(_._2) === Seq(10L))
     bc.destroy()
   }
@@ -128,7 +128,7 @@ class ListScanTopKSpec extends SparkSpec {
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
     def run(maxKeys: Int) = TopKAggregator.finalizePartial(
       ListScanTopK(exploded, new FlatListScorer(bc, Metric.L2.id, excludeSelf = true),
-        5, maxKeys), 5)
+        5, maxKeys), 5, parts = 1)
       .collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1), r.getDouble(2)))
       .sortBy(t => (t._1, t._2)).toSeq
     val fragmented = run(1)
@@ -150,14 +150,14 @@ class ListScanTopKSpec extends SparkSpec {
     val batch = Array((1L, Array.fill(dim)(0f)))
     val bc = spark.sparkContext.broadcast(ProbeIndex(batch, Array((1L, 0)), 4))
     assert(TopKAggregator.finalizePartial(
-      ListScanTopK(empty, new FlatListScorer(bc, Metric.L2.id), 3), 3).count() === 0)
+      ListScanTopK(empty, new FlatListScorer(bc, Metric.L2.id), 3), 3, parts = 1).count() === 0)
     // probe index with zero queries: every row skips (null listPos everywhere)
     val bcEmpty = spark.sparkContext.broadcast(
       ProbeIndex(Array.empty[(Long, Array[Float])], Array.empty[(Long, Int)], 4))
     val rows = Seq((10L, 0, Array.fill(dim)(1f))).toDF("id", "list_id", "vec")
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
     assert(TopKAggregator.finalizePartial(
-      ListScanTopK(rows, new FlatListScorer(bcEmpty, Metric.L2.id), 3), 3).count() === 0)
+      ListScanTopK(rows, new FlatListScorer(bcEmpty, Metric.L2.id), 3), 3, parts = 1).count() === 0)
     bc.destroy(); bcEmpty.destroy()
   }
 

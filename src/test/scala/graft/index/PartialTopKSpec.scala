@@ -178,7 +178,7 @@ class PartialTopKSpec extends SparkSpec {
 
   test("operator top-k equals the Window reference on a multi-partition stream") {
     val scored = candidates(97, 500).repartition(7)
-    val a = TopKAggregator.topKPerQuery(scored, 10)
+    val a = TopKAggregator.topKPerQuery(scored, 10, mergeParts = 1)
     val b = windowTopK(scored, 10)
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
@@ -186,7 +186,7 @@ class PartialTopKSpec extends SparkSpec {
 
   test("large k (heap path) equals the Window reference") {
     val scored = candidates(11, 400).repartition(3)
-    val a = TopKAggregator.topKPerQuery(scored, 2000) // k > HeapThreshold, k > stream
+    val a = TopKAggregator.topKPerQuery(scored, 2000, mergeParts = 1) // k > HeapThreshold, k > stream
     val b = windowTopK(scored, 2000)
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
@@ -194,7 +194,7 @@ class PartialTopKSpec extends SparkSpec {
 
   test("a tiny flush budget (mid-partition drains) changes nothing") {
     val scored = candidates(97, 200).repartition(3)
-    val tight = TopKAggregator.topKPerQuery(scored, 5, maxPartialKeys = 2)
+    val tight = TopKAggregator.topKPerQuery(scored, 5, mergeParts = 1, maxPartialKeys = 2)
     val ref = windowTopK(scored, 5)
     assert(tight.exceptAll(ref).count() === 0)
     assert(ref.exceptAll(tight).count() === 0)
@@ -207,13 +207,13 @@ class PartialTopKSpec extends SparkSpec {
       (1L, 10L, 1.0), (1L, 11L, 2.0),
       (null, 12L, 0.1), (1L, null, 0.2), (1L, 13L, null))
       .toDF("qid", "id", "dist")
-    val out = TopKAggregator.topKPerQuery(rows, 10).collect()
+    val out = TopKAggregator.topKPerQuery(rows, 10, mergeParts = 1).collect()
     assert(out.map(_.getLong(1)).sorted.toSeq === Seq(10L, 11L))
   }
 
   test("the plan shows PartialTopK with the child scan visible beneath it") {
     val scored = candidates(5, 10)
-    val plan = TopKAggregator.topKPerQuery(scored, 3)
+    val plan = TopKAggregator.topKPerQuery(scored, 3, mergeParts = 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartialTopK"))
     assert(plan.contains("Range")) // the child source survives in the same tree

@@ -5,11 +5,11 @@ import graft.SparkSpec
 class PlanWarmupSpec extends SparkSpec {
 
   test("warmPqFlood executes the flood plan family, is idempotent, restores the gate conf") {
-    val gateBefore = spark.conf.getOption(IvfFlatIndex.BroadcastGateKey)
+    val gateBefore = spark.conf.getOption(Sizing.BroadcastGateKey)
     PlanWarmup.warmPqFlood(spark)
     // the broadcast-gate override used to force the salted shape must not
     // leak into the caller's session
-    assert(spark.conf.getOption(IvfFlatIndex.BroadcastGateKey) === gateBefore,
+    assert(spark.conf.getOption(Sizing.BroadcastGateKey) === gateBefore,
       "warmup must restore the broadcast gate conf")
     // the position-independent codegen cache flag is the warmup's
     // documented side effect — without it identical subplans at different

@@ -228,9 +228,10 @@ class PipelineSpec extends SparkSpec {
     // 100 rows sail through the row gate, but a byte budget of ~4 rows of
     // 64D vectors (64*4+24 = 280 B each) must refuse the snapshot — the
     // dimension-blind row cap alone would have collected ~2 GB at 2048D
-    assert(Similarity.selfIndexBatch(v, maxRows = 1 << 18, dimHint = 64,
+    val bytes = graft.index.Sizing.bytes(v)
+    assert(Similarity.selfIndexBatch(v, bytes, maxRows = 1 << 18, dimHint = 64,
       maxBytes = 1200) === null)
-    val ok = Similarity.selfIndexBatch(v, maxRows = 1 << 18, dimHint = 64)
+    val ok = Similarity.selfIndexBatch(v, bytes, maxRows = 1 << 18, dimHint = 64)
     assert(ok != null && ok.length === 100)
   }
 
