@@ -63,6 +63,10 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // streaming state first: the StateStore maintenance thread outlives
+    // spark.stop() otherwise, and logs "SparkEnv not active" errors
+    spark.streams.active.foreach(_.stop())
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, graftshims}
 import org.apache.spark.sql.functions._
 
 /**
@@ -44,17 +44,20 @@ import org.apache.spark.sql.functions._
  * verdict frames, each at most one row per doc. No stage collects to
  * the driver.
  *
- * Caching contract: one call registers several survivor-sized caches
- * (verdicts, the per-stage survivor frames, the band projections) so
- * each multiply-consumed frame computes once. [[curate]] is the
- * one-shot-driver shape — the driver exits and the ContextCleaner
- * reclaims the caches. A driver that runs REPEATED batch curations, or
- * one that cannot afford corpus-sized text in the block manager at all,
- * should call [[curateManaged]]: it returns a [[CurationRun]] whose
- * `unpersist()` releases every cache the run registered (nested
- * operators included), and its parquet-staging mode replaces the caches
- * with on-disk stage files (zero storage memory; `cleanup()` deletes
- * them). A long-lived driver screening continuous ingest should use
+ * Caching contract: every stage that computes something materializes
+ * once as a plan LEAF ([[Dedup.MatCtx]]), so no later stage re-plans the
+ * chain above it; the survivor frames between stages are filters and
+ * anti-joins that each consumer re-derives from those leaves. [[curate]]
+ * cuts its stages as `MEMORY_AND_DISK` checkpoints — the block manager
+ * holds their rows, not compressed columns, with disk spill covering
+ * them — and the ContextCleaner reclaims them once the audit is
+ * unreachable. A driver that runs REPEATED batch curations, or one that
+ * cannot afford corpus-sized text in the block manager at all, should
+ * call [[curateManaged]]: its [[CurationRun]]'s `unpersist()` releases
+ * every checkpoint the run made (nested operators included), and its
+ * parquet-staging mode writes stage files instead (zero storage memory;
+ * `cleanup()` deletes them). A long-lived driver screening continuous
+ * ingest should use
  * [[graft.streaming.StreamingIngest.curationScreen]] +
  * [[graft.streaming.StreamingIngest.nearDupScreen]] over a persisted
  * [[Dedup.CorpusIndex]] instead of repeated curate() calls.
@@ -165,18 +168,18 @@ object Curation {
    * intermediate the run materialized.
    *
    * Consume (write/collect/persist) `audit` BEFORE calling `unpersist`
-   * or `cleanup` — the audit plan references the materialized frames;
-   * releasing them first is correct but recomputes the whole pipeline
-   * (block-manager mode) or fails the scan (staging mode, files gone).
+   * or `cleanup` — the audit plan reads the materialized frames, which
+   * have no lineage to recompute from: releasing them first fails the
+   * scan in either mode.
    */
   final case class CurationRun(
       audit: DataFrame,
       caches: Seq[DataFrame],
       staging: Option[String]) {
-    /** Drop every block-manager cache this run registered (no-op in
+    /** Release every block-manager checkpoint this run made (no-op in
       * staging mode — there are none). */
     def unpersist(blocking: Boolean = false): Unit =
-      caches.foreach(_.unpersist(blocking))
+      caches.foreach(graftshims.unpersistCheckpoint(_, blocking))
     /** [[unpersist]] + delete the staging directory, if any. */
     def cleanup(blocking: Boolean = false): Unit = {
       unpersist(blocking)
@@ -192,17 +195,18 @@ object Curation {
    * [[curate]] with an explicit materialization policy — the
    * repeated-runs / bounded-memory shape:
    *
-   *  - `storageLevel` governs every cache the run registers (the
-   *    pipeline's own stage frames AND the nested minhashLsh /
-   *    contamination internals, via [[Dedup.withMatCtx]]);
+   *  - `storageLevel` is the level of every stage checkpoint the run
+   *    makes (the pipeline's own stage frames AND the nested minhashLsh /
+   *    contamination internals, via [[Dedup.withMatCtx]]), which the run
+   *    owns: `CurationRun.unpersist()` releases them;
    *  - `stagingPath` (non-empty) switches materialization to parquet
    *    stage files under that path instead — the block manager never
    *    holds corpus-sized text, which at 100 TB is the difference
    *    between a curation run and a cluster-wide spill storm. The
    *    caller owns the path; `CurationRun.cleanup()` deletes it.
    *
-   * Identical output to [[curate]] by construction (same plan, only the
-   * materialization of shared subframes differs).
+   * Identical output to [[curate]] by construction (same plan, only
+   * where the stage leaves live differs).
    */
   def curateManaged(
       docs: DataFrame,
@@ -229,15 +233,15 @@ object Curation {
     // Staging mode stages the ASSEMBLED audit too: it is the one frame
     // every consumer reads, and unlike the survivor frames it is
     // text-free and tiny (ints/bools/strings — one row per input doc).
-    // Without this, each consumption re-derives the unstaged s1/s2/s3
-    // filters and the assembly joins from the staged parents — measured
-    // at the 5M-doc stress (dev/ROUND12.md), three aggregations over the
-    // audit silently paid the back half of the pipeline three times
-    // (rollup taskSec grew 39x at 10x data). Staged, repeated
-    // consumption is O(audit scan). Block-manager mode is unchanged: the
-    // parent frames are cached there, so the assembly joins are already
-    // cheap, and an extra corpus-rows cache would grow the footprint the
-    // caller chose that mode to control.
+    // Without this, each consumption re-derives the s1/s2/s3 filters
+    // and the assembly joins from the staged parents — measured at the
+    // 5M-doc stress (dev/ROUND12.md), three aggregations over the audit
+    // silently paid the back half of the pipeline three times (rollup
+    // taskSec grew 39x at 10x data). Staged, repeated consumption is
+    // O(audit scan). Block-manager mode returns the assembly as built:
+    // its parents are in-memory checkpoints, so the assembly joins are
+    // already cheap, and an extra corpus-rows checkpoint would grow the
+    // footprint the caller chose that mode to control.
     val audit = if (ctx.isStaging) ctx.materialize(assembled) else assembled
     CurationRun(audit, ctx.frames.toSeq, stagingPath)
   }
@@ -256,14 +260,14 @@ object Curation {
       idCol: String = "doc_id",
       textCol: String = "text",
       family: graft.functions.HashFamily = graft.functions.HashFamily.Xxh64)
-      : DataFrame = {
+      : DataFrame = Dedup.withStageCuts {
     require(nShards > 0, s"nShards must be positive: $nShards")
     val id = col(idCol)
 
     // stage 1: per-doc quality + repetition verdicts — BOTH pure per-row
     // expressions (repetitionOk is the batch gate's differential-tested
     // row form), so the whole stage rides the scan with zero shuffle and
-    // zero joins; persisted because it has two consumers (the survivor
+    // zero joins; materialized because it has two consumers (the survivor
     // filter feeding stages 2-4 and the final assembly) and Spark has no
     // cross-branch CSE
     // NOTE on input width: the verdict projection tokenizes each row
@@ -272,7 +276,7 @@ object Curation {
     // arrives in thousands of partitions; a single-file toy input pins
     // stage 1 to one core, so repartition such inputs first (the
     // curation stress tool does; widening HERE was measured a net loss —
-    // the stage runs once into the cache, and the widen probe taxes
+    // the stage runs once into its leaf, and the widen probe taxes
     // every later plan build).
     // both verdicts coalesce NULL -> false: a null/absent text yields a
     // NULL quality score, and an un-coalesced NULL would slip past the
@@ -283,28 +287,22 @@ object Curation {
       coalesce(TextAnalysis.qualityScore(col(textCol)) >= minQuality,
         lit(false)).as("quality_ok"),
       coalesce(QualityFilters.repetitionOk(col(textCol)), lit(false)).as("rep_ok")))
-    // the SURVIVOR frame feeding stages 2-4 is persisted — three
-    // downstream consumers (exact groupBy, minhash shingles, contamination).
-    // persistOnceDerived: s1 (and s2/s3 below) are filters/anti-joins over
-    // frames already materialized, so the parquet-staging mode re-derives
-    // them per consumer instead of copying the corpus text to disk again
-    // per stage (boolean-filter pushdown makes the re-derivation scans
-    // cheap); block-manager modes cache them exactly as before
-    val s1 = Dedup.persistOnceDerived(
-      verdicts.filter(col("quality_ok") && col("rep_ok")).select(id, col(textCol)))
+    // the SURVIVOR frames s1/s2/s3 are NOT materialized: each is a cheap
+    // filter or small-id anti-join over materialized leaves, and copying
+    // the corpus text once more per stage outgrew the disk at the 5M-doc
+    // stress (dev/ROUND12.md)
+    val s1 = verdicts.filter(col("quality_ok") && col("rep_ok")).select(id, col(textCol))
 
     // stage 2: exact dedup among stage-1 survivors — keep min doc_id per
     // text; the keeper maps to a NULL exact_dup_of
-    // exactOf/nearOf/s3 each have TWO consumers (the next stage's
-    // survivor anti-join, and the final assembly — s3 additionally feeds
-    // contamination's two corpus passes); uncached they re-run the text
-    // groupBy / the whole band join per consumer
+    // exactOf/nearOf each have TWO consumers (the next stage's survivor
+    // anti-join, and the final assembly); unmaterialized they would re-run
+    // the text groupBy / the whole band join per consumer
     val keepers = s1.groupBy(textCol).agg(min(idCol).as("keep_id"))
     val exactOf = Dedup.persistOnce(s1.join(keepers, textCol)
       .select(id, when(id =!= col("keep_id"), col("keep_id")).as("exact_dup_of")))
-    val s2 = Dedup.persistOnceDerived(
-      s1.join(exactOf.filter(col("exact_dup_of").isNotNull).select(idCol),
-        Seq(idCol), "left_anti"))
+    val s2 = s1.join(exactOf.filter(col("exact_dup_of").isNotNull).select(idCol),
+      Seq(idCol), "left_anti")
 
     // stage 3: banded MinHash near-dup among stage-2 survivors; greedy
     // smaller-id-partner-wins rule (Dedup.dropNearDuplicates semantics),
@@ -313,8 +311,7 @@ object Curation {
       bands, nearThreshold, family)
     val nearOf = Dedup.persistOnce(pairs.groupBy(col("b_id").as(idCol))
       .agg(min("a_id").as("near_dup_of")))
-    val s3 = Dedup.persistOnceDerived(
-      s2.join(nearOf.select(idCol), Seq(idCol), "left_anti"))
+    val s3 = s2.join(nearOf.select(idCol), Seq(idCol), "left_anti")
 
     // stage 4: eval-set decontamination of stage-3 survivors (the df cap
     // is computed over the SURVIVOR corpus — boilerplate is judged on

@@ -57,22 +57,27 @@ object Dedup {
 
   /**
    * Per-thread materialization policy for [[persistOnce]] — the hook
-   * that lets a COMPOSED pipeline ([[Curation.curateManaged]]) own the
-   * caches its stages (and their nested operators — minhashLsh,
-   * contamination — whose persistOnce calls it cannot see) register:
+   * that lets a COMPOSED pipeline ([[Curation.curate]]) cut every stage
+   * it materializes to a plan LEAF, nested operators included
+   * (minhashLsh, contamination — whose persistOnce calls it cannot see).
+   * A later plan then starts from that leaf instead of re-analyzing and
+   * re-printing every earlier stage, as a persisted frame's plan makes
+   * it (perfbench's traced curate: 40 jobs, over 10 s of plan building):
    *
-   *  - block-manager mode (`stagingPath` empty): persist at `level` and
-   *    RECORD the frame, so the caller can unpersist the whole set after
-   *    consuming the result — the repeated-batch-runs-in-one-driver
-   *    shape a one-shot ContextCleaner contract leaks under;
-   *  - parquet-staging mode: write the frame to
-   *    `stagingPath/stage-N` and return the read-back scan. Zero
-   *    storage-memory footprint and a TRUNCATED lineage (a 100 TB run's
-   *    corpus-sized text never occupies the block manager); cleanup is
-   *    deleting the directory. A frame that is already a bare file scan
-   *    (itself read back from staging, or the caller's own parquet
-   *    input) is returned as-is — it is already materialized on disk,
-   *    and re-staging it would copy corpus-sized text once more.
+   *  - block-manager mode (`stagingPath` empty): an eager
+   *    `localCheckpoint` at `level` (rows, not compressed columns; a
+   *    memory-only level gets disk spill added). Each checkpoint is
+   *    RECORDED, so a caller can release the set after consuming the
+   *    result — the repeated-batch-runs-in-one-driver shape — or leave
+   *    it to the ContextCleaner;
+   *  - parquet-staging mode: write the frame to `stagingPath/stage-N`
+   *    and return the read-back scan. Zero storage-memory footprint (a
+   *    100 TB run's corpus-sized text never occupies the block manager);
+   *    cleanup is deleting the directory.
+   *
+   * A frame that is already a leaf (a checkpoint, a staged read-back, the
+   * caller's own file input) is returned as-is: cutting it again would
+   * copy it once more.
    *
    * Thread-local because pipeline plans are CONSTRUCTED synchronously on
    * one driver thread; [[withMatCtx]] restores the previous context so
@@ -84,10 +89,10 @@ object Dedup {
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private var nextStage = 0
     def isStaging: Boolean = stagingPath.nonEmpty
-    def materialize(df: DataFrame): DataFrame = stagingPath match {
-      case Some(root) =>
-        if (isBareFileScan(df)) df
-        else {
+    def materialize(df: DataFrame): DataFrame =
+      if (isLeaf(df)) df
+      else stagingPath match {
+        case Some(root) =>
           val p = s"$root/stage-$nextStage"
           nextStage += 1
           // zstd, not the snappy default: stage files are written once
@@ -98,43 +103,22 @@ object Dedup {
           // footprint win at negligible read cost
           df.write.mode("overwrite").option("compression", "zstd").parquet(p)
           df.sparkSession.read.parquet(p)
-        }
-      case None =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-          df.persist(level)
-          df.count()
-          frames += df
-        }
-        df
-    }
+        case None =>
+          val cut = df.localCheckpoint(eager = true, level)
+          frames += cut
+          cut
+      }
   }
 
-  /** True iff the frame's optimized plan is a plain file-source relation
-    * (no projection/filter/join above it) — already materialized on
-    * disk, so parquet staging would only duplicate it. */
-  private def isBareFileScan(df: DataFrame): Boolean =
+  /** True iff the frame's optimized plan is a bare materialized relation
+    * (no projection/filter/join above it): a file-source scan or a
+    * checkpoint's `LogicalRDD`. */
+  private def isLeaf(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-      case _: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation => false
-      case r if r.getClass.getSimpleName == "DataSourceV2Relation" => true
-      case _ => false
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case r => r.getClass.getSimpleName == "DataSourceV2Relation"
     }
-
-  /** [[persistOnce]] for frames that are CHEAP DERIVATIONS — a filter or
-    * an anti-join against a small id frame — of inputs persistOnce
-    * already materialized. Block-manager modes persist as usual (memory
-    * is the managed resource there, and a cache beats re-running even a
-    * cheap join per consumer); parquet-STAGING mode returns the frame
-    * unstaged: its corpus-sized payload already lives in the parent's
-    * stage file, so staging it again copies the corpus to disk once more
-    * per stage — at the 5M-doc stress the four survivor-text copies plus
-    * the shingle frame outgrew the box's disk (dev/ROUND12.md) — while
-    * each consumer can re-derive it with a pushdown-friendly scan of the
-    * parent's parquet. */
-  private[graft] def persistOnceDerived(df: DataFrame): DataFrame = {
-    val ctx = matCtx.get
-    if (ctx != null && ctx.isStaging) df else persistOnce(df)
-  }
 
   private val matCtx = new ThreadLocal[MatCtx]
 
@@ -147,6 +131,13 @@ object Dedup {
     try body
     finally if (prev == null) matCtx.remove() else matCtx.set(prev)
   }
+
+  /** Run `body` under this thread's [[MatCtx]], or if none, under a
+    * `MEMORY_AND_DISK` one left to the ContextCleaner. */
+  private[graft] def withStageCuts[A](body: => A): A =
+    if (matCtx.get != null) body
+    else withMatCtx(new MatCtx(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, None))(body)
 
   /** True set Jaccard of two string-array columns — the single verify
     * expression every LSH candidate path thresholds on (incremental,

@@ -28,10 +28,11 @@ object graftshims {
     * pins its materialized RDD in executor storage until the driver GCs
     * the Dataset and the ContextCleaner catches up — an iterative
     * algorithm (label propagation) checkpointing per round would pile up
-    * one full copy per round. No-op for non-checkpoint plans. */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
+    * one full copy per round. `blocking` waits until the blocks are
+    * removed. No-op for non-checkpoint plans. */
+  def unpersistCheckpoint(df: Dataset[_], blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: execution.LogicalRDD => l.rdd.unpersist(blocking)
       case _ =>
     }
 }

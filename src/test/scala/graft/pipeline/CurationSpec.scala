@@ -170,6 +170,17 @@ class CurationSpec extends SparkSpec {
     val eval = Seq(100000L -> bases(0)).toDF("doc_id", "text")
     val rows = collect(Curation.curate(docs, eval))
     assert(rows.length === 200, "one audit row per input doc")
+    // where the stage leaves live (in-memory checkpoints, disk-only
+    // checkpoints, parquet stage files) must not change a single row
+    val onDisk = Curation.curateManaged(docs, eval,
+      storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    assert(collect(onDisk.audit) === rows, "DISK_ONLY checkpoints changed the audit")
+    onDisk.unpersist(blocking = true)
+    val stagingDir = java.nio.file.Files.createTempDirectory("graft-curation-equiv")
+      .toFile.getAbsolutePath
+    val staged = Curation.curateManaged(docs, eval, stagingPath = Some(stagingDir))
+    assert(collect(staged.audit) === rows, "parquet staging changed the audit")
+    staged.cleanup()
     val textOf = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     rows.foreach { r =>
       val id = r.getLong(0)
@@ -238,8 +249,8 @@ class CurationSpec extends SparkSpec {
 
   // distinct doc ids + a salt token per text so these fixtures never
   // structurally match frames the OTHER tests cached — the CacheManager
-  // matches plans structurally, and a hit would hand the managed run a
-  // pre-existing cache, making its registration/unpersist untestable
+  // matches plans structurally, and a hit would let a run read another
+  // test's cache instead of its own stages
   private def saltedFixture(salt: String, base: Long) = {
     val s = spark
     import s.implicits._
@@ -253,24 +264,53 @@ class CurationSpec extends SparkSpec {
     (corpus, eval)
   }
 
+  /** The RDDs behind a frame's checkpoint leaves. */
+  private def checkpointRdds(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
   test("curateManaged: matches curate, owns its caches, unpersist releases them") {
     import org.apache.spark.storage.StorageLevel
     val (corpus, eval) = saltedFixture("mgdsalt", 2000L)
-    // managed FIRST: a prior curate() on the same data would have cached
-    // structurally-identical frames, so persistOnce would see them
-    // already pinned and register nothing
     val run = Curation.curateManaged(corpus, eval,
       storageLevel = StorageLevel.DISK_ONLY)
     val managed = collect(run.audit)
     assert(run.staging.isEmpty)
-    assert(run.caches.nonEmpty, "the run must own the caches it registered")
-    assert(run.caches.forall(_.storageLevel == StorageLevel.DISK_ONLY),
-      "storageLevel must govern every registered cache, nested operators included")
+    assert(run.caches.nonEmpty, "the run must own the checkpoints it made")
+    val rdds = run.caches.flatMap(checkpointRdds)
+    assert(rdds.size === run.caches.size, "every owned frame is one checkpoint")
+    assert(rdds.forall(_.getStorageLevel == StorageLevel.DISK_ONLY),
+      "storageLevel must govern every checkpoint, nested operators included")
     val plain = collect(Curation.curate(corpus, eval))
     assert(managed === plain)
     run.unpersist(blocking = true)
-    assert(run.caches.forall(_.storageLevel == StorageLevel.NONE),
-      "unpersist must release every registered cache")
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => !live.contains(r.id)),
+      "unpersist must release every checkpoint the run made")
+  }
+
+  test("curation stages are plan leaves: no later plan embeds the input docs") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (corpus, eval) = saltedFixture("leafsalt", 4000L)
+    def leavesAreCheckpoints(audit: org.apache.spark.sql.DataFrame): Unit = {
+      val leaves = audit.queryExecution.analyzed.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
+        s"every audit leaf must be a stage checkpoint, got: ${leaves.map(_.nodeName)}")
+    }
+    val run = Curation.curateManaged(corpus, eval)
+    assert(run.caches.nonEmpty)
+    run.caches.foreach { f =>
+      assert(f.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        s"a stage frame must be a bare checkpoint: ${f.queryExecution.analyzed}")
+    }
+    leavesAreCheckpoints(run.audit)
+    val managed = collect(run.audit)
+    run.unpersist(blocking = true)
+    // curate cuts its stages the same way, without a caller-owned run
+    val audit = Curation.curate(corpus, eval)
+    leavesAreCheckpoints(audit)
+    assert(collect(audit) === managed)
   }
 
   test("curateManaged staging mode: zero block-manager caches, cleanup deletes the stage files") {
