@@ -97,6 +97,11 @@ object ScaleStress {
     }
     servingFloor(diskIdx, s"epoch-backed WARM (${hotLists.size}/1024 lists persisted):")
     warmedDF.unpersist(blocking = false)
+    // every list resident as packed blocks (what the facade serves from):
+    // one scoring job per batch, no SQL plan, no parquet decode
+    timed("keepResident: load all 1024 lists as resident blocks") { diskIdx.keepResident() }
+    servingFloor(diskIdx, "epoch-backed RESIDENT (all lists as blocks):")
+    diskIdx.releaseResident()
     // higher-nlist point (the reference's sizing table puts 1M vectors at
     // nlist=4096): each batch-64 x nprobe=10 probes <=640/4096 ≈ 16% of
     // lists instead of ~half, so the per-batch scan shrinks ~4x — the

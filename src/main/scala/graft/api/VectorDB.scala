@@ -56,8 +56,9 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     * concurrent builds for one index are rejected). */
   private val builds = TrieMap.empty[String, java.util.concurrent.atomic.AtomicReference[Double]]
 
-  /** DataFrames persisted by warmup, released when the epoch reloads —
-    * without this every reload/warmup cycle would leak one cached copy. */
+  /** DataFrames persisted by warmup, released when the epoch reloads and
+    * on [[close]] — without this every reload/warmup cycle would leak one
+    * cached copy. */
   private val warmed = TrieMap.empty[String, List[DataFrame]]
 
   /** A10 metrics: per-index search latency histograms, fed execution wall
@@ -516,8 +517,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
 
   private def loadServed(name: String, epochId: String): Unit = {
     // release caches pinned against the previous serve state
-    warmed.remove(name).foreach(_.foreach(_.unpersist(blocking = false)))
-    hotWarm.remove(name).foreach(_._2.unpersist(blocking = false))
+    releaseWarm(name)
     // a DIFFERENT epoch remaps list ids (retrain) — stale hotness stats
     // would make warmupHot pin the wrong partitions. Same-epoch reloads
     // (addVectors append) keep their stats.
@@ -561,7 +561,13 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     if (new java.io.File(radiiPath).exists)
       index.presetListRadii(
         IvfFlatIndex.readListRadiiTable(spark, radiiPath, manifest.nlist))
+    // bounded searches score resident list blocks (a same-epoch reload
+    // reads only the appended files); the superseded index's blocks go
+    // once the swap is visible (a search still holding it re-reads its
+    // own files)
+    index.keepResident(prev.flatMap(_.index.residentLists))
     served.put(name, Served(manifest, index, epochId))
+    prev.foreach(_.index.releaseResident())
   }
 
   /** SQL-surface state this facade owns, per index: the registered epoch
@@ -956,7 +962,10 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     * design: an unchanged hot set returns 0 without touching the cache;
     * a drifted one pins the new subset and releases the previous — so
     * wiring this into a serving loop ([[graft.streaming.StreamingSearch
-    * .serve]]'s `warmupEvery`) never accumulates stale cached copies. */
+    * .serve]]'s `warmupEvery`) never accumulates stale cached copies.
+    * Like [[warmup]], it speeds only the predicate, flood and SQL paths:
+    * bounded predicate-free searches read resident list blocks. Released
+    * on the next epoch load and on [[close]]. */
   def warmupHot(name: String, topN: Int = 10): Long = {
     val hot = hotLists(name, topN).map(_._1)
     if (hot.isEmpty) return 0L
@@ -1131,7 +1140,13 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
   /**
    * C6/A2: pin the given lists (or all) into executor memory — persist +
    * materialize the pruned partitions, the Spark analog of preloading
-   * lists to the GPU (server/query_service.cpp:170-204).
+   * lists to the GPU (server/query_service.cpp:170-204). Bounded
+   * predicate-free searches already score the served epoch's resident
+   * list blocks, so this now speeds only the paths that still scan the
+   * epoch through SQL: predicate searches ([[IvfFlatIndex.searchWhere]]),
+   * floods above [[IvfFlatIndex.MaxStaticBatch]] and the SQL surface
+   * ([[registerSql]]) when the cached fragment substitutes into its plan.
+   * Released on the next epoch load and on [[close]].
    */
   def warmup(name: String, listIds: Seq[Int] = Nil): Long = {
     val s = served.getOrElse(name, throw new NotFoundException(s"Index not found: $name"))
@@ -1141,6 +1156,12 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     subset.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     warmed.updateWith(name)(old => Some(subset :: old.getOrElse(Nil)))
     subset.count()
+  }
+
+  /** Unpersist the [[warmup]] and [[warmupHot]] frames pinned for `name`. */
+  private def releaseWarm(name: String): Unit = {
+    warmed.remove(name).foreach(_.foreach(_.unpersist(blocking = false)))
+    hotWarm.remove(name).foreach(_._2.unpersist(blocking = false))
   }
 
   /** Plan/codegen warmup (round 19, r18 verdict #2): compile the PQ/flat
@@ -1161,7 +1182,13 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
   /** (total vectors, active epoch, nlist, dimension) of the serving index,
     * plus the k-means list-imbalance factor (max list / mean list size —
     * 1.0 is perfectly balanced; large values mean hot partitions and are
-    * the signal to retrain or raise filesPerList). */
+    * the signal to retrain or raise filesPerList), and the resident list
+    * blocks bounded searches score: `resident_vectors` loaded at the last
+    * epoch load, and `resident_bytes` by the cost model n x (4·dim + 24)
+    * (0 and 0 when the epoch could not be held resident). Both count what
+    * was loaded: a block the block manager evicts is re-read from the
+    * epoch files by the next search that probes it, so eviction costs
+    * latency, never results, and does not change these figures. */
   def stats(name: String): Map[String, Any] = {
     val s = served.getOrElse(name, throw new NotFoundException(s"Index not found: $name"))
     val sizes = s.manifest.shards.map(_.numVectors)
@@ -1177,6 +1204,8 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       "metric" -> s.manifest.metric.toString,
       "num_shards" -> s.manifest.shards.size,
       "list_imbalance" -> imbalance,
+      "resident_vectors" -> s.index.residentLists.map(_.vectors).getOrElse(0L),
+      "resident_bytes" -> s.index.residentLists.map(_.bytes).getOrElse(0L),
       // probe-map evictions attributed to THIS facade (non-zero = some of
       // its plans' stats callbacks were dropped — see metricsText HELP)
       "probe_refire_evictions" ->
@@ -1304,6 +1333,23 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       sb.append(s"""vdb_searches_total{index="$lbl"} ${h.count}""")
       sb.append('\n')
     }
+    // resident list blocks per served index (see stats(): vectors loaded
+    // at the last epoch load, bytes by n x (4·dim + 24); eviction re-reads
+    // a block from the epoch files on demand and leaves these unchanged)
+    val residents = served.toSeq.sortBy(_._1)
+      .map { case (name, s) => (promLabel(name), s.index.residentLists) }
+    sb.append("# HELP vdb_resident_vectors Vectors held in resident list blocks for bounded searches\n")
+    sb.append("# TYPE vdb_resident_vectors gauge\n")
+    residents.foreach { case (lbl, r) =>
+      sb.append(s"""vdb_resident_vectors{index="$lbl"} ${r.map(_.vectors).getOrElse(0L)}""")
+      sb.append('\n')
+    }
+    sb.append("# HELP vdb_resident_bytes Resident list block bytes, modeled as vectors x (4 x dim + 24)\n")
+    sb.append("# TYPE vdb_resident_bytes gauge\n")
+    residents.foreach { case (lbl, r) =>
+      sb.append(s"""vdb_resident_bytes{index="$lbl"} ${r.map(_.bytes).getOrElse(0L)}""")
+      sb.append('\n')
+    }
     val withRecall = searchRecall.toSeq.filter(_._2._1.get() > 0).sortBy(_._1)
     if (withRecall.nonEmpty) {
       sb.append("# HELP vdb_search_recall Measured recall@k vs the exact scan (mean)\n")
@@ -1359,15 +1405,18 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     sb.toString
   }
 
-  /** Discard this facade: drop the serving map and check this instance's
-    * per-owner probe-eviction counters out of the JVM-global registry —
-    * without the checkout, facade churn in a long-lived multi-tenant
-    * driver grows that registry one permanent entry per facade ever
-    * created. Spark-side caches (warmed partitions, broadcasts) follow
-    * the SparkSession's lifecycle as before; this facade must simply not
-    * be used after close(). */
+  /** Discard this facade: drop the serving map, release the served
+    * indexes' resident list blocks and the [[warmup]]/[[warmupHot]]
+    * frames, and check this instance's per-owner probe-eviction counters
+    * out of the JVM-global registry — without the checkout, facade churn
+    * in a long-lived multi-tenant driver grows that registry one
+    * permanent entry per facade ever created. Broadcasts follow the
+    * SparkSession's lifecycle as before; this facade must simply not be
+    * used after close(). */
   def close(): Unit = {
+    served.values.foreach(_.index.releaseResident())
     served.clear()
+    (warmed.keySet ++ hotWarm.keySet).foreach(releaseWarm)
     sqlRegistered.values.foreach { case (path, view, token, books) =>
       books.foreach(_.unpersist(blocking = false))
       // the view teardown follows the SAME token guard as the registry

@@ -23,6 +23,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * plans. Both maps are bounded: never-executed callbacks age out of the
  * pending map, fired ones out of a small re-fire map — a long-lived
  * serving driver retains neither.
+ *
+ * A resident search ([[ResidentTopKNode]]) takes no `observe()` node: its
+ * leaf runs the callbacks itself after each execution.
  */
 private[graft] object ExecutionProbeHook {
 
@@ -217,12 +220,17 @@ private[graft] object ExecutionProbeHook {
   /** [[arm]] flavor whose callback also receives the execution's wall
     * duration in nanoseconds (the listener's durationNs) — feeds the A10
     * per-index latency histograms without a second timing source. */
-  def armTimed(df: DataFrame, fire: Long => Unit, owner: String = ""): DataFrame = {
-    ensureListener(df.sparkSession)
-    val name = Prefix + counter.incrementAndGet()
-    pending.put(name, Probe(owner, fire))
-    df.observe(name, count(lit(1)))
-  }
+  def armTimed(df: DataFrame, fire: Long => Unit, owner: String = ""): DataFrame =
+    // a resident search fires its own callbacks from its plan leaf, once
+    // per execution: an observe() node above it would turn its one-job
+    // collect into two jobs. Same contract, minus the maps — a closed
+    // owner's callback simply stops firing
+    ResidentTopK.withCallback(df, ns => if (!isReleased(owner)) fire(ns)).getOrElse {
+      ensureListener(df.sparkSession)
+      val name = Prefix + counter.incrementAndGet()
+      pending.put(name, Probe(owner, fire))
+      df.observe(name, count(lit(1)))
+    }
 
   private def ensureListener(spark: SparkSession): Unit =
     registered.synchronized {

@@ -1,11 +1,15 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, graftshims}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.{Metric, SearchParams}
 import graft.functions.vector
@@ -15,9 +19,16 @@ import graft.kmeans.Lloyd
  * IVF-Flat index on Spark (reference engine/ivf_flat_index.cpp). The
  * inverted lists are a Hive-partitioned Parquet table (`list_id=<n>/`),
  * the centroids a broadcast matrix, and a search is S2 -> S3 -> S5
- * composed (ivf_flat_index.cpp:205-256) along one of three paths:
+ * composed (ivf_flat_index.cpp:205-256) along one of four paths:
  *
- *  - **static** (a bounded batch): driver probe -> [[ListScanTopK]] over
+ *  - **resident** (a bounded batch with no predicate, on an index whose
+ *    lists are held resident — [[keepResident]], which the serving
+ *    facade calls on every epoch it loads): driver probe -> ONE Spark job
+ *    over the [[ResidentLists]] groups that hold probed lists, scoring
+ *    into per-query [[TopKBuf]]s -> driver merge + rank. No SQL plan, no
+ *    parquet decode, no shuffle;
+ *  - **static** (a bounded batch otherwise — with a predicate, or on an
+ *    index without resident lists): driver probe -> [[ListScanTopK]] over
  *    the `list_id IN (...)` partition-pruned scan (the Spark equivalent of
  *    "only load the probed lists") -> [[RankTopK]] merge + rank;
  *  - **flood below the broadcast gate**: probed query rows ship through
@@ -27,7 +38,8 @@ import graft.kmeans.Lloyd
  *    queries and corpus on list_id.
  *
  * Every path keeps the reference's partial/merge shape: per-list top-k
- * buffers, then one merge per query.
+ * buffers, then one merge per query, and every path returns the same
+ * rows (same distances, same (dist, id) ranks).
  *
  * @param vectors   (id LONG, vec ARRAY<FLOAT>, list_id INT) — usually a
  *                  partitionBy("list_id") epoch read
@@ -68,6 +80,8 @@ class IvfFlatIndex(
    *    the parquet scan as a PartitionFilter, so a 100 TB corpus reads only
    *    nprobe/nlist of its partitions. This is the Spark equivalent of the
    *    reference loading only the probed lists (ivf_flat_index.cpp:238).
+   *    On an index holding its lists resident ([[keepResident]]) the same
+   *    pairs instead select the resident groups one scoring job reads.
    *
    *  - **join pruning** (larger batches, e.g. index-wide self-join):
    *    fully-distributed broadcast equi-join on list_id with no driver
@@ -124,11 +138,13 @@ class IvfFlatIndex(
     searchBatchManaged(batch, params, predicate)._1
 
   /**
-   * [[searchBatch]] plus a release handle for the call's broadcast state
-   * (the query map). Each batch search ships one broadcast; in a one-shot
-   * query that is garbage, but a long-lived serving loop accumulates one
-   * per micro-batch until the ContextCleaner happens to run — executor
-   * block managers fill with dead broadcast blocks. The serving loop
+   * [[searchBatch]] plus a release handle for the call's broadcast state.
+   * The resident path ships no broadcast (the batch rides in the one
+   * scoring job's tasks), so its release is a no-op. The static path
+   * ships one broadcast, the query map: in a one-shot query that is
+   * garbage, but a long-lived serving loop accumulates one per
+   * micro-batch until the ContextCleaner happens to run — executor block
+   * managers fill with dead broadcast blocks. The serving loop
    * ([[graft.streaming.StreamingSearch.serve]]) calls release() after the
    * sink consumed the batch. Release DESTROYS the broadcast (unpersist
    * would leave the driver-resident block alive — in local mode, i.e.
@@ -141,7 +157,6 @@ class IvfFlatIndex(
       predicate: Option[org.apache.spark.sql.Column] = None): (DataFrame, () => Unit) = {
     val m = params.metric.getOrElse(metric)
     val nprobe = math.min(params.nprobe, nlist)
-    val corpus = predicate.map(vectors.filter).getOrElse(vectors)
     // null query vectors yield no rows — the SAME semantics as every
     // other path (Knn.exact, rangeSearch, the unbounded join path's
     // silent explode-drop): a throw here would make behavior flip at
@@ -152,13 +167,51 @@ class IvfFlatIndex(
     // the batch is already on the driver — probe it here (parallel
     // chunks) instead of scheduling a one-partition Spark job
     val pairs = IvfFlatIndex.localProbe(live, centroids.value, nprobe, m)
-    // ONE broadcast carries the batch's vectors (once, never replicated
-    // per probe) plus the per-list probe positions — the shared-query-
-    // cache idea of kernels.cuh:111-117 in Spark terms
-    val bcP = spark.sparkContext.broadcast(ProbeIndex(live, pairs, nlist))
-    (searchStaticPruned(corpus, pairs, bcP, params.k, m),
-      () => bcP.destroy())
+    // the batch's vectors once (never replicated per probe) plus the
+    // per-list probe positions — the shared-query-cache idea of
+    // kernels.cuh:111-117 in Spark terms
+    val probes = ProbeIndex(live, pairs, nlist)
+    resident.filter(_ => predicate.isEmpty && live.length <= IvfFlatIndex.MaxStaticBatch) match {
+      case Some(r) =>
+        val query = new ResidentQuery(r, probes.qids, probes.qvecs, probes.listPos, params.k, m.id)
+        (observed(ResidentTopK(spark, query), pairs), () => ())
+      case None =>
+        val corpus = predicate.map(vectors.filter).getOrElse(vectors)
+        val bcP = spark.sparkContext.broadcast(probes)
+        (searchStaticPruned(corpus, pairs, bcP, params.k, m), () => bcP.destroy())
+    }
   }
+
+  /** Holds this index's lists resident ([[ResidentLists]]) for bounded
+    * searches: loads and materializes them (one Spark job) unless already
+    * held, extending `previous` (an earlier load of the same epoch) when
+    * it can. A no-op when `vectors` is not a list-partitioned parquet
+    * epoch read ([[IvfFlatIndex.readEpoch]]) — such an index keeps its
+    * SQL path. */
+  private[graft] def keepResident(previous: Option[ResidentLists] = None): Unit =
+    this.synchronized {
+      if (resident.isEmpty) resident = ResidentLists.build(vectors, nlist, dimension, previous)
+    }
+
+  /** Drops the resident lists; later searches take the static path, and
+    * searches already built keep working (their groups recompute from the
+    * epoch files). */
+  private[graft] def releaseResident(): Unit = this.synchronized {
+    resident.foreach(_.release())
+    resident = None
+  }
+
+  /** The resident lists, when held. */
+  private[graft] def residentLists: Option[ResidentLists] = resident
+
+  @volatile private var resident: Option[ResidentLists] = None
+
+  /** `result` with this index's probe listener attached per execution
+    * (stats record when the plan RUNS, not here at construction — an
+    * abandoned DataFrame must leave hot-list stats untouched). */
+  private def observed(result: DataFrame, pairs: Array[(Long, Int)]): DataFrame =
+    if (probeListener eq IvfFlatIndex.NoopProbeListener) result
+    else ExecutionProbeHook.arm(result, () => probeListener(pairs), probeOwner)
 
   private def searchStaticPruned(
       corpus: DataFrame, pairs: Array[(Long, Int)],
@@ -175,12 +228,8 @@ class IvfFlatIndex(
       new FlatListScorer(probeIdx, m.id), k)
     // a list-scan partial keeps its corpus side's estimate (Sizing)
     val parts = Sizing.mergeParts(spark, Sizing.bytes(corpus))
-    val result = TopKAggregator.finalizePartial(partial, k, parts)
-      .select("qid", "id", "dist", "rank")
-    // stats record when the plan RUNS, not here at construction — an
-    // abandoned DataFrame must leave hot-list stats untouched
-    if (probeListener eq IvfFlatIndex.NoopProbeListener) result
-    else ExecutionProbeHook.arm(result, () => probeListener(pairs), probeOwner)
+    observed(TopKAggregator.finalizePartial(partial, k, parts)
+      .select("qid", "id", "dist", "rank"), pairs)
   }
 
   /**
@@ -664,6 +713,9 @@ object IvfFlatIndex {
    * recursive `listFiles` made appends slower, its listing growing from
    * 0.9 s to 2.0 s as files accumulated).
    *
+   * The data schema comes from the first file's footer, read on the
+   * driver ([[footerSchema]]), so opening an epoch runs no Spark job.
+   *
    * Trade-off: the walk is sequential, one `listStatus` per list
    * directory. On a high-latency object store at nlist 4096 that is
    * 4,097 sequential LIST calls where the job ran them in parallel.
@@ -674,12 +726,23 @@ object IvfFlatIndex {
     val root = fs.makeQualified(raw)
     val cache = new PrelistedFiles(root, listVisibleFiles(fs, root))
     val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None, cache)
-    val format = new ParquetFileFormat
-    val dataSchema = format.inferSchema(spark, Map.empty, index.allFiles())
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no parquet files to infer an epoch schema from under $root"))
+    val first = index.allFiles().headOption.getOrElse(throw new java.io.FileNotFoundException(
+      s"no parquet files to read an epoch schema from under $root"))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      graftshims.asNullable(dataSchema), None, format, Map.empty)(spark))
+      graftshims.asNullable(footerSchema(spark, first)), None, new ParquetFileFormat,
+      Map.empty)(spark))
+  }
+
+  /** The schema of one parquet file, from its footer, read on the driver:
+    * what `ParquetFileFormat.inferSchema` returns for a directory of data
+    * files without summary files (it reads the first file's footer), minus
+    * the one-task Spark job it runs to read it. */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** Every visible leaf file under `dir`, one `listStatus` per directory.

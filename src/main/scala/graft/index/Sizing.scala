@@ -173,6 +173,14 @@ object Sizing {
     else parts(bytes, bytesPerTask, maxP)
   }
 
+  /** Partitions of a served epoch's resident list blocks
+    * ([[ResidentLists]]): one per core, so a bounded search scores every
+    * probed group at once in a single wave, but never more than half the
+    * loaded lists — at one list per partition a batch probing most lists
+    * would schedule one task per list. */
+  def residentParts(spark: SparkSession, lists: Int): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism, lists / 2))
+
   /** Run `body` with the broadcast gate pinned to `gateBytes` (plan paths
     * are chosen at construction, so restoring afterwards is safe). */
   def withGate[T](spark: SparkSession, gateBytes: String)(body: => T): T = {

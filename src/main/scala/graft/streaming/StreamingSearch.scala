@@ -26,18 +26,22 @@ object StreamingSearch {
    * Start a serving loop: `queryStream` is a streaming DataFrame of
    * (qid LONG, qvec ARRAY<FLOAT>); each micro-batch is searched as one
    * batch and handed to `sink` with the batch id. The per-batch broadcast
-   * state (query map) is released as soon as the sink returns — a serving
-   * loop runs for days, and without the release every micro-batch leaks
-   * one broadcast into the executors' block managers until a driver GC
-   * happens to trigger the ContextCleaner.
+   * state (query map; none on the resident path) is released as soon as
+   * the sink returns — a serving loop runs for days, and without the
+   * release every micro-batch leaks one broadcast into the executors'
+   * block managers until a driver GC happens to trigger the
+   * ContextCleaner.
    *
    * `warmupEvery` > 0 invokes `warm` after every N SERVED (non-idle)
    * micro-batches — the LFU-stats → hot-list preload loop (pass
    * `() => db.warmupHot(name)`: re-entrant, free while the working set is
-   * stable; measured on the 1M x 128D epoch-backed serving shape it moves
-   * the batch-64 floor p50 ~314 → ~195 ms). Runs on the foreachBatch
-   * thread, so the first call after a drift pays its materialization
-   * inside one trigger — the steady-state calls are set-compare no-ops.
+   * stable). Its measured gain, the batch-64 floor p50 ~314 → ~195 ms on
+   * the 1M x 128D epoch-backed serving shape, predates resident list
+   * blocks: an index the facade serves now scores bounded batches from
+   * resident blocks, and the warm frames speed only its predicate,
+   * flood and SQL paths. Runs on the foreachBatch thread, so the first
+   * call after a drift pays its materialization inside one trigger — the
+   * steady-state calls are set-compare no-ops.
    */
   def serve(
       index: IvfFlatIndex,

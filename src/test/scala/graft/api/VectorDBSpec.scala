@@ -115,13 +115,25 @@ class VectorDBSpec extends SparkSpec {
     }
   }
 
-  test("epoch-backed search prunes the parquet scan (PartitionFilters on list_id)") {
+  test("epoch-backed search scores only probed lists (numCandidates, nprobe 1 of 4)") {
     ready
-    // nprobe=1 of nlist=4: the probed lists reach the on-disk epoch scan as
-    // a partition filter — the Spark analog of loading only probed lists
-    val plan = db.search("test_index", qs, topk = 5, nprobe = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [list_id"), s"no partition pruning in:\n$plan")
+    // nprobe=1 of nlist=4: the resident search scores each query against
+    // its one probed list and nothing else — the analog of loading only
+    // the probed lists
+    val df = db.search("test_index", qs, topk = 5, nprobe = 1)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("ResidentTopK"), s"not the resident path:\n$plan")
+    val idx = db.served("test_index").index
+    val rowsPerList = idx.vectors.groupBy("list_id").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val expected = randomVectors(5, 8, seed = 7).map { case (_, q) =>
+      val list = graft.functions.VectorKernels.probeLists(q, idx.centroids.value, 1, idx.metric.id).head
+      rowsPerList.getOrElse(list, 0L)
+    }.sum
+    val scored = plan.collect { case p => p.metrics.get("numCandidates") }.flatten.map(_.value).sum
+    assert(scored === expected)
+    assert(scored < 5L * rowsPerList.values.sum, "every list was scored")
   }
 
   test("buildEpoch warm-start uses the given centroids verbatim") {
@@ -363,6 +375,41 @@ class VectorDBSpec extends SparkSpec {
     org.apache.spark.sql.graftshims.drainListenerBus(spark)
     assert(db.hotLists("test_index", topN = 1000).map(_._2).sum === before + 2 * 5 * 2,
       "two executions should record exactly twice")
+  }
+
+  test("close() releases warm frames and resident blocks; one block RDD per served index") {
+    import org.apache.spark.sql.functions.col
+    val ldb = new VectorDB(spark, Files.createTempDirectory("graft-release").toString)
+    def blockRdds = spark.sparkContext.getPersistentRDDs.values
+      .filter(r => Option(r.name).exists(n => n.startsWith("resident lists") && n.contains(ldb.dataPath)))
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    var warm = Seq.empty[org.apache.spark.sql.DataFrame]
+    try {
+      ldb.createIndex(IndexConfig("rl", dimension = 8, nlist = 8))
+      ldb.activateEpoch("rl", ldb.buildEpoch("rl", vectorsDF(randomVectors(600, 8, seed = 31))))
+      assert(blockRdds.size === 1, "after activateEpoch")
+      for (round <- 1 to 2) {
+        ldb.addVectors("rl", vectorsDF(randomVectors(50, 8, seed = 40 + round)
+          .map { case (i, v) => (round * 10000L + i, v) }))
+        assert(blockRdds.size === 1, s"after append $round")
+      }
+      ldb.compactEpoch("rl")
+      assert(blockRdds.size === 1, "after compactEpoch")
+      assert(ldb.stats("rl")("resident_vectors") === 700L)
+      assert(ldb.stats("rl")("resident_bytes") === 700L * (4 * 8 + 24))
+      assert(ldb.metricsText().contains("vdb_resident_vectors{index=\"rl\"} 700"))
+      assert(ldb.metricsText().contains(s"vdb_resident_bytes{index=\"rl\"} ${700 * 56}"))
+      ldb.search("rl", qs, topk = 3, nprobe = 2).collect()
+      assert(ldb.warmup("rl", Seq(0, 1)) > 0)
+      assert(ldb.warmupHot("rl", topN = 2) > 0)
+      val vectors = ldb.served("rl").index.vectors
+      warm = Seq(vectors.filter(col("list_id").isin(0, 1)),
+        vectors.filter(col("list_id").isin(ldb.hotLists("rl", 2).map(_._1): _*)))
+      assert(warm.forall(cached))
+    } finally ldb.close()
+    assert(!warm.exists(cached), "a warm frame survived close()")
+    assert(blockRdds.isEmpty, "resident blocks survived close()")
   }
 
   test("health checks mirror the reference's service matrix (A10)") {

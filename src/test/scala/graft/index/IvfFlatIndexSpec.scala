@@ -223,6 +223,27 @@ class IvfFlatIndexSpec extends SparkSpec {
     assert(epoch.count() === 1057)
   }
 
+  test("readEpoch opens an epoch without scheduling a Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-epochjobs").toString
+    IvfFlatIndex.writeEpoch(index.vectors, s"$tmp/vectors")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftshims.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val epoch =
+      try {
+        val e = IvfFlatIndex.readEpoch(spark, s"$tmp/vectors")
+        org.apache.spark.sql.graftshims.drainListenerBus(spark)
+        e
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() === 0, s"readEpoch ran ${jobs.get()} job(s)")
+    assert(epoch.schema === spark.read.parquet(s"$tmp/vectors").schema)
+  }
+
   test("null vectors never enter the top-k (nulls would win an ascending sort)") {
     val s = spark
     import s.implicits._

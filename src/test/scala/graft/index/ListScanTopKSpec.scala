@@ -166,12 +166,20 @@ class ListScanTopKSpec extends SparkSpec {
     IvfFlatIndex.writeEpoch(flat.vectors, s"$tmp/vectors")
     val epochIdx = new IvfFlatIndex(
       spark, IvfFlatIndex.readEpoch(spark, s"$tmp/vectors"), flat.centroids, Metric.L2)
-    val df = epochIdx.searchBatch(queries.take(2).toArray, SearchParams(k = 3, nprobe = 2))
+    // with its lists resident, only a predicate search still plans the
+    // list-scan operator over the pruned parquet scan
+    epochIdx.keepResident()
+    val batch = queries.take(2).toArray
+    val params = SearchParams(k = 3, nprobe = 2)
+    assert(epochIdx.searchBatch(batch, params).queryExecution.executedPlan
+      .toString.contains("ResidentTopK"))
+    val df = epochIdx.searchBatch(batch, params, Some(col("id") >= 0))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.startsWith("!") && !plan.contains("\n!"),
       s"invalid node in plan:\n$plan")
     assert(plan.contains("ListScanTopK"), s"operator missing from plan:\n$plan")
     assert(plan.contains("PartitionFilters: [list_id"), s"no static pruning:\n$plan")
     df.collect() // executes cleanly
+    epochIdx.releaseResident()
   }
 }
