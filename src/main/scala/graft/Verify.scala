@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.storage.LocalWrites._
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,7 +34,7 @@ object Verify {
       val worker = new Thread(() =>
         try {
           spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          fn(spark, sfDir).coalesce(1).graftWrite.mode("overwrite")
             .parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")

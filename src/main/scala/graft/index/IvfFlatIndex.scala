@@ -14,6 +14,7 @@ import org.apache.spark.sql.types.StructType
 import graft.{Metric, SearchParams}
 import graft.functions.vector
 import graft.kmeans.Lloyd
+import graft.storage.LocalWrites._
 
 /**
  * IVF-Flat index on Spark (reference engine/ivf_flat_index.cpp). The
@@ -656,7 +657,7 @@ object IvfFlatIndex {
    */
   def writeEpoch(assigned: DataFrame, epochPath: String, filesPerList: Int = 1): Unit =
     clusterByList(assigned, filesPerList)
-      .write
+      .graftWrite
       .mode("overwrite")
       .partitionBy("list_id")
       .parquet(epochPath)
@@ -664,15 +665,17 @@ object IvfFlatIndex {
   /** Hash rows to writers by list (and `filesPerList` slot), with an
     * EXPLICIT partition count: the session's `spark.sql.shuffle.partitions`,
     * the count the exchange plans anyway. A list-partitioned write costs
-    * per FILE, not per byte — on the local filesystem every file create
-    * and every `mkdir` forks a `chmod` (`RawLocalFileSystem.setPermission`
-    * -> `Shell.runCommand`) — so AQE's byte-based coalescing, which folds
-    * an append's few-hundred-KB shuffle into ONE partition, serialises
-    * all ~nlist file creations onto one task (1.0-1.24 s of a 2.4 s
-    * append at nlist 128 on 4 cores). A REPARTITION_BY_NUM exchange is
-    * never coalesced, so the writes spread over every core, while each
-    * (list, slot) still hashes to exactly one writer: one file per
-    * touched list per append, as before. */
+    * per FILE, not per byte: every touched list gets a directory, a data
+    * file and its `.crc`, each with its own parquet writer, permission
+    * and commit rename. Since setting a permission stopped forking a
+    * `chmod` ([[graft.storage.LocalWrites]]), the nlist-128 append's write
+    * job takes 0.24-0.42 s on 4 cores (0.9-1.1 s with the forks), and the
+    * per-file work that remains is most of it. AQE's byte-based
+    * coalescing would fold an append's few-hundred-KB shuffle into ONE
+    * partition and serialise all ~nlist file creations onto one task. A
+    * REPARTITION_BY_NUM exchange is never coalesced, so the writes spread
+    * over every core, while each (list, slot) still hashes to exactly one
+    * writer: one file per touched list per append. */
   private def clusterByList(assigned: DataFrame, filesPerList: Int): DataFrame = {
     val n = assigned.sparkSession.sessionState.conf.numShufflePartitions
     if (filesPerList <= 1) assigned.repartition(n, col("list_id"))
@@ -689,7 +692,7 @@ object IvfFlatIndex {
    */
   def appendToEpoch(assigned: DataFrame, epochPath: String, filesPerList: Int = 1): Unit =
     clusterByList(assigned, filesPerList)
-      .write
+      .graftWrite
       .mode("append")
       .partitionBy("list_id")
       .parquet(epochPath)
@@ -786,7 +789,7 @@ object IvfFlatIndex {
       spark: SparkSession, rows: Array[Array[Float]], path: String): Unit = {
     import spark.implicits._
     rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
-      .toDF("id", "vec").coalesce(1).write.mode("overwrite").parquet(path)
+      .toDF("id", "vec").coalesce(1).graftWrite.mode("overwrite").parquet(path)
   }
 
   def readCentroidTable(spark: SparkSession, path: String): Array[Array[Float]] =
@@ -799,7 +802,7 @@ object IvfFlatIndex {
   def writeListRadiiTable(spark: SparkSession, radii: Array[Double], path: String): Unit = {
     import spark.implicits._
     radii.zipWithIndex.map { case (r, i) => (i, r) }.toSeq
-      .toDF("list_id", "radius").coalesce(1).write.mode("overwrite").parquet(path)
+      .toDF("list_id", "radius").coalesce(1).graftWrite.mode("overwrite").parquet(path)
   }
 
   /** Fold the bounds dir by per-list MAX (round 20): the dir holds the
@@ -849,7 +852,7 @@ object IvfFlatIndex {
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val tmp = s"$livePath.delta-$uuid"
     rows.toSeq.toDF(cols._1, cols._2)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
+      .coalesce(1).graftWrite.mode("overwrite").parquet(tmp)
     val parts = new java.io.File(tmp).listFiles().filter(f =>
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     parts.zipWithIndex.foreach { case (f, i) =>
@@ -875,7 +878,7 @@ object IvfFlatIndex {
   def writeListErrsTable(spark: SparkSession, errs: Array[Double], path: String): Unit = {
     import spark.implicits._
     errs.zipWithIndex.map { case (e, i) => (i, e) }.toSeq
-      .toDF("list_id", "err").coalesce(1).write.mode("overwrite").parquet(path)
+      .toDF("list_id", "err").coalesce(1).graftWrite.mode("overwrite").parquet(path)
   }
 
   /** Missing list ids read as 0.0 — the same value the meta pass records

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{Metric, SearchParams}
 import graft.functions.{pq, vector}
 import graft.kmeans.Lloyd
+import graft.storage.LocalWrites._
 
 /**
  * IVF-PQ index: IVF coarse quantization for pruning + product quantization
@@ -389,7 +390,7 @@ object IvfPqIndex {
       (cb, s) <- books.zipWithIndex
       (cw, c) <- cb.zipWithIndex
     } yield ((s.toLong << 16) | c.toLong, cw)
-    rows.toSeq.toDF("id", "vec").coalesce(1).write.mode("overwrite").parquet(path)
+    rows.toSeq.toDF("id", "vec").coalesce(1).graftWrite.mode("overwrite").parquet(path)
   }
 
   def readCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.{Metric, SearchParams}
+import graft.storage.LocalWrites._
 
 /**
  * Plan/codegen warmup for the composed PQ flood search shapes (round 19,
@@ -96,7 +97,7 @@ object PlanWarmup {
     // 64 rows x dim 8: enough for nlist=16 k-means and m=8 codebooks
     // (dsub=1); the plan shapes do not depend on dim or row count
     (0L until 64L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
-      .toDF("id", "vec").write.mode("overwrite").parquet(s"$tmp/vectors")
+      .toDF("id", "vec").graftWrite.mode("overwrite").parquet(s"$tmp/vectors")
     val vecs = spark.read.parquet(s"$tmp/vectors")
     val idx = IvfPqIndex.build(spark, vecs, nlist = 16, m = 8)
     // query-set shape mirrors the flood serving pattern END TO END
@@ -172,10 +173,10 @@ object PlanWarmup {
     idx.codes.join(idx.rawVectors, "id")
       .select(org.apache.spark.sql.functions.col("id"), col("vec"),
         col("codes"), col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$tmp/t")
+      .graftWrite.partitionBy("list_id").mode("overwrite").parquet(s"$tmp/t")
     spark.read.parquet(s"$tmp/t").createOrReplaceTempView("graft_warmup_sql")
     (0L until 4L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
-      .toDF("qid", "qvec").write.mode("overwrite").parquet(s"$tmp/q")
+      .toDF("qid", "qvec").graftWrite.mode("overwrite").parquet(s"$tmp/q")
     spark.read.parquet(s"$tmp/q").createOrReplaceTempView("graft_warmup_sql_q")
     val (radii, errs) = graft.plans.SqlAnn.computePqRangeMeta(
       spark, s"$tmp/t", idx.centroids.value, idx.codebooks.value)

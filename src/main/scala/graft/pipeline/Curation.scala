@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, graftshims}
 import org.apache.spark.sql.functions._
 
+import graft.storage.LocalWrites._
+
 /**
  * End-to-end corpus curation — the composition a 100 TB training-data
  * pipeline actually runs, as ONE plan with a per-document audit row.
@@ -145,7 +147,7 @@ object Curation {
     * a corpus-scan lineage, and the width cannot drift because it
     * travels with the data. */
   def writeEvalScreen(screen: EvalScreen, path: String): Unit = {
-    screen.shingles.write.mode("overwrite").parquet(s"$path/shingles")
+    screen.shingles.graftWrite.mode("overwrite").parquet(s"$path/shingles")
     Dedup.writeParamsJson(screen.shingles.sparkSession, s"$path/params.json",
       s"""{"n":${screen.n}}""")
   }

@@ -8,6 +8,7 @@ import org.json4s.jackson.JsonMethods
 
 import graft.functions.{text, vector}
 import graft.Metric
+import graft.storage.LocalWrites._
 
 /**
  * Corpus deduplication for LLM training-data pipelines. Every variant is
@@ -101,7 +102,7 @@ object Dedup {
           // 5M-doc stress, the snappy stage set outgrew the box's disk
           // (dev/ROUND12.md); zstd's ~3x ratio on that payload is pure
           // footprint win at negligible read cost
-          df.write.mode("overwrite").option("compression", "zstd").parquet(p)
+          df.graftWrite.mode("overwrite").option("compression", "zstd").parquet(p)
           df.sparkSession.read.parquet(p)
         case None =>
           val cut = df.localCheckpoint(eager = true, level)
@@ -476,9 +477,9 @@ object Dedup {
    * flat (they are joined by id / text hash, both uniformly distributed).
    */
   def writeCorpusIndex(index: CorpusIndex, path: String): Unit = {
-    index.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    index.bands.write.mode("overwrite").partitionBy("pos").parquet(s"$path/bands")
-    index.exactText.write.mode("overwrite").parquet(s"$path/exact")
+    index.shingles.graftWrite.mode("overwrite").parquet(s"$path/shingles")
+    index.bands.graftWrite.mode("overwrite").partitionBy("pos").parquet(s"$path/bands")
+    index.exactText.graftWrite.mode("overwrite").parquet(s"$path/exact")
     // the build parameters ARE part of the index (a reader hashing with
     // different ones gets band keys that never collide — silent admit-all)
     writeParamsJson(index.shingles.sparkSession, s"$path/params.json",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.storage.LocalWrites._
 
 /**
  * Training-data preparation operators a large-scale LLM pipeline needs on
@@ -304,7 +305,7 @@ object TrainingPrep {
       positioned
         .repartition(col("shard"))
         .sortWithinPartitions("shard", "position")
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
+        .graftWrite.mode("overwrite").partitionBy("shard").parquet(path)
       val stats = spark.read.parquet(path)
         .groupBy("shard")
         .agg(

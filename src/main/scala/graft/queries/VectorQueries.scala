@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{Metric, Tables}
 import graft.functions.vector
 import graft.index.Knn
+import graft.storage.LocalWrites._
 
 /**
  * Driver-contract query entries for the vector-search operators
@@ -739,7 +740,7 @@ object VectorQueries {
     val index = ivfIndex(spark, dir, 16)
     val tableDir = cached[String](s"sqlann-table:$dir") {
       val d = tempDirCleaned("graft-sqlann")
-      index.vectors.write.partitionBy("list_id").mode("overwrite").parquet(d)
+      index.vectors.graftWrite.partitionBy("list_id").mode("overwrite").parquet(d)
       d
     }
     graft.plans.SqlAnn.registerIndex(
@@ -896,7 +897,7 @@ object VectorQueries {
       val d = tempDirCleaned("graft-sqlann-pq")
       index.codes.join(index.rawVectors, "id")
         .select(col("id"), col("vec"), col("codes"), col("list_id"))
-        .write.partitionBy("list_id").mode("overwrite").parquet(d)
+        .graftWrite.partitionBy("list_id").mode("overwrite").parquet(d)
       d
     }
     // one meta pass (cached per dir): covering radii + per-list max
@@ -1105,7 +1106,7 @@ object VectorQueries {
       val d = tempDirCleaned("graft-sqlann-pqcos")
       index.codes.join(index.rawVectors, "id")
         .select(col("id"), col("vec"), col("codes"), col("list_id"))
-        .write.partitionBy("list_id").mode("overwrite").parquet(d)
+        .graftWrite.partitionBy("list_id").mode("overwrite").parquet(d)
       d
     }
     val (radii, errs) = cached[(Array[Double], Array[Double])](
@@ -1271,7 +1272,7 @@ object VectorQueries {
       emb(spark, dir)
         .filter(col("vec_id") >= BatchSqlNQ && col("vec_id") < 2 * BatchSqlNQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
+        .coalesce(1).graftWrite.mode("overwrite").parquet(d)
       d
     }
     spark.read.parquet(qDir).createOrReplaceTempView("graft_sqlann_pqb_qp")
@@ -1437,7 +1438,7 @@ object VectorQueries {
       emb(spark, dir)
         .filter(col("vec_id") >= BatchSqlNQ && col("vec_id") < 2 * BatchSqlNQ)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
+        .coalesce(1).graftWrite.mode("overwrite").parquet(d)
       d
     }
     spark.read.parquet(qDir).createOrReplaceTempView("graft_sqlann_qp")
@@ -1777,7 +1778,7 @@ object VectorQueries {
     }
     val tableDir = cached[String](s"sqlann-costable:$dir") {
       val d = tempDirCleaned("graft-sqlann-cos")
-      index.vectors.write.partitionBy("list_id").mode("overwrite").parquet(d)
+      index.vectors.graftWrite.partitionBy("list_id").mode("overwrite").parquet(d)
       d
     }
     graft.plans.SqlAnn.registerIndex(

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.storage.LocalWrites._
+
 /**
  * One-off scale diagnostic for the end-to-end curation pipeline
  * ([[graft.pipeline.Curation.curate]]) — NOT part of the per-round Bench
@@ -167,7 +169,7 @@ object CurationStress {
           .createTempDirectory("graft-curation-fixture").toFile.getAbsolutePath
         sys.addShutdownHook(rmDir(fixDir))
         timed(s"synthesize + write parquet fixture (${copies}x sf0.1 x $famReps; fixture prep, not pipeline cost)") {
-          synth.write.mode("overwrite").parquet(fixDir)
+          synth.graftWrite.mode("overwrite").parquet(fixDir)
         }
         val onDisk = spark.read.parquet(fixDir)
         def du(f: java.io.File): Long =

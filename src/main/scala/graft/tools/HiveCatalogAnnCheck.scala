@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IvfFlatIndex
 import graft.plans.SqlAnn
+import graft.storage.LocalWrites._
 
 /**
  * Pins the HIVE-format catalog flavor of the SQL ANN surface — the one
@@ -70,7 +71,7 @@ object HiveCatalogAnnCheck {
     import spark.implicits._
     val idx = IvfFlatIndex.build(spark, rows.toDF("id", "vec"), NList)
     val dir = s"$work/epoch_vectors"
-    idx.vectors.write.partitionBy("list_id").mode("overwrite").parquet(dir)
+    idx.vectors.graftWrite.partitionBy("list_id").mode("overwrite").parquet(dir)
 
     // HIVE-format table over the epoch path (partition column OUTSIDE the
     // column list — Hive DDL), partitions recovered from the directory

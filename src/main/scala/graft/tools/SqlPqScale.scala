@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IvfPqIndex
 import graft.plans.SqlAnn
+import graft.storage.LocalWrites._
 
 /**
  * Scale evidence for the PQ-accelerated SQL top-k (`sql_pq_topk`): at
@@ -61,7 +62,7 @@ object SqlPqScale {
     val dir = java.nio.file.Files.createTempDirectory("graft-pqscale").toString
     idx.codes.join(idx.rawVectors, "id")
       .select(col("id"), col("vec"), col("codes"), col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(dir)
+      .graftWrite.partitionBy("list_id").mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("pq_t")
     println(f"[pqscale] corpus n=$n dim=$dim nlist=$nlist m=$m " +
       f"built+encoded+written in ${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -289,7 +290,7 @@ object SqlPqScale {
     val qjDir = java.nio.file.Files.createTempDirectory("graft-pqscale-qj").toString
     corpus.filter(col("id") % lit(n.toLong / 8) === 0)
       .select(col("id").as("qid"), col("vec").as("qvec"))
-      .write.mode("overwrite").parquet(qjDir)
+      .graftWrite.mode("overwrite").parquet(qjDir)
     spark.read.parquet(qjDir).createOrReplaceTempView("pq_qj")
     val jSql =
       s"""SELECT q.qid, t.id FROM pq_qj q, pq_t t

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.IvfFlatIndex
 import graft.plans.SqlAnn
+import graft.storage.LocalWrites._
 
 /**
  * Scale evidence for the SQL self-join dedup shape (`sql_selfjoin_dedup`):
@@ -56,7 +57,7 @@ object SqlSelfJoinScale {
     val t0 = System.nanoTime()
     val idx = IvfFlatIndex.build(spark, corpus, nlist)
     val dir = java.nio.file.Files.createTempDirectory("graft-sjscale").toString
-    idx.vectors.write.partitionBy("list_id").mode("overwrite").parquet(dir)
+    idx.vectors.graftWrite.partitionBy("list_id").mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("sj_t")
     println(f"[sjscale] corpus n=$n dim=$dim nlist=$nlist built+written in ${(System.nanoTime() - t0) / 1e9}%.1f s")
 
@@ -92,7 +93,7 @@ object SqlSelfJoinScale {
       // subset as its own table (same geometry, its own radii)
       val subIdx = IvfFlatIndex.build(spark, sub.select("id", "vec"), 32)
       val subDir = java.nio.file.Files.createTempDirectory("graft-sjscale-sub").toString
-      subIdx.vectors.write.partitionBy("list_id").mode("overwrite").parquet(subDir)
+      subIdx.vectors.graftWrite.partitionBy("list_id").mode("overwrite").parquet(subDir)
       spark.read.parquet(subDir).createOrReplaceTempView("sj_subr")
       SqlAnn.registerIndex(spark, subDir, subIdx.centroids.value,
         nprobe = 32, radii = Some(subIdx.listRadii))
