@@ -1,5 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
+
 /**
  * Tight primitive-array kernels, called both from interpreted `eval` and
  * from generated code (static method call keeps whole-stage codegen spans
@@ -66,22 +70,41 @@ object VectorKernels {
       case _             => l2(a, b)
     }
 
-  // Per-thread scratch buffers for [[distanceCols]]: a fresh float[] pair
-  // per candidate was the dominant allocation of every rerank/cross-join
-  // distance stage (r21 stage profiles: GC-bound scans at 3x their CPU
-  // time). Two independent buffers — the operands must never alias. The
-  // decoded views are valid only within one distanceCols call.
-  private final class Scratch {
-    var buf: Array[Float] = null
-    def decode(a: org.apache.spark.sql.catalyst.util.ArrayData): Array[Float] = {
+  /** A reusable decode buffer for ARRAY<FLOAT> operands: a fresh float[]
+    * per decoded row was the dominant allocation of every rerank,
+    * cross-join and list-scan distance stage (r21 stage profiles: GC-bound
+    * scans at 3x their CPU time). One buffer per (owner, dim); a dimension
+    * change just reallocates. The returned array is valid only until the
+    * next decode on the same instance: kernels consume it transiently. */
+  private[graft] final class Scratch {
+    private var buf: Array[Float] = null
+    def decode(a: ArrayData): Array[Float] = {
       val n = a.numElements()
       if (buf == null || buf.length != n) buf = new Array[Float](n)
-      val b = buf
-      var i = 0
-      while (i < n) { b(i) = a.getFloat(i); i += 1 }
-      b
+      copyFloats(a, buf, n)
+      buf
     }
   }
+
+  /** `a`'s first n floats into `dst`. An [[UnsafeArrayData]] (every scan
+    * and shuffle row) stores them contiguously after its null-bit header,
+    * in the byte order `getFloat` reads, so one memory copy moves them;
+    * other arrays go element by element. Bit-identical to a `getFloat`
+    * loop, null elements included: `UnsafeArrayData.getFloat` returns a
+    * null slot's stored bits unchecked, and the copy moves those bits. */
+  private[graft] def copyFloats(a: ArrayData, dst: Array[Float], n: Int): Unit = a match {
+    case u: UnsafeArrayData =>
+      Platform.copyMemory(u.getBaseObject,
+        u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(n),
+        dst, Platform.FLOAT_ARRAY_OFFSET, n * 4L)
+    case _ =>
+      var i = 0
+      while (i < n) { dst(i) = a.getFloat(i); i += 1 }
+  }
+
+  // Per-thread scratch buffers for [[distanceCols]]. Two independent
+  // buffers — the operands must never alias. The decoded views are valid
+  // only within one distanceCols call.
   private val scratchA = ThreadLocal.withInitial[Scratch](() => new Scratch)
   private val scratchB = ThreadLocal.withInitial[Scratch](() => new Scratch)
 

@@ -158,12 +158,29 @@ case class PqFloodIndex(
     listPos: Array[Array[Int]])
 
 object PqLocalListScorer {
-  /** Consecutive corpus rows of one list before the scorer pays the
-    * per-query table build for that list: direct O(dim) scoring covers
-    * the prefix, so a pathological list-flapping row order never builds
-    * tables at all (same policy the static path's streaming scorer used;
-    * tables pay for themselves after ~ks/(1 - m/dim) rows). */
-  val DefaultBuildAfter = 32
+  /** `buildAfter` default: build a list's tables after [[breakEvenRows]]
+    * of its codebooks, the row count at which they pay for themselves.
+    * Direct O(dim) scoring covers the prefix, so a short run (a widened
+    * flood hands each task ~1/p of every list) or a list-flapping row
+    * order never builds tables at all. A fixed 32-row cutover made every
+    * widened slice of a list build every probing query's 32 KB table
+    * (m 16, ks 256): on perfbench `offline`'s widened ADC stage (4 cores,
+    * first unit, 3 seeds) it took 7.1-8.1 s of task CPU and 2.2-2.5 s,
+    * against 3.5-4.8 s and 1.1-1.4 s at the break-even (293 rows at
+    * m 16, ks 256, dim 128). */
+  val DefaultBuildAfter = 0
+
+  /** ceil(ks / (1 - m/dim)) rows: one query's table costs ks x dim
+    * multiply-adds and then m lookups a row, against dim a row direct, so
+    * it pays once r x dim >= ks x dim + r x m. Never (Int.MaxValue) when
+    * dim <= m: a one-dimension subspace looks up as dearly as it scores. */
+  private[index] def breakEvenRows(books: Array[Array[Array[Float]]]): Int = {
+    val m = books.length.toLong
+    val ks = books(0).length.toLong
+    val dim = books.iterator.map(_(0).length.toLong).sum
+    if (dim <= m) Int.MaxValue
+    else math.min((ks * dim + dim - m - 1) / (dim - m), Int.MaxValue.toLong).toInt
+  }
 
   /** Per-task byte cap for one list's table block (queriesInList × m × ks
     * × 8 B): a hot list probed by a huge fraction of the flood scores
@@ -190,6 +207,8 @@ final class PqLocalListScorer(
     tableBudgetBytes: Long = PqLocalListScorer.DefaultTableBudgetBytes) extends ListScorer {
 
   private val tableBytes = books.length.toLong * books(0).length * 8L
+  private val cutover =
+    if (buildAfter > 0) buildAfter else PqLocalListScorer.breakEvenRows(books)
   private var curList = -1
   private var run = 0
   private var tables: Array[Array[Array[Double]]] = null // aligned with listPos(curList)
@@ -204,7 +223,7 @@ final class PqLocalListScorer(
       tables = null
     }
     run += 1
-    if (tables == null && run >= buildAfter && pos.length * tableBytes <= tableBudgetBytes) {
+    if (tables == null && run >= cutover && pos.length * tableBytes <= tableBudgetBytes) {
       tables = new Array[Array[Array[Double]]](pos.length)
       var j = 0
       while (j < pos.length) {

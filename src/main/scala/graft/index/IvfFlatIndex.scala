@@ -482,33 +482,43 @@ object IvfFlatIndex {
   val MaxStaticBatch = 1024
 
   /**
-   * Widen a small corpus scan whose partition count would starve the
-   * flood scorers: file sources split by BYTES, but flood scoring is
-   * compute-heavy per byte (every corpus row scores against all queries
-   * probing its list), so a sub-parallelism split count — one parquet
-   * file's worth of codes, a coalesced cache — idles most of the cluster
-   * while one task builds every ADC table. Measured on the sf0.1 bench:
-   * the PQ flood's ADC scan ran ~1.0 s on ONE task that ~30 ms/task wide.
+   * Spread a small scan round-robin over every core before a compute-heavy
+   * consumer. File sources split by BYTES, but flood scoring is heavy per
+   * byte and per LIST: a corpus row scores against every query probing
+   * its list, so a task's work is rows x probing queries, summed over the
+   * lists it holds. Spark's file packer (4 MB `openCostInBytes` per file)
+   * fills partition 0 with the ~31 biggest list files of an epoch, and
+   * that one task held the flood. perfbench `offline` (20k x 128-D, nlist
+   * 128, 4 cores, first unit, seed 11): 5 scan partitions, one holding
+   * 11,083 of the 20,000 rows; the flat scoring stage ran 1,695 ms on it
+   * against 17-394 ms on the others, the PQ ADC stage 3,046 ms against
+   * 12-442 ms. A planned partition count is no balance signal, so a
+   * scorer widens every input at or under [[Sizing.MaxWidenBytes]],
+   * without planning `df` to read its count: round-robin gives each task
+   * ~1/p of every list, which balances work however skewed the lists
+   * are (same run widened: 4 tasks of 5,000 rows, 702-830 ms flat and
+   * 1,428-1,474 ms ADC). Cost: one shuffle of the input, 10 MB of flat
+   * vectors there.
    *
-   * No-op unless `bytes` (the caller's [[Sizing.bytes]] read of the
-   * input) proves the input small AND its planned partition count
-   * undercuts the target ([[Sizing.widenParts]]; reading that count still
-   * plans `df` once). The explicit partition count keeps AQE's byte-based
-   * coalescing from re-folding the shuffle, and the cheap local sort
-   * restores per-list locality for scorers that amortize per-list state
-   * (PQ ADC tables).
+   * The explicit partition count keeps AQE's byte-based coalescing from
+   * re-folding the shuffle, and the cheap local sort restores per-list
+   * locality for scorers that amortize per-list state (PQ ADC tables).
    *
-   * `bytesPerTask` (r20) scales the widening to the caller's WORK
-   * DENSITY: flood scorers widen maximally (the default 0), while a
-   * per-row text projection, ~1000x lighter per byte, asks for
-   * ceil(bytes / bytesPerTask) tasks (guide §2: derive partitioning from
-   * input size).
+   * `perRow` consumers do light work per row, not per list, so a byte
+   * split already balances them: they widen only when `df`'s planned
+   * partition count falls short of the target (which plans `df` once).
+   * The regex projections (`bytesPerTask` > 0, ~1000x lighter per byte
+   * than a flood) ask for ceil(bytes / bytesPerTask) tasks (guide §2:
+   * derive partitioning from input size); the PQ rerank's raw-vector
+   * scan (a hash probe and one distance per candidate) asks for every
+   * core, and widening its 5-partition epoch read measured slower than
+   * leaving it (its 10 MB vector shuffle outweighed the skew).
    */
   private[graft] def widenScan(
       df: DataFrame, bytes: BigInt, bytesPerTask: Long = 0L,
-      sortCols: Seq[String] = Nil): DataFrame = {
+      sortCols: Seq[String] = Nil, perRow: Boolean = false): DataFrame = {
     val p = Sizing.widenParts(df.sparkSession, bytes, bytesPerTask)
-    if (p == 0 || df.rdd.getNumPartitions >= p) df
+    if (p == 0 || (perRow && df.rdd.getNumPartitions >= p)) df
     else {
       val wide = df.repartition(p)
       if (sortCols.isEmpty) wide

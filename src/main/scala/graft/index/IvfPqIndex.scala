@@ -157,12 +157,14 @@ class IvfPqIndex(
    *
    *  - **ADC stage, below the size gate** (the usual flood): the probed
    *    rows ship through the lazy broadcast exchange into
-   *    [[BroadcastProbeTopK.pq]] — the codes scan NEVER shuffles (read in
-   *    place, pruned where the layout allows), queries prep once per
-   *    executor, and ADC tables build per probed LIST on the scan
+   *    [[BroadcastProbeTopK.pq]] — a large codes scan NEVER shuffles
+   *    (read in place, pruned where the layout allows; a small one is
+   *    spread over every core by [[IvfFlatIndex.widenScan]]), queries prep
+   *    once per executor, and ADC tables build per probed LIST on the scan
    *    ([[PqLocalListScorer]]: bounded by queries-per-list, direct
-   *    bit-identical arithmetic below the cutover), so per-candidate cost
-   *    stays m lookups with nothing per-candidate materialized as rows.
+   *    bit-identical arithmetic below the break-even cutover), so
+   *    per-candidate cost stays m lookups with nothing per-candidate
+   *    materialized as rows.
    *  - **ADC stage, above the gate**: [[CoGroupTopK.pqSearch]]
    *    co-partitions probed queries and codes on list_id. The shuffled
    *    artifact is the CODES table — m+8 bytes per corpus row, the most
@@ -233,9 +235,10 @@ class IvfPqIndex(
           // from coalescing and the raw side aligns to it.
           candIds.repartition(Sizing.mergeParts(spark, qB * preK), col("id"))
         }
-      // widen a small raw scan for the same reason as the ADC stage: the
-      // join fans the candidate stream out over the RAW side's partitions
-      val cands = IvfFlatIndex.widenScan(rawVectors.select("id", "vec"), Sizing.bytes(rawVectors))
+      // widen an under-partitioned small raw scan: the join fans the
+      // candidate stream out over the RAW side's partitions
+      val cands = IvfFlatIndex.widenScan(
+        rawVectors.select("id", "vec"), Sizing.bytes(rawVectors), perRow = true)
         .join(hinted, "id")
       // the SAME deduped query rows: joining the raw duplicates back in
       // would re-introduce the second qvec at the rerank stage. Below the

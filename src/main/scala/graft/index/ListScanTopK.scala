@@ -217,30 +217,15 @@ object ProbeIndex {
   }
 }
 
-/** Per-thread scratch decode of an ARRAY<FLOAT> payload: the scan
-  * scorers decode every corpus row once, and `toFloatArray()` made each
-  * decode a fresh allocation — ~500 B x corpus rows x runs of pure
-  * garbage per scan (the r21 stage profiles measured multi-second GC
-  * spikes on the 200k-row scale-bench scan, runtime 3x its CPU). One
-  * buffer per (thread, dim) makes the hot path allocation-free; a
-  * dimension change just reallocates (no worse than before). The buffer
-  * is only valid until the next decode on the same thread — kernels
-  * consume it transiently and never retain it. */
-private[index] final class VecScratch {
-  private var buf: Array[Float] = null
-  def decode(a: ArrayData): Array[Float] = {
-    val n = a.numElements()
-    if (buf == null || buf.length != n) buf = new Array[Float](n)
-    val b = buf
-    var i = 0
-    while (i < n) { b(i) = a.getFloat(i); i += 1 }
-    b
-  }
-}
-
+/** Per-thread [[VectorKernels.Scratch]] for the scan scorers, which
+  * decode every corpus row once: ~500 B x corpus rows x runs of garbage
+  * per scan before (multi-second GC spikes on the 200k-row scale-bench
+  * scan, runtime 3x its CPU). Separate from `distanceCols`' buffers, so
+  * a scorer's decoded row never aliases a kernel operand. */
 private[index] object VecScratch {
-  private val tl = ThreadLocal.withInitial[VecScratch](() => new VecScratch)
-  def local(): VecScratch = tl.get()
+  private val tl =
+    ThreadLocal.withInitial[VectorKernels.Scratch](() => new VectorKernels.Scratch)
+  def local(): VectorKernels.Scratch = tl.get()
 }
 
 /** Flat-vector scorer: payload is the row's ARRAY<FLOAT> vector, decoded

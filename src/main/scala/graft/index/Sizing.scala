@@ -72,9 +72,11 @@ object Sizing {
     * beat 32 on KB floods. */
   val TargetPairBytes: BigInt = BigInt(400L) * 1000000000L
 
-  /** Cap for scan widening: only an input this small may be round-robin
-    * widened — the point is rescuing a compute-starved scan of a SMALL
-    * input, never adding a shuffle to a corpus that already fans out. */
+  /** Cap for scan widening: only an input this small is round-robin
+    * widened. Its shuffle is cheap against the one-task scoring stage a
+    * small input's few file splits can leave; a larger input splits into
+    * many partitions per core, and shuffling all of it would cost more
+    * than the balance gains. */
   val MaxWidenBytes: Long = 256L << 20
 
   /** Text bytes per task for the regex-class projections (TextAnalysis

@@ -30,19 +30,34 @@ object OneQuery {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val taskMs = new java.util.concurrent.atomic.AtomicLong
+    val perStage = sys.env.contains("ONEQUERY_STAGES")
+    // task run times per (stage, attempt), for the skew columns: the bus
+    // delivers a stage's task ends before its completion
+    val taskRuns = scala.collection.mutable.HashMap[(Int, Int), scala.collection.mutable.ArrayBuffer[Long]]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (perStage && t.taskMetrics != null)
+          taskRuns.getOrElseUpdate((t.stageId, t.stageAttemptId),
+            scala.collection.mutable.ArrayBuffer[Long]()) += t.taskMetrics.executorRunTime
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
         taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-        if (sys.env.contains("ONEQUERY_STAGES")) {
+        if (perStage) {
           val m = s.stageInfo.taskMetrics
+          // busiest and median task: a stage bound by one task shows as
+          // max >> median without an event log
+          val runs = taskRuns.remove((s.stageInfo.stageId, s.stageInfo.attemptNumber()))
+            .map(_.sorted).getOrElse(Seq.empty[Long])
+          val (maxT, medT) =
+            if (runs.isEmpty) (0L, 0L) else (runs.last, runs(runs.length / 2))
           println(f"[stage] ${m.executorRunTime}%5d ms " +
             f"cpu=${m.executorCpuTime / 1000000}%5d deser=${m.executorDeserializeTime}%5d " +
             f"serRes=${m.resultSerializationTime}%4d gc=${m.jvmGCTime}%4d " +
             f"shufR=${m.shuffleReadMetrics.totalBytesRead >> 10}%6dK shufW=${m.shuffleWriteMetrics.bytesWritten >> 10}%6dK " +
-            f"tasks=${s.stageInfo.numTasks}%3d ${s.stageInfo.name.takeWhile(_ != '\n').take(60)}")
+            f"tasks=${s.stageInfo.numTasks}%3d taskMax=$maxT%5d taskMed=$medT%5d " +
+            f"${s.stageInfo.name.takeWhile(_ != '\n').take(60)}")
         }
       }
     })

@@ -64,4 +64,38 @@ class VectorKernelsSpec extends AnyFunSuite {
     val p = VectorKernels.probeLists(Array(0.9f, 0f), cents, 2, VectorKernels.METRIC_L2)
     assert(p.toSeq === Seq(1, 2), s"NaN centroid poisoned the probe: ${p.toSeq}")
   }
+
+  test("scratch decode copies an UnsafeArrayData in bulk, bit-identical to getFloat") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+    val rnd = new scala.util.Random(7)
+    val toUnsafe = UnsafeProjection.create(Array[DataType](ArrayType(FloatType, containsNull = true)))
+    def bits(a: ArrayData): Seq[Int] =
+      (0 until a.numElements()).map(i => java.lang.Float.floatToRawIntBits(a.getFloat(i)))
+    val scratch = new VectorKernels.Scratch
+    for (dim <- Seq(0, 1, 3, 16, 128, 768, 3)) {
+      // special values and a null slot or two ride along with random floats
+      val vals: Array[Any] = Array.tabulate(dim) { i =>
+        if (i % 17 == 5) null
+        else if (i % 17 == 6) Float.NaN
+        else if (i % 17 == 7) -0.0f
+        else if (i % 17 == 8) Float.MinPositiveValue
+        else rnd.nextFloat() * 2f - 1f
+      }
+      val generic = new GenericArrayData(vals)
+      // inside a row, so the array starts past the row's own header
+      val unsafe = toUnsafe(InternalRow(generic)).getArray(0)
+      assert(unsafe.isInstanceOf[UnsafeArrayData])
+      val expected = bits(unsafe)
+      assert(scratch.decode(unsafe).map(java.lang.Float.floatToRawIntBits).toSeq === expected,
+        s"dim=$dim")
+      assert(scratch.decode(generic).map(java.lang.Float.floatToRawIntBits).toSeq === bits(generic),
+        s"dim=$dim (generic)")
+      val flat = UnsafeArrayData.fromPrimitiveArray(vals.map(v => if (v == null) 0f else v.asInstanceOf[Float]))
+      assert(scratch.decode(flat).map(java.lang.Float.floatToRawIntBits).toSeq === bits(flat),
+        s"dim=$dim (primitive)")
+    }
+  }
 }

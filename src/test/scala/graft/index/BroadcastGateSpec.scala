@@ -324,10 +324,12 @@ class BroadcastGateSpec extends SparkSpec {
     import graft.functions.PqKernels
     val books = IvfPqIndex.trainCodebooks(corpus.map(_._2).toArray, m = 4, nbits = 6)
     val qs = floodQueries.take(4).toArray
-    val codeRows = corpus.take(200).map { case (id, v) =>
+    def encoded(rows: Seq[(Long, Array[Float])]) = rows.map { case (id, v) =>
       (id, new org.apache.spark.sql.catalyst.util.GenericArrayData(
         PqKernels.encode(v, books)))
     }
+    val codeRows = encoded(corpus.take(200))
+    val longRows = encoded(corpus)
     final class CollectSink extends TopKSink {
       val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
       override def insert(qid: Long, id: Long, dist: Double): Unit =
@@ -343,24 +345,34 @@ class BroadcastGateSpec extends SparkSpec {
         listPos = Array(qs.indices.toArray, qs.indices.toArray))
       // ground truth: full-table lookup-sum per (query, candidate)
       val tables = qs.map(q => PqKernels.adcTableRaw(q._2, books, metricId))
-      val expected = (for ((id, c) <- codeRows; (qi, t) <- qs.zip(tables))
-        yield (qi._1, id, PqKernels.adcDistanceRaw(t, c))).toSet
+      def truth(rows: Seq[(Long, org.apache.spark.sql.catalyst.util.GenericArrayData)]) =
+        (for ((id, c) <- rows; (qi, t) <- qs.zip(tables))
+          yield (qi._1, id, PqKernels.adcDistanceRaw(t, c))).toSet
+      val expected = truth(codeRows)
       // clustered order: list 0's 200 rows then list 1's — both runs cross
-      // the buildAfter=32 cutover, so the prefix scores DIRECT and the
-      // rest by table; bits must not change at the seam
-      val clustered = new PqLocalListScorer(pi, books, metricId)
+      // an explicit buildAfter=32 cutover, so the prefix scores DIRECT and
+      // the rest by table; bits must not change at the seam
+      val clustered = new PqLocalListScorer(pi, books, metricId, buildAfter = 32)
       val cSink = new CollectSink
       for (list <- Seq(0, 1); (id, c) <- codeRows) clustered.scoreInto(list, c, id, cSink)
       assert(cSink.rows.size === 2 * codeRows.size * qs.length)
       assert(cSink.rows.toSet === expected, s"clustered diverged, metric=$metricId")
+      // the default cutover (the codebooks' break-even) crossed by 400-row runs
+      assert(PqLocalListScorer.breakEvenRows(books) < longRows.size)
+      val byDefault = new PqLocalListScorer(pi, books, metricId)
+      val dSink = new CollectSink
+      for (list <- Seq(0, 1); (id, c) <- longRows) byDefault.scoreInto(list, c, id, dSink)
+      assert(dSink.rows.size === 2 * longRows.size * qs.length)
+      assert(dSink.rows.toSet === truth(longRows), s"default cutover diverged, metric=$metricId")
       // adversarial order: the list flaps every row -> the run counter
       // never reaches the cutover, everything scores direct — same bits
-      val flapping = new PqLocalListScorer(pi, books, metricId)
+      val flapping = new PqLocalListScorer(pi, books, metricId, buildAfter = 32)
       val fSink = new CollectSink
       for (((id, c), i) <- codeRows.zipWithIndex) flapping.scoreInto(i % 2, c, id, fSink)
       assert(fSink.rows.toSet === expected, s"flapping diverged, metric=$metricId")
       // a list hotter than the table budget also stays direct — same bits
-      val capped = new PqLocalListScorer(pi, books, metricId, tableBudgetBytes = 1)
+      val capped = new PqLocalListScorer(pi, books, metricId, buildAfter = 32,
+        tableBudgetBytes = 1)
       val capSink = new CollectSink
       for ((id, c) <- codeRows) capped.scoreInto(0, c, id, capSink)
       assert(capSink.rows.toSet === expected, s"budget-capped diverged, metric=$metricId")
