@@ -158,18 +158,6 @@ case class PqFloodIndex(
     listPos: Array[Array[Int]])
 
 object PqLocalListScorer {
-  /** `buildAfter` default: build a list's tables after [[breakEvenRows]]
-    * of its codebooks, the row count at which they pay for themselves.
-    * Direct O(dim) scoring covers the prefix, so a short run (a widened
-    * flood hands each task ~1/p of every list) or a list-flapping row
-    * order never builds tables at all. A fixed 32-row cutover made every
-    * widened slice of a list build every probing query's 32 KB table
-    * (m 16, ks 256): on perfbench `offline`'s widened ADC stage (4 cores,
-    * first unit, 3 seeds) it took 7.1-8.1 s of task CPU and 2.2-2.5 s,
-    * against 3.5-4.8 s and 1.1-1.4 s at the break-even (293 rows at
-    * m 16, ks 256, dim 128). */
-  val DefaultBuildAfter = 0
-
   /** ceil(ks / (1 - m/dim)) rows: one query's table costs ks x dim
     * multiply-adds and then m lookups a row, against dim a row direct, so
     * it pays once r x dim >= ks x dim + r x m. Never (Int.MaxValue) when
@@ -198,17 +186,27 @@ object PqLocalListScorer {
  * loop and accumulation order as [[PqKernels.adcTableFromPrepped]] +
  * lookup-sum), so the cutover never changes results — pinned by
  * BroadcastGateSpec's order/cutover test. Mutable state is per-task.
+ *
+ * `buildAfter`: consecutive rows of one list before its tables build
+ * (`Some(0)` builds at a list's first row). None, the default, takes the
+ * codebooks' [[PqLocalListScorer.breakEvenRows]], where tables pay for
+ * themselves. Direct scoring covers the prefix, so a short run (a widened
+ * flood hands each task ~1/p of every list) or a list-flapping row order
+ * never builds tables at all. A fixed 32-row cutover made every widened
+ * slice of a list build every probing query's 32 KB table (m 16, ks
+ * 256): on perfbench `offline`'s widened ADC stage (4 cores, first unit,
+ * 3 seeds) it took 7.1-8.1 s of task CPU and 2.2-2.5 s, against 3.5-4.8 s
+ * and 1.1-1.4 s at the break-even (293 rows at m 16, ks 256, dim 128).
  */
 final class PqLocalListScorer(
     pi: PqFloodIndex,
     books: Array[Array[Array[Float]]],
     metric: Int,
-    buildAfter: Int = PqLocalListScorer.DefaultBuildAfter,
+    buildAfter: Option[Int] = None,
     tableBudgetBytes: Long = PqLocalListScorer.DefaultTableBudgetBytes) extends ListScorer {
 
   private val tableBytes = books.length.toLong * books(0).length * 8L
-  private val cutover =
-    if (buildAfter > 0) buildAfter else PqLocalListScorer.breakEvenRows(books)
+  private val cutover = buildAfter.getOrElse(PqLocalListScorer.breakEvenRows(books))
   private var curList = -1
   private var run = 0
   private var tables: Array[Array[Array[Double]]] = null // aligned with listPos(curList)

@@ -482,43 +482,40 @@ object IvfFlatIndex {
   val MaxStaticBatch = 1024
 
   /**
-   * Spread a small scan round-robin over every core before a compute-heavy
-   * consumer. File sources split by BYTES, but flood scoring is heavy per
-   * byte and per LIST: a corpus row scores against every query probing
-   * its list, so a task's work is rows x probing queries, summed over the
-   * lists it holds. Spark's file packer (4 MB `openCostInBytes` per file)
-   * fills partition 0 with the ~31 biggest list files of an epoch, and
-   * that one task held the flood. perfbench `offline` (20k x 128-D, nlist
-   * 128, 4 cores, first unit, seed 11): 5 scan partitions, one holding
-   * 11,083 of the 20,000 rows; the flat scoring stage ran 1,695 ms on it
-   * against 17-394 ms on the others, the PQ ADC stage 3,046 ms against
-   * 12-442 ms. A planned partition count is no balance signal, so a
-   * scorer widens every input at or under [[Sizing.MaxWidenBytes]],
-   * without planning `df` to read its count: round-robin gives each task
-   * ~1/p of every list, which balances work however skewed the lists
-   * are (same run widened: 4 tasks of 5,000 rows, 702-830 ms flat and
-   * 1,428-1,474 ms ADC). Cost: one shuffle of the input, 10 MB of flat
-   * vectors there.
+   * Spread a small scan round-robin over every core when its planned
+   * split would starve a compute-heavy consumer ([[Sizing.starves]]):
+   * fewer partitions than the target, or a file split with one partition
+   * far above its share. Flood scoring is heavy per byte and per LIST: a
+   * corpus row scores against every query probing its list, so a task's
+   * work is rows x probing queries, summed over the lists it holds.
+   * Spark's file packer fills an epoch read's first partition with its
+   * ~31 biggest list files, and that one task held the flood. perfbench
+   * `offline` (20k x 128-D, nlist 128, 4 cores, first unit, seed 11): 5
+   * scan partitions, one holding 11,083 of the 20,000 rows; the flat
+   * scoring stage ran 1,695 ms on it against 17-394 ms on the others, the
+   * PQ ADC stage 3,046 ms against 12-442 ms. Round-robin gives each task
+   * ~1/p of every list, which balances work however skewed the lists are
+   * (same run widened: 4 tasks of 5,000 rows, 628-772 ms flat and
+   * 1,213-1,326 ms ADC), for one shuffle of the input (10 MB of flat
+   * vectors there). A split that is already even, or set by a shuffle
+   * (a frame clustered by list), is left as it is. Reading the split
+   * plans `df` once.
    *
    * The explicit partition count keeps AQE's byte-based coalescing from
    * re-folding the shuffle, and the cheap local sort restores per-list
    * locality for scorers that amortize per-list state (PQ ADC tables).
    *
-   * `perRow` consumers do light work per row, not per list, so a byte
-   * split already balances them: they widen only when `df`'s planned
-   * partition count falls short of the target (which plans `df` once).
-   * The regex projections (`bytesPerTask` > 0, ~1000x lighter per byte
-   * than a flood) ask for ceil(bytes / bytesPerTask) tasks (guide §2:
-   * derive partitioning from input size); the PQ rerank's raw-vector
-   * scan (a hash probe and one distance per candidate) asks for every
-   * core, and widening its 5-partition epoch read measured slower than
-   * leaving it (its 10 MB vector shuffle outweighed the skew).
+   * `bytesPerTask` (r20) scales the widening to the caller's WORK
+   * DENSITY: flood scorers widen maximally (the default 0), while a
+   * per-row text projection, ~1000x lighter per byte, asks for
+   * ceil(bytes / bytesPerTask) tasks (guide §2: derive partitioning from
+   * input size).
    */
   private[graft] def widenScan(
       df: DataFrame, bytes: BigInt, bytesPerTask: Long = 0L,
-      sortCols: Seq[String] = Nil, perRow: Boolean = false): DataFrame = {
+      sortCols: Seq[String] = Nil): DataFrame = {
     val p = Sizing.widenParts(df.sparkSession, bytes, bytesPerTask)
-    if (p == 0 || (perRow && df.rdd.getNumPartitions >= p)) df
+    if (p == 0 || !Sizing.starves(df.rdd.partitions, p)) df
     else {
       val wide = df.repartition(p)
       if (sortCols.isEmpty) wide

@@ -158,9 +158,10 @@ class IvfPqIndex(
    *  - **ADC stage, below the size gate** (the usual flood): the probed
    *    rows ship through the lazy broadcast exchange into
    *    [[BroadcastProbeTopK.pq]] — a large codes scan NEVER shuffles
-   *    (read in place, pruned where the layout allows; a small one is
-   *    spread over every core by [[IvfFlatIndex.widenScan]]), queries prep
-   *    once per executor, and ADC tables build per probed LIST on the scan
+   *    (read in place, pruned where the layout allows; a small one whose
+   *    split would starve the cores is spread over them by
+   *    [[IvfFlatIndex.widenScan]]), queries prep once per executor,
+   *    and ADC tables build per probed LIST on the scan
    *    ([[PqLocalListScorer]]: bounded by queries-per-list, direct
    *    bit-identical arithmetic below the break-even cutover), so
    *    per-candidate cost stays m lookups with nothing per-candidate
@@ -235,10 +236,9 @@ class IvfPqIndex(
           // from coalescing and the raw side aligns to it.
           candIds.repartition(Sizing.mergeParts(spark, qB * preK), col("id"))
         }
-      // widen an under-partitioned small raw scan: the join fans the
-      // candidate stream out over the RAW side's partitions
-      val cands = IvfFlatIndex.widenScan(
-        rawVectors.select("id", "vec"), Sizing.bytes(rawVectors), perRow = true)
+      // widen a small raw scan for the same reason as the ADC stage: the
+      // join fans the candidate stream out over the RAW side's partitions
+      val cands = IvfFlatIndex.widenScan(rawVectors.select("id", "vec"), Sizing.bytes(rawVectors))
         .join(hinted, "id")
       // the SAME deduped query rows: joining the raw duplicates back in
       // would re-introduce the second qvec at the rerank stage. Below the

@@ -1,6 +1,8 @@
 package graft.index
 
+import org.apache.spark.Partition
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 /**
  * Every size decision of the search and flood plans — partition counts,
@@ -72,11 +74,9 @@ object Sizing {
     * beat 32 on KB floods. */
   val TargetPairBytes: BigInt = BigInt(400L) * 1000000000L
 
-  /** Cap for scan widening: only an input this small is round-robin
-    * widened. Its shuffle is cheap against the one-task scoring stage a
-    * small input's few file splits can leave; a larger input splits into
-    * many partitions per core, and shuffling all of it would cost more
-    * than the balance gains. */
+  /** Cap for scan widening: only an input this small may be round-robin
+    * widened — the point is rescuing a compute-starved scan of a SMALL
+    * input, never adding a shuffle to a corpus that already fans out. */
   val MaxWidenBytes: Long = 256L << 20
 
   /** Text bytes per task for the regex-class projections (TextAnalysis
@@ -173,6 +173,25 @@ object Sizing {
     if (bytes > BigInt(MaxWidenBytes)) 0
     else if (bytesPerTask <= 0) maxP
     else parts(bytes, bytesPerTask, maxP)
+  }
+
+  /** A file split is unbalanced when one partition holds more than this
+    * many p-way shares of the split's bytes ([[starves]]). */
+  val MaxSplitShare = 1.5
+
+  /** Whether a scan planned as `parts` starves `p` tasks: fewer
+    * partitions than `p`, or a file split ([[FilePartition]]s, reached
+    * through partition-preserving operators and caches) whose largest
+    * partition holds over [[MaxSplitShare]] p-way shares of its bytes.
+    * Spark's file packer (`spark.sql.files.openCostInBytes` per file)
+    * fills each partition with the next run of an epoch's list files,
+    * biggest first (31 of perfbench's ~80 KB files), so its partition
+    * count says nothing about balance.
+    * Partitions set by a shuffle or a local relation carry no sizes and
+    * are judged by their count alone. */
+  def starves(parts: Array[Partition], p: Int): Boolean = parts.length < p || {
+    val split = parts.collect { case f: FilePartition => f.files.iterator.map(_.length).sum }
+    split.length == parts.length && split.max.toDouble * p > MaxSplitShare * split.sum
   }
 
   /** Partitions of a served epoch's resident list blocks

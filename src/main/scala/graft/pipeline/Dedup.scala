@@ -259,7 +259,8 @@ object Dedup {
     // The DP verification runs in the broadcast join's probe tasks, which
     // inherit the LEFT scan's partitioning — a small corpus in one parquet
     // file would run the whole CPU-bound verify on one core. widenScan
-    // spreads a small input round-robin over defaultParallelism tasks
+    // spreads a small input whose split would starve the verify (too few
+    // or too uneven partitions) round-robin over defaultParallelism tasks
     // (size-gated on the input's bytes; at 100 TB the scan is already
     // wider than the cluster and this is a no-op).
     val wide = graft.index.IvfFlatIndex.widenScan(docs, graft.index.Sizing.bytes(docs))

@@ -189,7 +189,7 @@ object TextAnalysis {
     // ~100-200 ms of work, well above the per-task fixed cost, unlike a flat
     // full-parallelism widen, which r20 stage profiles measured as ~90%
     // scheduling + shuffle-writer file fan-out at bench scale)
-    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes, perRow = true).select(
+    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes).select(
       col(idCol),
       regexp_count(t, lit(EmailRe)).cast("long").as("n_emails"),
       regexp_count(t, lit(PhoneRe)).cast("long").as("n_phones"),
@@ -200,10 +200,10 @@ object TextAnalysis {
   /** Full per-document analysis projection. The per-row work (tokenize +
     * fingerprint, whole-stage-codegen'd with shared-subexpression
     * elimination since r20) is CPU-bound and runs in the scan stage, so
-    * an under-partitioned small input is widened first — sized to regex
+    * a small input whose split starves it is widened first — sized to regex
     * work density like [[piiScrub]], not flat to full parallelism. */
   def analyze(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes, perRow = true).select(
+    IvfFlatIndex.widenScan(docs, Sizing.bytes(docs), Sizing.RegexTaskBytes).select(
       col(idCol),
       text.token_count(col(textCol)).as("n_tokens"),
       langId(col(textCol)).as("lang_pred"),

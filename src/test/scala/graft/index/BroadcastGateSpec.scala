@@ -352,7 +352,7 @@ class BroadcastGateSpec extends SparkSpec {
       // clustered order: list 0's 200 rows then list 1's — both runs cross
       // an explicit buildAfter=32 cutover, so the prefix scores DIRECT and
       // the rest by table; bits must not change at the seam
-      val clustered = new PqLocalListScorer(pi, books, metricId, buildAfter = 32)
+      val clustered = new PqLocalListScorer(pi, books, metricId, buildAfter = Some(32))
       val cSink = new CollectSink
       for (list <- Seq(0, 1); (id, c) <- codeRows) clustered.scoreInto(list, c, id, cSink)
       assert(cSink.rows.size === 2 * codeRows.size * qs.length)
@@ -366,12 +366,12 @@ class BroadcastGateSpec extends SparkSpec {
       assert(dSink.rows.toSet === truth(longRows), s"default cutover diverged, metric=$metricId")
       // adversarial order: the list flaps every row -> the run counter
       // never reaches the cutover, everything scores direct — same bits
-      val flapping = new PqLocalListScorer(pi, books, metricId, buildAfter = 32)
+      val flapping = new PqLocalListScorer(pi, books, metricId, buildAfter = Some(32))
       val fSink = new CollectSink
       for (((id, c), i) <- codeRows.zipWithIndex) flapping.scoreInto(i % 2, c, id, fSink)
       assert(fSink.rows.toSet === expected, s"flapping diverged, metric=$metricId")
       // a list hotter than the table budget also stays direct — same bits
-      val capped = new PqLocalListScorer(pi, books, metricId, buildAfter = 32,
+      val capped = new PqLocalListScorer(pi, books, metricId, buildAfter = Some(32),
         tableBudgetBytes = 1)
       val capSink = new CollectSink
       for ((id, c) <- codeRows) capped.scoreInto(0, c, id, capSink)

@@ -24,23 +24,27 @@ class FloodBalanceSpec extends SparkSpec {
   private val k = 5
   private val params = SearchParams(k = k, nprobe = 4)
 
-  /** Clustered corpus with 4 big lists (250 rows) and 28 small (15 rows):
-    * the packer's first partition takes the big ones. */
-  private lazy val (epoch, centroids) = {
+  /** A clustered corpus of `rows(l)` rows in list `l`, written and read
+    * back as an epoch, one file per list. */
+  private def clusteredEpoch(rows: Int => Int) = {
     val rnd = new scala.util.Random(17)
     val centers = Array.fill(nlist)(Array.fill(dim)(rnd.nextFloat() * 8f - 4f))
     var id = -1L
-    val rows = centers.indices.flatMap { l =>
-      Seq.fill(if (l < 4) 250 else 15) {
+    val data = centers.indices.flatMap { l =>
+      Seq.fill(rows(l)) {
         id += 1
         (id, centers(l).map(_ + (rnd.nextFloat() - 0.5f) * 0.1f))
       }
     }
     val bc = spark.sparkContext.broadcast(centers)
     val tmp = java.nio.file.Files.createTempDirectory("graft-skew").toString
-    IvfFlatIndex.writeEpoch(IvfFlatIndex.assign(vectorsDF(rows), bc), s"$tmp/vectors")
+    IvfFlatIndex.writeEpoch(IvfFlatIndex.assign(vectorsDF(data), bc), s"$tmp/vectors")
     (IvfFlatIndex.readEpoch(spark, s"$tmp/vectors"), bc)
   }
+
+  /** 4 big lists (250 rows) and 28 small (15 rows): the packer's first
+    * partition takes the big ones. */
+  private lazy val (epoch, centroids) = clusteredEpoch(l => if (l < 4) 250 else 15)
   private lazy val corpus = epoch.select("id", "vec").collect()
     .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
   private lazy val flat = new IvfFlatIndex(spark, epoch, centroids, Metric.L2)
@@ -106,6 +110,27 @@ class FloodBalanceSpec extends SparkSpec {
     assert(perPart.length >= spark.sparkContext.defaultParallelism,
       s"the epoch scan must not be under-partitioned: ${perPart.toSeq}")
     assert(perPart.max > 2 * mean, s"the epoch scan must be skewed: ${perPart.toSeq}")
+  }
+
+  test("widenScan spreads a skewed or under-partitioned scan and leaves an even one") {
+    def widened(df: DataFrame) = !(IvfFlatIndex.widenScan(df, Sizing.bytes(df)) eq df)
+    val p = spark.sparkContext.defaultParallelism
+    assert(widened(epoch.select("id", "list_id", "vec")), "skewed file split")
+    assert(widened(codes), "skewed file split under a projection")
+    val cached = epoch.select("id", "list_id", "vec").persist()
+    try {
+      cached.count()
+      assert(widened(cached), "skewed file split under a cache")
+    } finally cached.unpersist()
+    assert(widened(epoch.coalesce(1)), "one partition")
+    // an epoch of equal lists packs into an even split: no shuffle
+    val (even, _) = clusteredEpoch(_ => 30)
+    assert(even.rdd.getNumPartitions >= p)
+    assert(!widened(even), "even file split")
+    // clustered by list through a shuffle, as a scorer's caller may lay
+    // its corpus out: the split carries no sizes and has enough partitions
+    val byList = epoch.repartition(2 * p, col("list_id")).sortWithinPartitions("list_id")
+    assert(!widened(byList), "list-clustered shuffle")
   }
 
   test("widened and unwidened floods return the same rows, and match static and brute force") {
