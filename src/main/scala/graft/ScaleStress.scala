@@ -92,7 +92,7 @@ object ScaleStress {
     val warmedDF = diskVectors
       .filter(col("list_id").isInCollection(hotLists))
       .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
-    timed(s"warmupHot: persist the ${hotLists.size}/1024 probed lists") {
+    timed(s"warm frame: persist the ${hotLists.size}/1024 probed lists") {
       warmedDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
     }
     servingFloor(diskIdx, s"epoch-backed WARM (${hotLists.size}/1024 lists persisted):")

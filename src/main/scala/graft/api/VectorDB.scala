@@ -30,14 +30,6 @@ import graft.storage.{EpochManager, Manifest, ShardInfo}
  */
 class VectorDB(val spark: SparkSession, val dataPath: String) {
 
-  /** Stable tag for THIS facade in JVM-shared telemetry (the probe-map
-    * eviction counters live in the [[graft.index.ExecutionProbeHook]]
-    * singleton): dataPath names the tenant, the sequence number splits
-    * two facades opened on the same path. Exposed as the `instance`
-    * label in [[metricsText]] and in [[stats]]. */
-  val instanceId: String =
-    s"$dataPath#${VectorDB.instanceSeq.incrementAndGet()}"
-
   private[api] case class Served(
       manifest: Manifest,
       index: IvfFlatIndex,
@@ -71,13 +63,16 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
   private val searchRecall = TrieMap.empty[String,
     (java.util.concurrent.atomic.AtomicLong, java.util.concurrent.atomic.DoubleAdder)]
 
+  /** Set by [[close]]: the execution callbacks of searches this facade
+    * built stop recording. */
+  @volatile private var closed = false
+
   /** Wrap a search result so its executions record into `name`'s latency
     * histogram (reference MetricsCollector::record_search_latency,
     * server/query_service.cpp:686-689). */
   private def timed(name: String, df: DataFrame): DataFrame =
-    graft.index.ExecutionProbeHook.armTimed(df,
-      ns => searchLatency.getOrElseUpdate(name, new LatencyHistogram).record(ns),
-      owner = instanceId)
+    graft.index.ExecutionProbeHook.arm(df, ns =>
+      if (!closed) searchLatency.getOrElseUpdate(name, new LatencyHistogram).record(ns))
 
   private def indexPath(name: String) = s"$dataPath/$name"
   private def manifestPath(name: String) = s"${indexPath(name)}/manifest.json"
@@ -271,7 +266,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
 
       val shardCounts = IvfFlatIndex.readEpoch(spark, s"$path/vectors")
         .groupBy("list_id").count().collect()
-        .map(r => ShardInfo(r.getInt(0), s"$path/vectors/list_id=${r.getInt(0)}", r.getLong(1)))
+        .map(r => ShardInfo.of(r.getInt(0), r.getLong(1)))
         .sortBy(_.listId)
       manifest.copy(
         epoch = epochId,
@@ -434,12 +429,9 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
           val batchCounts = assigned.groupBy("list_id").count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap
           val updated = Manifest.load(s"$path/manifest.json")
-          val prev = updated.shards.map(sh => sh.listId -> sh).toMap
+          val prev = updated.shards.map(sh => sh.listId -> sh.numVectors).toMap
           val mergedShards = (prev.keySet ++ batchCounts.keySet).toSeq.sorted.map { l =>
-            val base = prev.get(l)
-            ShardInfo(l,
-              base.map(_.path).getOrElse(s"$path/vectors/list_id=$l"),
-              base.map(_.numVectors).getOrElse(0L) + batchCounts.getOrElse(l, 0L))
+            ShardInfo.of(l, prev.getOrElse(l, 0L) + batchCounts.getOrElse(l, 0L))
           }
           updated.copy(
             numVectors = updated.numVectors + added,
@@ -519,7 +511,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     // release caches pinned against the previous serve state
     releaseWarm(name)
     // a DIFFERENT epoch remaps list ids (retrain) — stale hotness stats
-    // would make warmupHot pin the wrong partitions. Same-epoch reloads
+    // would rank lists that no longer exist. Same-epoch reloads
     // (addVectors append) keep their stats.
     val prev = served.get(name)
     if (prev.exists(_.epochId != epochId)) listStats.remove(name)
@@ -533,13 +525,13 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       IvfFlatIndex.broadcastCentroids(spark, readCentroids(s"$path/centroids")))
     val vectors = IvfFlatIndex.readEpoch(spark, s"$path/vectors")
     val stats = listStats.getOrElseUpdate(name, TrieMap.empty)
-    val listener: Array[(Long, Int)] => Unit = pairs => {
+    val listener: Array[(Long, Int)] => Unit = pairs => if (!closed) {
       val now = System.currentTimeMillis()
       pairs.groupBy(_._2).foreach { case (listId, hits) =>
         // atomic replace-loop: two concurrent searches firing for the same
         // list would otherwise race the read-modify-write and lose counts
         // — the LFU ranking would systematically undercount the hottest
-        // lists, which are exactly the ones warmupHot exists to pin
+        // lists
         var done = false
         while (!done) {
           stats.get(listId) match {
@@ -551,8 +543,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
         }
       }
     }
-    val index = new IvfFlatIndex(spark, vectors, bc, manifest.metric, listener,
-      probeOwner = instanceId)
+    val index = new IvfFlatIndex(spark, vectors, bc, manifest.metric, listener)
     // persisted covering radii: written at build and MAINTAINED by the
     // append path (round 19: max(old, batchMax) is exact for the union);
     // absent only on pre-r19-appended or cosine-flat epochs — the index
@@ -951,48 +942,6 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       .sortBy { case (l, c, _) => (-c, l) }
       .take(topN)
 
-  /** Hot-set warm state per index: (warmed list set, its cached subset) —
-    * lets a PERIODIC auto-warmup (serving loops re-warm every N batches)
-    * be a free no-op while the working set is stable, and swap cleanly
-    * (persist new, release old) when the LFU ranking drifts. */
-  private val hotWarm = TrieMap.empty[String, (Set[Int], DataFrame)]
-
-  /** C1: persist the hottest lists (LFU preload — reference
-    * prefetcher.h:139-183 ListPrefetcher hotness idea). Re-entrant by
-    * design: an unchanged hot set returns 0 without touching the cache;
-    * a drifted one pins the new subset and releases the previous — so
-    * wiring this into a serving loop ([[graft.streaming.StreamingSearch
-    * .serve]]'s `warmupEvery`) never accumulates stale cached copies.
-    * Like [[warmup]], it speeds only the predicate, flood and SQL paths:
-    * bounded predicate-free searches read resident list blocks. Released
-    * on the next epoch load and on [[close]]. */
-  def warmupHot(name: String, topN: Int = 10): Long = {
-    val hot = hotLists(name, topN).map(_._1)
-    if (hot.isEmpty) return 0L
-    val hotSet = hot.toSet
-    // under the state lock: racing an epoch swap (loadServed drops
-    // hotWarm and unpersists) could otherwise pin a subset of the OLD
-    // epoch's vectors into hotWarm AFTER the swap — and the stable-set
-    // short-circuit would then block re-warming the new epoch until the
-    // hot set drifts. Two concurrent warmupHot calls could also both
-    // persist and leak one cached copy. Warm materialization inside the
-    // lock delays a concurrent activate by one warm pass — the admin op
-    // loses that race by design.
-    stateLock(name).synchronized {
-      hotWarm.get(name) match {
-        case Some((prev, _)) if prev == hotSet => 0L // working set stable
-        case prevEntry =>
-          val s = served.getOrElse(name, throw new NotFoundException(s"Index not found: $name"))
-          val subset = s.index.vectors.filter(col("list_id").isin(hot: _*))
-          subset.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val n = subset.count()
-          prevEntry.foreach(_._2.unpersist(blocking = false))
-          hotWarm.put(name, (hotSet, subset))
-          n
-      }
-    }
-  }
-
   // --- A1 Search -----------------------------------------------------------
 
   /**
@@ -1140,13 +1089,14 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
   /**
    * C6/A2: pin the given lists (or all) into executor memory — persist +
    * materialize the pruned partitions, the Spark analog of preloading
-   * lists to the GPU (server/query_service.cpp:170-204). Bounded
-   * predicate-free searches already score the served epoch's resident
-   * list blocks, so this now speeds only the paths that still scan the
-   * epoch through SQL: predicate searches ([[IvfFlatIndex.searchWhere]]),
-   * floods above [[IvfFlatIndex.MaxStaticBatch]] and the SQL surface
+   * lists to the GPU (server/query_service.cpp:170-204). [[search]]'s
+   * bounded batches never read these frames: every served epoch is
+   * already held as resident list blocks ([[loadIndex]]). The frames
+   * speed the paths that still scan the epoch through SQL — floods above
+   * [[IvfFlatIndex.MaxStaticBatch]], [[rangeSearch]], and the SQL surface
    * ([[registerSql]]) when the cached fragment substitutes into its plan.
-   * Released on the next epoch load and on [[close]].
+   * Released on the next epoch load and on [[close]]; the hot lists to
+   * pass come from [[hotLists]].
    */
   def warmup(name: String, listIds: Seq[Int] = Nil): Long = {
     val s = served.getOrElse(name, throw new NotFoundException(s"Index not found: $name"))
@@ -1158,11 +1108,9 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     subset.count()
   }
 
-  /** Unpersist the [[warmup]] and [[warmupHot]] frames pinned for `name`. */
-  private def releaseWarm(name: String): Unit = {
+  /** Unpersist the [[warmup]] frames pinned for `name`. */
+  private def releaseWarm(name: String): Unit =
     warmed.remove(name).foreach(_.foreach(_.unpersist(blocking = false)))
-    hotWarm.remove(name).foreach(_._2.unpersist(blocking = false))
-  }
 
   /** Plan/codegen warmup (round 19, r18 verdict #2): compile the PQ/flat
     * flood search plan family against a tiny synthetic table BEFORE the
@@ -1171,7 +1119,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     * is scale-invariant, so the tiny execution populates the Janino cache
     * the real plans then hit (see [[graft.index.PlanWarmup]] — measured:
     * flood iter1 dropped from ~20 s to ≤2x steady state). Idempotent per
-    * session; the data-side warmups ([[warmup]]/[[warmupHot]]) compose. */
+    * session; the data-side [[warmup]] composes. */
   def warmupPlans(): Unit = {
     graft.index.PlanWarmup.warmPqFlood(spark)
     graft.index.PlanWarmup.warmSqlAnn(spark)
@@ -1205,13 +1153,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       "num_shards" -> s.manifest.shards.size,
       "list_imbalance" -> imbalance,
       "resident_vectors" -> s.index.residentLists.map(_.vectors).getOrElse(0L),
-      "resident_bytes" -> s.index.residentLists.map(_.bytes).getOrElse(0L),
-      // probe-map evictions attributed to THIS facade (non-zero = some of
-      // its plans' stats callbacks were dropped — see metricsText HELP)
-      "probe_refire_evictions" ->
-        graft.index.ExecutionProbeHook.firedEvictionsFor(instanceId),
-      "probe_pending_evictions" ->
-        graft.index.ExecutionProbeHook.pendingEvictionsFor(instanceId))
+      "resident_bytes" -> s.index.residentLists.map(_.bytes).getOrElse(0L))
   }
 
   // --- A10 health + metrics -------------------------------------------------
@@ -1359,10 +1301,10 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
         sb.append('\n')
       }
     }
-    // The counters below are emitted UNCONDITIONALLY, zero included: a
+    // The counter below is emitted UNCONDITIONALLY, zero included: a
     // Prometheus counter absent until its first event breaks increase()/
     // rate() over the first window and makes "0" indistinguishable from
-    // "not exported" — and these are alert-worthy counters, where that
+    // "not exported" — and it is an alert-worthy counter, where that
     // distinction is the whole point.
     //
     // null query vectors are DROPPED by the bounded-batch search paths
@@ -1373,50 +1315,22 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     sb.append("# HELP vdb_dropped_null_queries_total Null query vectors dropped on bounded-batch search paths (no result rows emitted; JVM-wide)\n")
     sb.append("# TYPE vdb_dropped_null_queries_total counter\n")
     sb.append(s"vdb_dropped_null_queries_total $nullDrops\n")
-    // probe re-fire evictions: growing value = some re-executed plans'
-    // callbacks (hot-list stats, latency histograms) silently stopped
-    // updating — raise -Dgraft.probe.maxFired (JVM-wide)
-    val probeEvict = graft.index.ExecutionProbeHook.firedEvictions.get()
-    sb.append("# HELP vdb_probe_refire_evictions_total Execution-probe callbacks evicted from the re-fire map (re-executed plans stop updating stats; JVM-wide)\n")
-    sb.append("# TYPE vdb_probe_refire_evictions_total counter\n")
-    sb.append(s"vdb_probe_refire_evictions_total $probeEvict\n")
-    // pending-map evictions are worse: those plans never fire at all
-    val pendingEvict = graft.index.ExecutionProbeHook.pendingEvictions.get()
-    sb.append("# HELP vdb_probe_pending_evictions_total Execution-probe callbacks evicted before ever firing (armed plans exceeded the pending cap; JVM-wide)\n")
-    sb.append("# TYPE vdb_probe_pending_evictions_total counter\n")
-    sb.append(s"vdb_probe_pending_evictions_total $pendingEvict\n")
-    // THIS facade's share of the two JVM totals above — distinct metric
-    // names (not a labeled series of the same name: the unlabeled totals
-    // are pinned and a mixed labeled/unlabeled family would double-count
-    // under sum()). Emitted unconditionally at 0, same rationale. The
-    // label is `facade`, NOT `instance`: Prometheus reserves `instance`
-    // for the scrape-target label, and without honor_labels a collision
-    // is exported as `exported_instance` — dashboards keyed on
-    // instance="<facade>" would silently miss.
-    val inst = promLabel(instanceId)
-    sb.append("# HELP vdb_probe_refire_evictions_instance_total Re-fire-map probe evictions attributed to this facade instance\n")
-    sb.append("# TYPE vdb_probe_refire_evictions_instance_total counter\n")
-    sb.append(s"""vdb_probe_refire_evictions_instance_total{facade="$inst"} ${graft.index.ExecutionProbeHook.firedEvictionsFor(instanceId)}""")
-    sb.append('\n')
-    sb.append("# HELP vdb_probe_pending_evictions_instance_total Pending-map probe evictions attributed to this facade instance\n")
-    sb.append("# TYPE vdb_probe_pending_evictions_instance_total counter\n")
-    sb.append(s"""vdb_probe_pending_evictions_instance_total{facade="$inst"} ${graft.index.ExecutionProbeHook.pendingEvictionsFor(instanceId)}""")
-    sb.append('\n')
     sb.toString
   }
 
-  /** Discard this facade: drop the serving map, release the served
-    * indexes' resident list blocks and the [[warmup]]/[[warmupHot]]
-    * frames, and check this instance's per-owner probe-eviction counters
-    * out of the JVM-global registry — without the checkout, facade churn
-    * in a long-lived multi-tenant driver grows that registry one
-    * permanent entry per facade ever created. Broadcasts follow the
+  /** Discard this facade: stop the execution callbacks of every search
+    * it built (hot-list stats and latency histograms no longer record,
+    * even for a DataFrame that runs after close()), drop the serving map,
+    * and release the served indexes' resident list blocks and the
+    * [[warmup]] frames. A callback lives as long as its DataFrame, so
+    * nothing is left in any JVM-wide registry. Broadcasts follow the
     * SparkSession's lifecycle as before; this facade must simply not be
     * used after close(). */
   def close(): Unit = {
+    closed = true
     served.values.foreach(_.index.releaseResident())
     served.clear()
-    (warmed.keySet ++ hotWarm.keySet).foreach(releaseWarm)
+    warmed.keySet.foreach(releaseWarm)
     sqlRegistered.values.foreach { case (path, view, token, books) =>
       books.foreach(_.unpersist(blocking = false))
       // the view teardown follows the SAME token guard as the registry
@@ -1439,7 +1353,6 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       if (owns) { spark.catalog.dropTempView(view); () }
     }
     sqlRegistered.clear()
-    graft.index.ExecutionProbeHook.releaseOwner(instanceId)
   }
 
   def cleanupOldEpochs(name: String, keepN: Int = 3): Seq[String] =
@@ -1514,7 +1427,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
           s"$dst/codebooks")
       val shardCounts = IvfFlatIndex.readEpoch(spark, s"$dst/vectors")
         .groupBy("list_id").count().collect()
-        .map(r => ShardInfo(r.getInt(0), s"$dst/vectors/list_id=${r.getInt(0)}", r.getLong(1)))
+        .map(r => ShardInfo.of(r.getInt(0), r.getLong(1)))
         .sortBy(_.listId)
       Manifest.load(s"$src/manifest.json").copy(
         epoch = newId,
@@ -1540,8 +1453,6 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
 }
 
 object VectorDB {
-
-  private[api] val instanceSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Per-(dataPath, index) serve-state monitors — JVM-global so that
     * multi-facade deployments over one data directory serialize their

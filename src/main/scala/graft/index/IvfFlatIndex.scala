@@ -52,17 +52,12 @@ class IvfFlatIndex(
     val vectors: DataFrame,
     val centroids: Broadcast[Array[Array[Float]]],
     val metric: Metric.Value,
-    /** Called with the (qid, list_id) probe pairs of each small-batch
-      * search WHEN IT EXECUTES (via [[ExecutionProbeHook]]) — feeds LFU
-      * hot-list stats (reference access_count / last_access,
-      * engine/ivf_flat_index.h:34-35). Leave the default no-op to keep
-      * search plans free of the observe() wrapper entirely. */
-    val probeListener: Array[(Long, Int)] => Unit = IvfFlatIndex.NoopProbeListener,
-    /** Registry tag for [[ExecutionProbeHook]] eviction attribution — set
-      * by the owning facade (VectorDB passes its instance id) so a
-      * multi-tenant JVM can tell WHOSE serving loop outran the probe-map
-      * caps. "" = untagged (JVM totals only). */
-    val probeOwner: String = "") {
+    /** Called with the (qid, list_id) probe pairs of each bounded-batch
+      * search WHEN IT EXECUTES (a callback carried in the search's plan,
+      * [[ExecutionProbeHook]]) — feeds LFU hot-list stats (reference
+      * access_count / last_access, engine/ivf_flat_index.h:34-35). The
+      * default no-op arms nothing: the plan carries no callback node. */
+    val probeListener: Array[(Long, Int)] => Unit = IvfFlatIndex.NoopProbeListener) {
 
   def nlist: Int = centroids.value.length
   def dimension: Int = centroids.value.head.length
@@ -212,7 +207,7 @@ class IvfFlatIndex(
     * abandoned DataFrame must leave hot-list stats untouched). */
   private def observed(result: DataFrame, pairs: Array[(Long, Int)]): DataFrame =
     if (probeListener eq IvfFlatIndex.NoopProbeListener) result
-    else ExecutionProbeHook.arm(result, () => probeListener(pairs), probeOwner)
+    else ExecutionProbeHook.arm(result, _ => probeListener(pairs))
 
   private def searchStaticPruned(
       corpus: DataFrame, pairs: Array[(Long, Int)],
@@ -427,8 +422,8 @@ class IvfFlatIndex(
 
 object IvfFlatIndex {
 
-  /** Default listener sentinel: searches on an index built with this skip
-    * the execution hook entirely (no observe() node in the plan). */
+  /** Default listener sentinel: searches on an index built with this arm
+    * no execution callback (no [[ProbedNode]] in the plan). */
   val NoopProbeListener: Array[(Long, Int)] => Unit = _ => ()
 
   /** Total null query vectors dropped across the BOUNDED-batch search

@@ -326,14 +326,10 @@ private[index] final class ResidentQuery(
 
 /**
  * The resident search as a plan leaf, so `search` stays lazy and returns
- * a DataFrame. `callbacks` receive each execution's wall time in ns —
- * the hot-list stats and the latency histogram attach here
- * ([[ExecutionProbeHook.armTimed]]) instead of through an `observe()`
- * node, which would turn a collect into a second job.
+ * a DataFrame.
  */
 case class ResidentTopKNode(
     @transient query: ResidentQuery,
-    @transient callbacks: Seq[Long => Unit],
     override val output: Seq[Attribute]) extends LeafNode with MultiInstanceRelation {
   override def maxRows: Option[Long] = Some(query.maxRows)
   override def computeStats(): Statistics = Statistics(sizeInBytes = BigInt(query.maxRows) * 28)
@@ -344,15 +340,12 @@ case class ResidentTopKNode(
  * Executes a [[ResidentTopKNode]]. A collect (or take) runs exactly one
  * Spark job: the scoring job, whose merged rows are returned directly.
  * Any other consumer gets those rows through a one-partition RDD (a
- * second, trivial job). Every execution fires the callbacks once, after
- * the rows exist; a failed execution fires none. Everything runs on the
- * driver, so the batch and callbacks are transient: a plan tree that
- * ships inside a task closure (whole-stage codegen captures its
- * subtree) carries neither.
+ * second, trivial job). Everything runs on the driver, so the batch is
+ * transient: a plan tree that ships inside a task closure (whole-stage
+ * codegen captures its subtree) does not carry it.
  */
 case class ResidentTopKExec(
     @transient query: ResidentQuery,
-    @transient callbacks: Seq[Long => Unit],
     override val output: Seq[Attribute]) extends LeafExecNode {
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -360,20 +353,11 @@ case class ResidentTopKExec(
     "numCandidates" -> SQLMetrics.createMetric(sparkContext, "candidates scored"))
 
   override def executeCollect(): Array[InternalRow] = {
-    val t0 = System.nanoTime()
     val (rows, candidates) = query.run()
     longMetric("numCandidates") += candidates
     longMetric("numOutputRows") += rows.length
     Option(sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)).foreach(id =>
       SQLMetrics.postDriverMetricUpdates(sparkContext, id, metrics.values.toSeq))
-    val ns = System.nanoTime() - t0
-    callbacks.foreach { cb =>
-      try cb(ns)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] resident search callback failed: $e")
-      }
-    }
     rows
   }
 
@@ -388,8 +372,7 @@ case class ResidentTopKExec(
 /** Plans [[ResidentTopKNode]]; injected additively per session. */
 object ResidentTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ResidentTopKNode(query, callbacks, output) =>
-      ResidentTopKExec(query, callbacks, output) :: Nil
+    case ResidentTopKNode(query, output) => ResidentTopKExec(query, output) :: Nil
     case _ => Nil
   }
 }
@@ -400,15 +383,6 @@ object ResidentTopK {
     * runs until it is executed. */
   private[index] def apply(spark: SparkSession, query: ResidentQuery): DataFrame = {
     GraftSqlBridge.ensureStrategy(spark, ResidentTopKStrategy)
-    GraftSqlBridge.ofRows(spark, ResidentTopKNode(query, Nil, RankTopK.outputAttrs))
+    GraftSqlBridge.ofRows(spark, ResidentTopKNode(query, RankTopK.outputAttrs))
   }
-
-  /** `df` with `cb` added to its execution callbacks, when `df` is a
-    * resident search; None for any other plan. */
-  private[index] def withCallback(df: DataFrame, cb: Long => Unit): Option[DataFrame] =
-    df.queryExecution.logical match {
-      case n: ResidentTopKNode =>
-        Some(GraftSqlBridge.ofRows(df.sparkSession, n.copy(callbacks = n.callbacks :+ cb)))
-      case _ => None
-    }
 }

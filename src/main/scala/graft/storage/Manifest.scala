@@ -16,6 +16,15 @@ import graft.{IndexConfig, Metric}
  */
 case class ShardInfo(listId: Int, path: String, numVectors: Long)
 
+object ShardInfo {
+
+  /** One list's shard, its `path` relative to the epoch directory, so the
+    * manifest is the same wherever the data root lives. Nothing reads
+    * `path` back: manifests written with absolute paths still load. */
+  def of(listId: Int, numVectors: Long): ShardInfo =
+    ShardInfo(listId, s"vectors/list_id=$listId", numVectors)
+}
+
 case class Manifest(
     name: String,
     dimension: Int,

@@ -25,23 +25,19 @@ object StreamingSearch {
   /**
    * Start a serving loop: `queryStream` is a streaming DataFrame of
    * (qid LONG, qvec ARRAY<FLOAT>); each micro-batch is searched as one
-   * batch and handed to `sink` with the batch id. The per-batch broadcast
-   * state (query map; none on the resident path) is released as soon as
-   * the sink returns — a serving loop runs for days, and without the
-   * release every micro-batch leaks one broadcast into the executors'
-   * block managers until a driver GC happens to trigger the
-   * ContextCleaner.
-   *
-   * `warmupEvery` > 0 invokes `warm` after every N SERVED (non-idle)
-   * micro-batches — the LFU-stats → hot-list preload loop (pass
-   * `() => db.warmupHot(name)`: re-entrant, free while the working set is
-   * stable). Its measured gain, the batch-64 floor p50 ~314 → ~195 ms on
-   * the 1M x 128D epoch-backed serving shape, predates resident list
-   * blocks: an index the facade serves now scores bounded batches from
-   * resident blocks, and the warm frames speed only its predicate,
-   * flood and SQL paths. Runs on the foreachBatch thread, so the first
-   * call after a drift pays its materialization inside one trigger — the
-   * steady-state calls are set-compare no-ops.
+   * batch and handed to `sink` with the batch id. A bounded micro-batch
+   * scores the index's resident list blocks when it holds them (one
+   * Spark job per collect); a flood between triggers stays fully
+   * distributed. The per-batch broadcast state (query map; none on the
+   * resident path) is released as soon as the sink returns — a serving
+   * loop runs for days, and without the release every micro-batch leaks
+   * one broadcast into the executors' block managers until a driver GC
+   * happens to trigger the ContextCleaner. A bounded batch's probe
+   * listener fires once for each execution the sink runs (the callback
+   * rides in the search's plan), so a batch the sink never executes
+   * records nothing.
+   * `admit` runs before any search is built; a batch it rejects is
+   * skipped.
    */
   def serve(
       index: IvfFlatIndex,
@@ -49,11 +45,8 @@ object StreamingSearch {
       params: SearchParams,
       checkpointPath: String,
       triggerMs: Long = 100L,
-      warmupEvery: Int = 0,
-      warm: () => Unit = () => (),
       admit: Long => Boolean = _ => true)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val servedBatches = new java.util.concurrent.atomic.AtomicLong
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
     queryStream.writeStream
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -61,25 +54,20 @@ object StreamingSearch {
         // ONE bounded snapshot answers emptiness AND serves as the batch —
         // a separate isEmpty probe would double the per-trigger job count
         // on the serving hot loop
-        val ran = IvfFlatIndex.snapshotQueries(batch).batch match {
-          case Some(b) if b.isEmpty => false // idle trigger: nothing to serve
+        IvfFlatIndex.snapshotQueries(batch).batch match {
+          case Some(b) if b.isEmpty => // idle trigger: nothing to serve
           // admit() runs AFTER the emptiness read but BEFORE any search
           // construction: a load-shedding guard must not pay the probe +
           // broadcast build for a batch it is about to reject
-          case _ if !admit(batchId) => false
+          case _ if !admit(batchId) =>
           case Some(b) =>
             val (res, release) = index.searchBatchManaged(b, params)
             try sink(res, batchId) finally release()
-            true
           case None => // flood between triggers: stay fully distributed
             sink(index.searchWhere(batch, params, None, IvfFlatIndex.ForceJoin), batchId)
-            true
         }
-        if (ran && warmupEvery > 0 &&
-          servedBatches.incrementAndGet() % warmupEvery == 0) warm()
       }
       .start()
-  }
 
   /**
    * [[serve]] wrapped in a [[ServingGuard]] (the reference's LoadBalancer
@@ -113,20 +101,10 @@ object StreamingSearch {
       guard: ServingGuard,
       triggerMs: Long = 100L,
       onReject: (Long, Throwable) => Unit = (_, _) => (),
-      warmupEvery: Int = 0,
-      warm: () => Unit = () => (),
       maintenanceEvery: Int = 0)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val served = new java.util.concurrent.atomic.AtomicLong(0)
-    // warm counting lives HERE, not in serve(): serve counts a batch as
-    // served the moment the sink callback returns, but this wrapper
-    // swallows guard rejections and handler failures to keep the loop
-    // alive — counting those would fire warm() (real materialization
-    // work) during exactly the failure/overload episodes the guard is
-    // shedding, on the same foreachBatch thread
     serve(index, queryStream, params, checkpointPath, triggerMs,
-      warmupEvery = 0, warm = () => (),
       admit = { batchId =>
         if (maintenanceEvery > 0 &&
           batches.incrementAndGet() % maintenanceEvery == 0) guard.maintenanceTick()
@@ -136,11 +114,8 @@ object StreamingSearch {
       }) { (res, batchId) =>
       // NonFatal: an OOM/LinkageError must kill the loop, not be recorded
       // as an ordinary service error while the JVM limps on
-      val ok =
-        try { guard.guarded("search")(sink(res, batchId)); true }
-        catch { case scala.util.control.NonFatal(e) => onReject(batchId, e); false }
-      if (ok && warmupEvery > 0 &&
-        served.incrementAndGet() % warmupEvery == 0) warm()
+      try guard.guarded("search")(sink(res, batchId))
+      catch { case scala.util.control.NonFatal(e) => onReject(batchId, e) }
     }
   }
 

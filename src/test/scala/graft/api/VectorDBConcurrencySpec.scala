@@ -6,14 +6,12 @@ import graft.{IndexConfig, SparkSpec}
 
 /**
  * Two facades in one SparkSession driving full lifecycles CONCURRENTLY —
- * the multi-tenant serving shape the per-instance eviction attribution
- * (round 12) and `close()` exist for, previously only exercised
- * single-facade. Asserts: both lifecycles complete against their own
- * data, per-owner probe-eviction counters never cross-attribute, one
- * facade's close() neither disturbs the survivor's counters nor its
- * serving, and both indices' epoch state files come out of the concurrent
- * run uncorrupted (re-loadable by a fresh EpochManager with the right
- * active pointer).
+ * the multi-tenant serving shape `close()` exists for. Asserts: both
+ * lifecycles complete against their own data, a closed facade's searches
+ * stop recording while the survivor's keep recording and serving, and
+ * both indices' epoch state files come out of the concurrent run
+ * uncorrupted (re-loadable by a fresh EpochManager with the right active
+ * pointer).
  */
 class VectorDBConcurrencySpec extends SparkSpec {
 
@@ -46,11 +44,6 @@ class VectorDBConcurrencySpec extends SparkSpec {
       }
       tops(t) = db.search(s"idx$t", queriesDF(Seq(7L -> probe)),
         topk = 1, nprobe = 4).collect().head.getLong(1)
-      // charge pending evictions to THIS owner (the attribution shape):
-      // 4096-cap overflow of armed-but-never-executed probes
-      val df = { val s = spark; import s.implicits._; Seq(t).toDF("x") }
-      (0 to 4096).foreach(_ =>
-        graft.index.ExecutionProbeHook.arm(df, () => (), db.instanceId))
     }
 
     val threads = (0 until 2).map { t =>
@@ -68,28 +61,34 @@ class VectorDBConcurrencySpec extends SparkSpec {
         threads.filter(_.isAlive).map(_.getName).mkString(","))
     assert(errs.isEmpty, s"concurrent lifecycles failed: ${errs}")
 
-    // per-owner attribution, not a shared pot: each facade carries ITS
-    // eviction charge, and the Prometheus text exposes only its own label
-    val Seq(o0, o1) = dbs.toSeq.map(_.instanceId)
-    assert(o0 !== o1)
-    val p0 = graft.index.ExecutionProbeHook.pendingEvictionsFor(o0)
-    val p1 = graft.index.ExecutionProbeHook.pendingEvictionsFor(o1)
-    assert(p0 >= 1L && p1 >= 1L, s"both owners must be charged, got $p0/$p1")
-    assert(dbs(0).metricsText().contains(s"""facade="$o0""""))
-    assert(!dbs(0).metricsText().contains(s"""facade="$o1""""))
-
-    // close facade 0: its registry entries check out; facade 1's survive
-    // untouched and it KEEPS SERVING
+    // close facade 0 with searches of both facades built but not run: a
+    // resident batch and a flood above MaxStaticBatch. The closed facade's
+    // searches still answer but record nothing; the survivor's record
+    // each execution and it KEEPS SERVING
+    val flood = queriesDF(randomVectors(
+      graft.index.IvfFlatIndex.MaxStaticBatch + 76, Dim, seed = 44))
+    val pending = (0 until 2).map { t =>
+      val probe = randomVectors(1, Dim, seed = 42 + t).head._2
+      Seq(dbs(t).search(s"idx$t", queriesDF(Seq(7L -> probe)), topk = 5, nprobe = 4),
+        dbs(t).search(s"idx$t", flood, topk = 5, nprobe = 4))
+    }
+    def recorded(t: Int): (Any, Long) = {
+      org.apache.spark.sql.graftshims.drainListenerBus(spark)
+      (dbs(t).metrics(s"idx$t")("searches_total"),
+        dbs(t).hotLists(s"idx$t", topN = 1000).map(_._2).sum)
+    }
+    val before = (0 until 2).map(recorded)
     dbs(0).close()
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(o0) === 0L)
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(o1) === p1,
-      "closing one facade must not disturb the survivor's counters")
+    pending.flatten.foreach(df => assert(df.collect().nonEmpty))
+    assert(recorded(0) === before(0), "a closed facade's searches still recorded")
+    val (n1, hits1) = before(1)
+    assert(recorded(1) === ((n1.asInstanceOf[Long] + 2L, hits1 + 4L)),
+      "the open facade must record both of its searches")
     val probe1 = randomVectors(1, Dim, seed = 43).head._2
     val after = dbs(1).search("idx1", queriesDF(Seq(9L -> probe1)),
       topk = 1, nprobe = 4).collect().head.getLong(1)
     assert(after === tops(1), "the surviving facade must serve identically after the peer's close")
     dbs(1).close()
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(o1) === 0L)
 
     // epoch state files survived the concurrent run: a FRESH manager per
     // index loads them, lists exactly one epoch, and the active pointer

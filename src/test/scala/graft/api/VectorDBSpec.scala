@@ -51,6 +51,30 @@ class VectorDBSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a resident collect with both facade callbacks armed runs one Spark job and fires both") {
+    ready
+    val df = db.search("test_index", qs, topk = 3, nprobe = 2)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ResidentTopK") && plan.contains("Probed"), plan)
+    org.apache.spark.sql.graftshims.drainListenerBus(spark)
+    val searches = db.metrics("test_index")("searches_total").asInstanceOf[Long]
+    val probes = db.hotLists("test_index", topN = 1000).map(_._2).sum
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      df.collect()
+      org.apache.spark.sql.graftshims.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() === 1, s"a resident collect ran ${jobs.get()} jobs")
+    assert(db.metrics("test_index")("searches_total") === searches + 1)
+    assert(db.hotLists("test_index", topN = 1000).map(_._2).sum === probes + 5 * 2)
+  }
+
   test("epoch lifecycle schedules no per-list job; appends write from every task, keep the centroid broadcast") {
     val nlist = 64
     val ldb = new VectorDB(spark, Files.createTempDirectory("graft-lifecycle").toString)
@@ -149,6 +173,39 @@ class VectorDBSpec extends SparkSpec {
     assert(loaded("num_shards") === 1)
     // restore the trained epoch for the other tests (shared fixture)
     db.activateEpoch("test_index", prev)
+  }
+
+  test("manifest shard paths are relative to the epoch, so two roots write equal manifests") {
+    val base = Files.createTempDirectory("graft-rel").toString
+    val cents = Array(Array.fill(8)(-0.5f), Array.fill(8)(0.0f), Array.fill(8)(0.5f))
+    val manifests = Seq("r", "root-with-a-longer-name").map { dir =>
+      val rdb = new VectorDB(spark, s"$base/$dir")
+      rdb.createIndex(IndexConfig("rel", dimension = 8, nlist = 3))
+      val epoch = rdb.buildEpoch("rel", corpus, Some(cents))
+      val em = new graft.storage.EpochManager(s"$base/$dir/rel/epochs")
+      val text = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(em.epochPath(epoch), "manifest.json")), "UTF-8")
+      assert(!text.contains(base), s"manifest holds an absolute path:\n$text")
+      (rdb, epoch, em, graft.storage.Manifest.load(s"${em.epochPath(epoch)}/manifest.json"))
+    }
+    val Seq((_, _, _, short), (rdb, epoch, em, long)) = manifests
+    assert(short.shards.nonEmpty)
+    assert(short.shards === long.shards)
+    assert(long.shards.forall(sh => sh.path === s"vectors/list_id=${sh.listId}"))
+    // a manifest written with absolute shard paths (older epochs) still
+    // loads and serves, and the next append rewrites its shards relative
+    val mf = java.nio.file.Paths.get(em.epochPath(epoch), "manifest.json")
+    Files.write(mf, new String(Files.readAllBytes(mf), "UTF-8")
+      .replace("\"vectors/list_id=", s"\"${em.epochPath(epoch)}/vectors/list_id=")
+      .getBytes("UTF-8"))
+    assert(graft.storage.Manifest.load(mf.toString).shards.forall(_.path.startsWith("/")))
+    rdb.activateEpoch("rel", epoch)
+    assert(rdb.search("rel", qs, topk = 3).count() === 15)
+    rdb.addVectors("rel", vectorsDF(randomVectors(10, 8, seed = 5).map { case (i, v) => (i + 900000L, v) }))
+    val appended = graft.storage.Manifest.load(mf.toString).shards
+    assert(appended.forall(sh => sh.path === s"vectors/list_id=${sh.listId}"))
+    assert(appended.map(_.numVectors).sum === short.shards.map(_.numVectors).sum + 10)
+    manifests.foreach(_._1.close())
   }
 
   test("search validation: empty queries -> INVALID_ARGUMENT") {
@@ -343,7 +400,7 @@ class VectorDBSpec extends SparkSpec {
     assert(db.listEpochs("test_index").contains(epoch))
   }
 
-  test("hot-list stats accumulate from searches and drive warmupHot (C1)") {
+  test("hot-list stats accumulate from searches, hottest first (C1)") {
     ready
     db.search("test_index", qs, topk = 3, nprobe = 2).collect()
     // stats record via a QueryExecutionListener on the async listener bus
@@ -352,12 +409,6 @@ class VectorDBSpec extends SparkSpec {
     assert(hot.nonEmpty)
     assert(hot.map(_._2).sum >= 5 * 2) // 5 queries x nprobe 2 probes recorded
     assert(hot.head._2 === hot.map(_._2).max) // hottest first
-    assert(db.warmupHot("test_index", topN = 2) > 0)
-    // re-entrant (the serving-loop auto-warmup contract): the working set
-    // has not drifted, so the second call is a free no-op
-    assert(db.warmupHot("test_index", topN = 2) === 0L)
-    // a drifted hot set (different topN here) re-pins and releases the old
-    assert(db.warmupHot("test_index", topN = 1) > 0)
   }
 
   test("probe stats record at execution time, not plan construction (C1)") {
@@ -400,12 +451,8 @@ class VectorDBSpec extends SparkSpec {
       assert(ldb.stats("rl")("resident_bytes") === 700L * (4 * 8 + 24))
       assert(ldb.metricsText().contains("vdb_resident_vectors{index=\"rl\"} 700"))
       assert(ldb.metricsText().contains(s"vdb_resident_bytes{index=\"rl\"} ${700 * 56}"))
-      ldb.search("rl", qs, topk = 3, nprobe = 2).collect()
       assert(ldb.warmup("rl", Seq(0, 1)) > 0)
-      assert(ldb.warmupHot("rl", topN = 2) > 0)
-      val vectors = ldb.served("rl").index.vectors
-      warm = Seq(vectors.filter(col("list_id").isin(0, 1)),
-        vectors.filter(col("list_id").isin(ldb.hotLists("rl", 2).map(_._1): _*)))
+      warm = Seq(ldb.served("rl").index.vectors.filter(col("list_id").isin(0, 1)))
       assert(warm.forall(cached))
     } finally ldb.close()
     assert(!warm.exists(cached), "a warm frame survived close()")
@@ -445,72 +492,15 @@ class VectorDBSpec extends SparkSpec {
     assert(text.contains("vdb_searches_total{index=\"test_index\"}"))
   }
 
-  test("probe eviction counters are always present in the Prometheus text") {
+  test("the null-drop counter is always present in the Prometheus text") {
     // zero included: a counter absent until its first event breaks
     // increase()/rate() over the first scrape window and makes 0
     // indistinguishable from not-exported
-    val zeroText = db.metricsText()
-    assert(zeroText.contains("vdb_probe_refire_evictions_total "))
-    assert(zeroText.contains("vdb_probe_pending_evictions_total "))
-    assert(zeroText.contains("vdb_dropped_null_queries_total "))
-    // the counters are JVM-wide and monotonic; bump both directly and
-    // assert the exposition lines appear with at-least-the-bumped values
-    // (other suites may have evicted too — never assert exact equality)
-    graft.index.ExecutionProbeHook.firedEvictions.incrementAndGet()
-    graft.index.ExecutionProbeHook.pendingEvictions.incrementAndGet()
     val text = db.metricsText()
-    assert(text.contains("vdb_probe_refire_evictions_total "))
-    assert(text.contains("vdb_probe_pending_evictions_total "))
-    def value(name: String): Long = text.linesIterator
-      .find(l => l.startsWith(name + " ")).get.split(' ')(1).toLong
-    assert(value("vdb_probe_refire_evictions_total") >= 1L)
-    assert(value("vdb_probe_pending_evictions_total") >= 1L)
-    // per-instance split: this facade's share under its own label, also
-    // emitted unconditionally at 0 — and the direct bumps above were
-    // UNOWNED, so this instance's share must still read 0. The label is
-    // `facade` (not the Prometheus-reserved `instance`, which scrape
-    // targets would shadow into exported_instance).
-    val inst = db.instanceId.replace("\\", "\\\\").replace("\"", "\\\"")
-    assert(text.contains(
-      s"""vdb_probe_refire_evictions_instance_total{facade="$inst"} """))
-    assert(text.contains(
-      s"""vdb_probe_pending_evictions_instance_total{facade="$inst"} """))
+    assert(text.contains("# TYPE vdb_dropped_null_queries_total counter"))
+    assert(text.linesIterator.exists(_.startsWith("vdb_dropped_null_queries_total ")))
     assert(!text.contains("{instance="),
       "metrics must not use the Prometheus-reserved `instance` label")
-  }
-
-  test("close() checks the facade's probe-eviction counters out of the JVM registry") {
-    val db2 = new VectorDB(spark,
-      java.nio.file.Files.createTempDirectory("graft-close").toString)
-    val owner = db2.instanceId
-    // charge one pending eviction to this facade's owner key directly
-    val df = { val s = spark; import s.implicits._; Seq(1).toDF("x") }
-    (0 until 4096 + 1).foreach(_ =>
-      graft.index.ExecutionProbeHook.arm(df, () => (), owner))
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(owner) >= 1L)
-    db2.close()
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(owner) === 0L,
-      "a closed facade must not leave a permanent per-owner registry entry")
-    // resurrection guard: close() also purged the facade's still-resident
-    // Probe entries from the pending map — so flooding the map with
-    // another owner's arms (which evicts the eldest entries) must NOT
-    // bump the closed owner back into the registry. Before the purge,
-    // the 4096 resident entries above would be evicted here and
-    // getOrElseUpdate would silently recreate the per-owner counter.
-    (0 until 4096).foreach(_ =>
-      graft.index.ExecutionProbeHook.arm(df, () => (), "other-owner"))
-    assert(graft.index.ExecutionProbeHook.pendingEvictionsFor(owner) === 0L,
-      "evictions after close() must not resurrect the closed owner's counter")
-    graft.index.ExecutionProbeHook.releaseOwner("other-owner")
-  }
-
-  test("stats() surfaces this instance's probe-eviction counters") {
-    ready
-    val st = db.stats("test_index")
-    assert(st.contains("probe_refire_evictions"))
-    assert(st.contains("probe_pending_evictions"))
-    assert(st("probe_refire_evictions").asInstanceOf[Long] >= 0L)
-    assert(st("probe_pending_evictions").asInstanceOf[Long] >= 0L)
   }
 
   test("measured recall@k lands in metrics and the Prometheus text (round 7)") {

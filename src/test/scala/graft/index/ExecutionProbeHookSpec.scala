@@ -1,106 +1,115 @@
 package graft.index
 
-import graft.SparkSpec
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+
+import graft.{Metric, SearchParams, SparkSpec}
 
 /**
- * Per-owner eviction attribution (the round-11 "counters are JVM-global"
- * advisory): two VectorDB facades in one JVM must be able to tell WHOSE
- * serving loop outran the probe-map caps.
- *
- * This suite floods the PENDING map past its cap (4096) — safe because
- * sbt runs suites sequentially in the forked test JVM, so no other
- * suite's armed-but-not-yet-executed plan can be alive to lose its
- * callback to our flood.
+ * The execution-callback contract, on both paths that arm one: the
+ * resident search (a bounded batch over resident list blocks) and the
+ * SQL static path (the same batch with a predicate). A search's probe
+ * listener fires once per successful execution, never at construction
+ * or on a failed action, for as long as its DataFrame lives.
  */
 class ExecutionProbeHookSpec extends SparkSpec {
 
-  test("pending-map evictions are attributed to the arming owner") {
-    val s = spark
-    import s.implicits._
-    val df = Seq(1).toDF("x")
-    val owner = "probe-owner-" + System.nanoTime()
-    val bystander = "probe-bystander-" + System.nanoTime()
+  private val dim = 8
 
-    val beforeOwner = ExecutionProbeHook.pendingEvictionsFor(owner)
-    val beforeTotal = ExecutionProbeHook.pendingEvictions.get()
-    assert(beforeOwner === 0L, "a never-armed owner starts at zero")
+  /** The probe pairs' qid sets, one per listener call. */
+  private val fires = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
 
-    // fill past the cap: the map keeps the LAST 4096 inserted, so at
-    // least `overflow` of OUR entries are evicted regardless of how many
-    // stale entries other suites left behind
-    val overflow = 50
-    (0 until 4096 + overflow).foreach { _ =>
-      ExecutionProbeHook.arm(df, () => (), owner)
+  private lazy val index: IvfFlatIndex = {
+    val built = IvfFlatIndex.build(spark, vectorsDF(randomVectors(400, dim, seed = 3)), nlist = 4)
+    val path = Files.createTempDirectory("graft-probe").toString + "/vectors"
+    IvfFlatIndex.writeEpoch(built.vectors, path)
+    val idx = new IvfFlatIndex(spark, IvfFlatIndex.readEpoch(spark, path), built.centroids,
+      Metric.L2, pairs => { fires.add(pairs.map(_._1).toSet); () })
+    idx.keepResident()
+    assert(idx.residentLists.nonEmpty)
+    idx
+  }
+
+  private val params = SearchParams(k = 3, nprobe = 2)
+
+  /** A three-query batch whose qids start at `qid0`. */
+  private def batch(qid0: Long): Array[(Long, Array[Float])] =
+    randomVectors(3, dim, seed = qid0.toInt).map { case (i, v) => (qid0 + i, v) }.toArray
+
+  /** (path, the batch's qids, its search) for both paths, the predicate
+    * path's qids offset so the two batches never share one. */
+  private def searches(qid0: Long): Seq[(String, Set[Long], DataFrame)] = {
+    val r = batch(qid0)
+    val p = batch(qid0 + 1000000L)
+    Seq(("resident", r.map(_._1).toSet, index.searchBatch(r, params)),
+      ("predicate", p.map(_._1).toSet, index.searchBatch(p, params, Some(lit(true)))))
+  }
+
+  /** Listener calls so far for the batch of `qids`. */
+  private def firesOf(qids: Set[Long]): Int = {
+    org.apache.spark.sql.graftshims.drainListenerBus(spark)
+    fires.asScala.count(_ == qids)
+  }
+
+  test("a constructed search fires nothing; each collect fires once") {
+    for ((path, qids, df) <- searches(100L)) {
+      assert(firesOf(qids) === 0, s"$path: construction fired")
+      df.collect()
+      assert(firesOf(qids) === 1, s"$path: first collect")
+      df.collect()
+      assert(firesOf(qids) === 2, s"$path: second collect")
     }
-    assert(ExecutionProbeHook.pendingEvictionsFor(owner) >= overflow.toLong,
-      "owner must be charged for its own evicted callbacks")
-    assert(ExecutionProbeHook.pendingEvictions.get() - beforeTotal >=
-      ExecutionProbeHook.pendingEvictionsFor(owner) - beforeOwner,
-      "the JVM total includes every per-owner count")
-    assert(ExecutionProbeHook.pendingEvictionsFor(bystander) === 0L,
-      "an uninvolved owner must not be charged")
-    // the untagged default rolls into the JVM totals only
-    assert(ExecutionProbeHook.pendingEvictionsFor("") === 0L)
   }
 
-  test("a released owner's probes neither re-fire nor re-enter the re-fire map") {
-    val s = spark
-    import s.implicits._
-    val owner = "probe-released-" + System.nanoTime()
-    val fires = new java.util.concurrent.atomic.AtomicLong()
-    val df = ExecutionProbeHook.arm(
-      Seq(1).toDF("x"), () => { fires.incrementAndGet(); () }, owner)
-    df.collect()
-    org.apache.spark.sql.graftshims.drainListenerBus(spark)
-    assert(fires.get() === 1L, "the armed probe fires on execution")
-    // the facade checks out: its probe moved to the re-fire map on the
-    // first execution, and the release must both purge it AND stop the
-    // listener from re-admitting or re-firing it (the migration race's
-    // deterministic half)
-    ExecutionProbeHook.releaseOwner(owner)
-    df.collect()
-    org.apache.spark.sql.graftshims.drainListenerBus(spark)
-    assert(fires.get() === 1L,
-      "a released owner's callback must not fire after close")
-    // and no eviction path can charge the released owner back into the
-    // registry (bump skips released owners)
-    val flood = Seq(2).toDF("y")
-    (0 to 4096).foreach(_ =>
-      ExecutionProbeHook.arm(flood, () => (), "probe-flooder"))
-    assert(ExecutionProbeHook.firedEvictionsFor(owner) === 0L)
-    assert(ExecutionProbeHook.pendingEvictionsFor(owner) === 0L)
-    ExecutionProbeHook.releaseOwner("probe-flooder")
+  test("count() over a search fires once") {
+    for ((path, qids, df) <- searches(200L)) {
+      assert(df.count() > 0)
+      assert(firesOf(qids) === 1, path)
+    }
   }
 
-  test("a released marker aging out of the 1024 bound re-purges its owner " +
-      "(no counter resurrection after >1024 closes, concurrent eviction)") {
-    val s = spark
-    import s.implicits._
-    val df = Seq(1).toDF("x")
-    val owner = "probe-overflow-" + System.nanoTime()
-    ExecutionProbeHook.releaseOwner(owner)
-    // simulate the migration-race zombie (race (a) in the released-set
-    // doc): a probe for the already-released owner resident in the
-    // pending map after the release purge ran
-    ExecutionProbeHook.arm(df, () => (), owner)
-    // churn >1024 further closes on one thread (ages the owner's marker
-    // out of the bounded set — the eviction-time re-purge must take the
-    // zombie with it) while another thread floods the pending map (whose
-    // evictions would `bump` the owner's counter back into the per-owner
-    // registry if the zombie were still resident once the marker is gone)
-    val churn = new Thread(() => (0 until 1200).foreach(i =>
-      ExecutionProbeHook.releaseOwner(s"$owner-churn-$i")))
-    val flood = new Thread(() => (0 to 4200).foreach(_ =>
-      ExecutionProbeHook.arm(df, () => (), "probe-overflow-flooder")))
-    churn.start(); flood.start(); churn.join(); flood.join()
-    // one more flood AFTER the churn finished: by now the marker is
-    // definitely evicted, so only the re-purge protects the owner
-    (0 to 4200).foreach(_ =>
-      ExecutionProbeHook.arm(df, () => (), "probe-overflow-flooder"))
-    assert(ExecutionProbeHook.pendingEvictionsFor(owner) === 0L,
-      "a released owner must stay out of the counter registry even after " +
-        "its marker fell off the 1024-entry released set")
-    assert(ExecutionProbeHook.firedEvictionsFor(owner) === 0L)
-    ExecutionProbeHook.releaseOwner("probe-overflow-flooder")
+  test("a failing action over a search fires nothing") {
+    for ((path, qids, df) <- searches(300L)) {
+      val failing = df.select(when(col("id") >= 0, raise_error(lit("boom"))).as("x"))
+      intercept[Exception](failing.collect())
+      assert(firesOf(qids) === 0, s"$path: a failed action fired")
+    }
+  }
+
+  test("a search re-executed after 65 other executed searches still fires") {
+    for ((path, qids, df) <- searches(400L)) {
+      df.collect()
+      (0 until 65).foreach(i => searches(500L + 10L * i).foreach(_._3.collect()))
+      df.collect()
+      assert(firesOf(qids) === 2, s"$path: the re-execution did not fire")
+    }
+  }
+
+  /** Arms a fresh callback on one search, executes it once, and returns
+    * only a weak reference to the callback. */
+  private def armedAndDropped(df: DataFrame): java.lang.ref.WeakReference[AnyRef] = {
+    val hits = new java.util.concurrent.atomic.AtomicLong()
+    val cb: Long => Unit = _ => { hits.incrementAndGet(); () }
+    ExecutionProbeHook.arm(df, cb).collect()
+    org.apache.spark.sql.graftshims.drainListenerBus(spark)
+    assert(hits.get() === 1L)
+    new java.lang.ref.WeakReference[AnyRef](cb)
+  }
+
+  test("a dropped search's callback is collected") {
+    for ((path, _, df) <- searches(1200L)) {
+      val ref = armedAndDropped(df)
+      var tries = 0
+      while (ref.get() != null && tries < 50) {
+        System.gc()
+        Thread.sleep(50)
+        tries += 1
+      }
+      assert(ref.get() === null, s"$path: a dropped search's callback is still reachable")
+    }
   }
 }

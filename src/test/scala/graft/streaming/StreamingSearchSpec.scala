@@ -45,37 +45,6 @@ class StreamingSearchSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("serve loop fires the auto-warmup hook every N served batches (round 7)") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val index = IvfFlatIndex.build(spark, vectorsDF(randomVectors(200, 8)), nlist = 4)
-    val mem = MemoryStream[(Long, Array[Float])]
-    val warms = new java.util.concurrent.atomic.AtomicInteger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-serve-warm").toString
-    val q = StreamingSearch.serve(
-      index,
-      mem.toDF().toDF("qid", "qvec"),
-      SearchParams(k = 2, nprobe = 2),
-      checkpointPath = s"$tmp/ckpt",
-      triggerMs = 25L,
-      warmupEvery = 2,
-      warm = () => { warms.incrementAndGet(); () }) { (res, _) => res.collect(); () }
-    try {
-      val queries = randomVectors(8, 8, seed = 9)
-      for (i <- 0 until 4) { // 4 served micro-batches -> 2 warmup calls
-        mem.addData(queries.slice(2 * i, 2 * i + 2): _*)
-        q.processAllAvailable()
-      }
-      assert(warms.get() === 2,
-        s"expected a warmup after every 2 served batches, saw ${warms.get()}")
-      // idle triggers (no queued rows) must NOT advance the counter
-      Thread.sleep(200)
-      q.processAllAvailable()
-      assert(warms.get() === 2)
-    } finally q.stop()
-  }
-
   test("guarded serving loop sheds load when the breaker opens and keeps running") {
     val s = spark
     import s.implicits._
