@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
 import graft._
-import graft.index.IvfFlatIndex
+import graft.index.{IvfFlatIndex, Knn}
 import graft.storage.{EpochManager, Manifest, ShardInfo}
 
 /**
@@ -963,9 +963,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     batch match {
       case Some(b) => timed(name, s.index.searchBatch(b, params)) // zero further jobs
       case None => // unbounded batch: stay fully distributed, guard in-plan
-        timed(name, s.index.searchWhere(
-          guardedQueries(queries, s.manifest.dimension), params, None,
-          IvfFlatIndex.ForceJoin))
+        timed(name, s.index.searchJoin(guardedQueries(queries, s.manifest.dimension), params))
     }
   }
 
@@ -1004,30 +1002,23 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
       throw new InvalidArgumentException(
         s"Range search requires an L2 or InnerProduct index; " +
           s"'${name}' uses ${s.manifest.metric}")
-    val (df, release) =
-      s.index.rangeSearchManaged(snapshotToDf(s, batch, queries), radius)
+    val (df, release) = batch match {
+      case Some(b) => s.index.rangeBatchManaged(b, radius)
+      case None => (s.index.rangeJoin(guardedQueries(queries, s.manifest.dimension), radius), () => ())
+    }
     (timed(name, df), release)
-  }
-
-  /** The validated snapshot as a query DataFrame: a bounded batch becomes
-    * a local relation (the validated rows ARE the batch — a
-    * non-deterministic source is never evaluated twice); an over-limit
-    * set stays distributed behind the in-plan dimension guard. */
-  private def snapshotToDf(
-      s: Served,
-      batch: Option[Array[(Long, Array[Float])]],
-      queries: DataFrame): DataFrame = batch match {
-    case Some(b) =>
-      import spark.implicits._
-      b.toSeq.toDF("qid", "qvec")
-    case None => guardedQueries(queries, s.manifest.dimension)
   }
 
   /** Exact search through the serving index (the recall oracle) —
     * same validation matrix as [[search]]. */
   def searchExact(name: String, queries: DataFrame, topk: Int): DataFrame = {
     val (s, batch) = validateAndSnapshot(name, queries, topk)
-    s.index.searchExact(snapshotToDf(s, batch, queries), topk)
+    val corpus = s.index.vectors.select("id", "vec")
+    batch match {
+      case Some(b) => Knn.exactBatchManaged(b, corpus, topk, s.index.metric)._1
+      case None => Knn.exactJoin(guardedQueries(queries, s.manifest.dimension), corpus,
+        topk, s.index.metric)
+    }
   }
 
   /**
@@ -1309,7 +1300,7 @@ class VectorDB(val spark: SparkSession, val dataPath: String) {
     //
     // null query vectors are DROPPED by the bounded-batch search paths
     // (uniform drop semantics, IvfFlatIndex.dropNullQueries; the unbounded
-    // ForceJoin path raises in-plan instead) — the counter makes the
+    // flood entries raise in-plan instead) — the counter makes the
     // resulting missing result rows visible to operators; JVM-wide
     val nullDrops = graft.index.IvfFlatIndex.droppedNullQueries.get()
     sb.append("# HELP vdb_dropped_null_queries_total Null query vectors dropped on bounded-batch search paths (no result rows emitted; JVM-wide)\n")

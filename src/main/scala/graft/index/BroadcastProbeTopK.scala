@@ -42,7 +42,7 @@ import graft.functions.PqKernels
  *    place beats even the compact-codes shuffle of [[CoGroupTopK]]);
  *  - the broadcast ships each query vector ONCE (the equi-join's exchange
  *    shipped one copy per probe row, nprobe× more);
- *  - plan construction stays lazy (no driver jobs) — the ForceJoin /
+ *  - plan construction stays lazy (no driver jobs) — the flood-entry /
  *    streaming-serve contract; the exchange collects the probed side only
  *    at execution, exactly like the hint-based join did internally.
  * Callers gate entry by [[Sizing.fitsBroadcastGate]]; above the gate

@@ -6,10 +6,11 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, graftshims}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructType}
 
 import graft.{Metric, SearchParams}
 import graft.functions.vector
@@ -41,6 +42,14 @@ import graft.storage.LocalWrites._
  * Every path keeps the reference's partial/merge shape: per-list top-k
  * buffers, then one merge per query, and every path returns the same
  * rows (same distances, same (dist, id) ranks).
+ *
+ * Query intake: a query frame is read ONCE ([[IvfFlatIndex.snapshotQueries]])
+ * and goes to one of two entries per surface, a bounded entry over the
+ * decoded batch or a flood entry over the frame — top-k
+ * [[searchBatchManaged]] / [[searchJoin]], range [[rangeBatchManaged]] /
+ * [[rangeJoin]], PQ [[IvfPqIndex.searchBatchManaged]] /
+ * [[IvfPqIndex.searchJoin]], exact [[Knn.exactBatchManaged]] /
+ * [[Knn.exactJoin]]. Callers that already hold a snapshot call the entry.
  *
  * @param vectors   (id LONG, vec ARRAY<FLOAT>, list_id INT) — usually a
  *                  partitionBy("list_id") epoch read
@@ -97,28 +106,15 @@ class IvfFlatIndex(
   def searchWhere(
       queries: DataFrame,
       params: SearchParams,
-      predicate: Option[org.apache.spark.sql.Column],
-      strategy: IvfFlatIndex.ProbeStrategy = IvfFlatIndex.Auto): DataFrame = {
-    val m = params.metric.getOrElse(metric)
-    val nprobe = math.min(params.nprobe, nlist)
-    val corpus = predicate.map(vectors.filter).getOrElse(vectors)
-    if (strategy == IvfFlatIndex.ForceJoin)
-      return searchJoinPruned(corpus, queries.select(col("qid"), col("qvec")),
-        params.k, nprobe, m)
+      predicate: Option[org.apache.spark.sql.Column]): DataFrame =
     // snapshot ONCE: a non-deterministic queries plan (sample, unordered
     // limit) must not be re-evaluated for probe vs join — the probe pairs
-    // and the joined qvecs have to come from the same rows. One job
+    // and the joined qvecs have to come from the same rows. One read
     // answers batch size AND provides the batch.
-    val qdf = queries.select(col("qid"), col("qvec"))
-    // ForceStatic must snapshot the WHOLE batch — the limit-probe would
-    // silently truncate a batch above the threshold
-    if (strategy == IvfFlatIndex.ForceStatic)
-      searchBatch(IvfFlatIndex.decodeQueryRows(qdf.collect()), params, predicate)
-    else IvfFlatIndex.snapshotQueries(qdf).batch match {
+    IvfFlatIndex.snapshotQueries(queries).batch match {
       case Some(batch) => searchBatch(batch, params, predicate)
-      case None => searchJoinPruned(corpus, qdf, params.k, nprobe, m)
+      case None => searchJoin(queries, params, predicate)
     }
-  }
 
   /**
    * Static-pruned search over an ALREADY-COLLECTED query batch: zero Spark
@@ -239,14 +235,21 @@ class IvfFlatIndex(
    *    probed rows ship through Spark's lazy broadcast exchange into
    *    [[BroadcastProbeTopK]] — the corpus never shuffles, each query
    *    vector ships once (the old hint-join shipped one copy per probe
-   *    row), and plan construction stays job-free for ForceJoin callers.
+   *    row), and plan construction runs no Spark job.
    *  - **above the gate** (true floods — queries x nprobe too big to
    *    broadcast): [[CoGroupTopK]] co-partitions probed queries and corpus
    *    on list_id — the same data movement as the plain equi-join it
    *    replaces, with AQE free to split skewed list partitions.
    */
-  private def searchJoinPruned(
-      corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int, m: Metric.Value): DataFrame = {
+  private[graft] def searchJoin(
+      queries: DataFrame,
+      params: SearchParams,
+      predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    val m = params.metric.getOrElse(metric)
+    val nprobe = math.min(params.nprobe, nlist)
+    val k = params.k
+    val corpus = predicate.map(vectors.filter).getOrElse(vectors)
+    val qdf = queries.select(col("qid"), col("qvec"))
     // ONE row per qid BEFORE the probe explosion: duplicated qids with
     // different qvecs probe DIFFERENT list sets, so any per-group
     // first-wins downstream still lets finalizePartial merge candidates
@@ -254,8 +257,8 @@ class IvfFlatIndex(
     // path dedups globally at the driver (dropNullQueries); the flood
     // path must too — the extra query-side exchange is nprobe-times
     // smaller than the probe-replica shuffle that follows.
-    val probed = IvfFlatIndex.probeRows(IvfFlatIndex.onePerQid(queries), centroids, nprobe, m)
-    val qB = Sizing.bytes(queries)
+    val probed = IvfFlatIndex.probeRows(IvfFlatIndex.onePerQid(qdf), centroids, nprobe, m)
+    val qB = Sizing.bytes(qdf)
     val cB = Sizing.bytes(corpus)
     if (Sizing.fitsBroadcastGate(spark, qB, nprobe)) {
       val partial = BroadcastProbeTopK.flat(probed,
@@ -386,38 +389,49 @@ class IvfFlatIndex(
    * broadcast blocks accumulate until GC. The plan must not be executed
    * again after release().
    */
-  def rangeSearchManaged(queries: DataFrame, radius: Double): (DataFrame, () => Unit) = {
+  def rangeSearchManaged(queries: DataFrame, radius: Double): (DataFrame, () => Unit) =
+    IvfFlatIndex.snapshotQueries(queries).batch match {
+      case Some(batch) => rangeBatchManaged(batch, radius)
+      case None => (rangeJoin(queries, radius), () => ())
+    }
+
+  /** Range bounded entry, over a decoded batch. */
+  private[graft] def rangeBatchManaged(
+      batch: Array[(Long, Array[Float])], radius: Double): (DataFrame, () => Unit) = {
+    requireRangeMetric()
+    val live = IvfFlatIndex.dropNullQueries(batch)
+    val pairs = rangeProbe(live, radius)
+    val sp = spark
+    import sp.implicits._
+    if (pairs.isEmpty)
+      return (Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist"), () => ())
+    val qmap = new java.util.HashMap[java.lang.Long, Array[Float]]()
+    live.foreach { case (qid, qv) => qmap.put(qid, qv) }
+    val bcQ = spark.sparkContext.broadcast(qmap)
+    val probed = pairs.toSeq.toDF("qid", "list_id")
+    val result = vectors
+      .filter(col("list_id").isInCollection(pairs.map(_._2).distinct.toSeq))
+      .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
+      .join(broadcast(probed), "list_id")
+      // single-conjunct radius filter — see Knn.range: extra conjuncts
+      // would be substituted into the join condition and re-evaluate
+      // the kernel once per conjunct per candidate
+      .withColumn("dist", graft.functions.vector
+        .distance_to_query(col("vec"), col("qid"), bcQ, metric))
+      .filter(col("dist") <= radius)
+      .select("qid", "id", "dist")
+    (result, () => bcQ.destroy())
+  }
+
+  /** Range flood entry: the brute-force [[Knn.range]] scan. */
+  private[graft] def rangeJoin(queries: DataFrame, radius: Double): DataFrame = {
+    requireRangeMetric()
+    Knn.range(queries, vectors.select("id", "vec"), radius, metric)
+  }
+
+  private def requireRangeMetric(): Unit =
     require(metric == Metric.L2 || metric == Metric.InnerProduct,
       s"rangeSearch needs a list bound (L2 ball or IP Cauchy–Schwarz); got $metric")
-    val qdf = queries.select(col("qid"), col("qvec"))
-    IvfFlatIndex.snapshotQueries(qdf).batch match {
-      case Some(batch) =>
-        val live = IvfFlatIndex.dropNullQueries(batch)
-        val pairs = rangeProbe(live, radius)
-        val sp = spark
-        import sp.implicits._
-        if (pairs.isEmpty)
-          return (Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist"), () => ())
-        val qmap = new java.util.HashMap[java.lang.Long, Array[Float]]()
-        live.foreach { case (qid, qv) => qmap.put(qid, qv) }
-        val bcQ = spark.sparkContext.broadcast(qmap)
-        val probed = pairs.toSeq.toDF("qid", "list_id")
-        val result = vectors
-          .filter(col("list_id").isInCollection(pairs.map(_._2).distinct.toSeq))
-          .select(col("id").cast("long"), col("list_id").cast("int"), col("vec"))
-          .join(broadcast(probed), "list_id")
-          // single-conjunct radius filter — see Knn.range: extra conjuncts
-          // would be substituted into the join condition and re-evaluate
-          // the kernel once per conjunct per candidate
-          .withColumn("dist", graft.functions.vector
-            .distance_to_query(col("vec"), col("qid"), bcQ, metric))
-          .filter(col("dist") <= radius)
-          .select("qid", "id", "dist")
-        (result, () => bcQ.destroy())
-      case None =>
-        (Knn.range(qdf, vectors.select("id", "vec"), radius, metric), () => ())
-    }
-  }
 }
 
 object IvfFlatIndex {
@@ -427,13 +441,14 @@ object IvfFlatIndex {
   val NoopProbeListener: Array[(Long, Int)] => Unit = _ => ()
 
   /** Total null query vectors dropped across the BOUNDED-batch search
-    * paths on this JVM (driver-snapshot serving: searchBatchManaged, the
-    * PQ twin, rangeSearch) — published as `vdb_dropped_null_queries_total`
-    * by [[graft.api.VectorDB.metricsText]]. JVM-wide by design (one
-    * process = one scrape endpoint). Scope note: the UNBOUNDED ForceJoin
-    * path cannot feed a driver counter — there the facade's in-plan guard
-    * raises on malformed rows at execution instead, so nulls never drop
-    * silently on that path either. */
+    * entries on this JVM (searchBatchManaged, the PQ twin,
+    * rangeBatchManaged, [[Knn.exactBatchManaged]]) plus null-qid rows of
+    * query snapshots — published as `vdb_dropped_null_queries_total` by
+    * [[graft.api.VectorDB.metricsText]]. JVM-wide by design (one
+    * process = one scrape endpoint). Scope note: the UNBOUNDED flood
+    * entries cannot feed a driver counter — there the facade's in-plan
+    * guard raises on malformed rows at execution instead, so nulls never
+    * drop silently on that path either. */
   val droppedNullQueries = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The shared prelude of the static (bounded-batch) paths: drops null
@@ -461,15 +476,6 @@ object IvfFlatIndex {
     val seen = new java.util.HashSet[java.lang.Long](batch.length * 2)
     batch.filter(q => seen.add(q._1))
   }
-
-  /** Probe-strategy override for [[IvfFlatIndex.searchWhere]]: Auto picks
-    * by batch size; ForceJoin keeps everything distributed (no driver
-    * snapshot) for arbitrarily large query sets; ForceStatic snapshots
-    * regardless (caller asserts the batch is bounded). */
-  sealed trait ProbeStrategy
-  case object Auto extends ProbeStrategy
-  case object ForceStatic extends ProbeStrategy
-  case object ForceJoin extends ProbeStrategy
 
   /** Batches up to this size use the static-pruning probe (the reference's
     * serving batches cap at 64, server/query_service.h:25; 1024 x 2048D
@@ -526,8 +532,8 @@ object IvfFlatIndex {
     uniq.withColumn("list_id", explode(vector.probe_lists(col("qvec"), centroids, nprobe, m)))
       .select("qid", "qvec", "list_id")
 
-  /** (qid, qvec) row decode shared by every snapshot site; a missing qvec
-    * stays null so callers choose their own error contract. `offset`
+  /** (qid, qvec) row decode of [[snapshotQueries]]'s Row read; a missing
+    * qvec stays null so callers choose their own error contract. `offset`
     * skips leading columns (e.g. the multi-index stream's index name). */
   def decodeQueryRow(r: org.apache.spark.sql.Row, offset: Int = 0): (Long, Array[Float]) =
     (r.getLong(offset), Option(r.getSeq[Float](offset + 1)).map(_.toArray).orNull)
@@ -540,63 +546,76 @@ object IvfFlatIndex {
   private[graft] def onePerQid(queries: DataFrame): DataFrame =
     queries.dropDuplicates("qid")
 
-  /** [[decodeQueryRow]] over a collected sample, dropping null-qid rows
-    * first (counted + logged like null-vector drops): Row.getLong NPEs on
-    * a null, and the unbounded flood paths SKIP null-qid rows silently —
-    * behavior must not flip at the MaxStaticBatch/broadcast gate. */
-  def decodeQueryRows(
-      rows: Array[org.apache.spark.sql.Row],
-      offset: Int = 0): Array[(Long, Array[Float])] = {
-    val live = rows.filter(!_.isNullAt(offset))
-    val dropped = rows.length - live.length
-    if (dropped > 0) {
-      droppedNullQueries.addAndGet(dropped.toLong)
-      System.err.println(s"[graft] dropped $dropped null-qid query row(s) from batch")
-    }
-    live.map(decodeQueryRow(_, offset))
-  }
-
   /** Result of [[snapshotQueries]]: the decoded prefix sample (validation
-    * material either way), and whether it IS the whole query set. */
-  case class QuerySnapshot(sample: Array[(Long, Array[Float])], bounded: Boolean) {
-    /** The serving batch when the set fits the static path. */
+    * material either way), whether it IS the whole frame, and — when the
+    * snapshot was asked for a label column — each sample row's label. */
+  case class QuerySnapshot(
+      sample: Array[(Long, Array[Float])],
+      bounded: Boolean,
+      labels: Array[String] = Array.empty) {
+    /** The serving batch when the set fits the bounded entries. */
     def batch: Option[Array[(Long, Array[Float])]] = if (bounded) Some(sample) else None
   }
 
   /**
-   * THE bounded-snapshot decision, shared by searchWhere, the VectorDB
-   * validation path, and the streaming serve loop (keeping three copies in
-   * sync was a bug farm): one limited collect; `bounded` when the query
-   * set fits [[MaxStaticBatch]] (the sample IS the serving input — the
-   * source plan is never evaluated twice). An over-limit set still
-   * returns its prefix so callers can validate eagerly before going
-   * distributed.
+   * THE bounded read of a query frame, the only one: at most `limit` + 1
+   * rows; `bounded` when the frame fits `limit` (the sample IS the batch,
+   * so the caller's plan is never evaluated twice). An over-limit frame
+   * still returns its prefix for eager validation. Null-qid rows drop
+   * (the flood entries skip them too), counted and logged unless
+   * `corpus` (the self-join fast paths read (id, vec) corpus rows); a
+   * null qvec stays null. `label` carries a leading STRING column per
+   * row (the multi-index stream's index name). Two reads:
+   *  - a `LocalRelation` of exactly (LONG, ARRAY<FLOAT>) columns (the
+   *    serving path's `Seq.toDF`) decodes its rows in place: no job, no
+   *    codegen, no Row conversion (a folded `limit().collect()` was 72 %
+   *    of a resident search's driver prelude, ROADMAP item 3(c));
+   *  - anything else takes `rdd.take`, NOT `limit(n).collect()`: Spark's
+   *    BaseLimitExec mints a JVM-global `_limit_counter_N` per operator,
+   *    so a limit plan never hits the codegen cache (r9). RDD take pulls
+   *    partitions lazily (1-then-4x job scaling like executeTake) and
+   *    compiles nothing run-varying. Other column types (an INT qid, an
+   *    ARRAY<DOUBLE> qvec) fail in this Row decode as they always did.
    */
-  def snapshotQueries(queries: org.apache.spark.sql.DataFrame): QuerySnapshot = {
-    // Two probe shapes, both deliberate (r9):
-    //  - driver-local batch (the serving path's Seq.toDF): limit+collect
-    //    folds into the LocalRelation at optimization time — ZERO jobs,
-    //    ZERO codegen; the limit never reaches physical planning
-    //    (pinned by VectorDBSpec "schedules NO extra Spark jobs").
-    //  - distributed source: rdd.take, NOT limit(n).collect(). Spark's
-    //    BaseLimitExec mints a JVM-global `_limit_counter_N` state name
-    //    per operator instance, so a plan containing a limit NEVER hits
-    //    the codegen cache — every snapshot paid a fresh Janino compile +
-    //    C2 warm-in of the whole probe stage, re-paid on EVERY plan build
-    //    (r9 bench-instability root cause). RDD take pulls partition
-    //    iterators lazily (narrow pipelines compute only the pulled rows,
-    //    incremental 1-then-4x job scaling like executeTake) and compiles
-    //    nothing run-varying (pinned by SnapshotQueriesSpec).
-    val sel = queries.select(col("qid"), col("qvec"))
+  def snapshotQueries(
+      queries: DataFrame,
+      limit: Int = MaxStaticBatch,
+      label: Option[String] = None,
+      corpus: Boolean = false): QuerySnapshot = {
+    val at = label.size
+    // a corpus keeps its own column names: an aliasing projection would
+    // be one more generated class to compile on a distributed corpus
+    val cols = if (corpus) Seq("id", "vec") else Seq("qid", "qvec")
+    val sel = queries.select((label.toSeq ++ cols).map(col): _*)
     // `isLocal` alone misses Project(LocalRelation) (any .toDF rename);
     // the optimizer's ConvertToLocalRelation folds those, so test the
     // OPTIMIZED plan (computing it runs no jobs and is cached)
-    val local = sel.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    val sample =
-      if (local) sel.limit(MaxStaticBatch + 1).collect()
-      else sel.rdd.take(MaxStaticBatch + 1)
-    QuerySnapshot(decodeQueryRows(sample), sample.length <= MaxStaticBatch)
+    val (sample, labels, read) = sel.queryExecution.optimizedPlan match {
+      case r: LocalRelation if rawQueryShape(r) =>
+        val rows = r.data.iterator.take(limit + 1).toArray
+        val live = rows.collect { case row if !row.isNullAt(0) =>
+          (row.getLong(0), if (row.isNullAt(1)) null else row.getArray(1).toFloatArray())
+        }
+        (live, Array.empty[String], rows.length)
+      case _ =>
+        val rows = sel.rdd.take(limit + 1)
+        val live = rows.filter(!_.isNullAt(at))
+        (live.map(decodeQueryRow(_, at)),
+          if (label.isEmpty) Array.empty[String] else live.map(_.getString(0)), rows.length)
+    }
+    val dropped = read - sample.length
+    if (dropped > 0 && !corpus) {
+      droppedNullQueries.addAndGet(dropped.toLong)
+      System.err.println(s"[graft] dropped $dropped null-qid query row(s) from batch")
+    }
+    QuerySnapshot(sample, read <= limit, labels)
+  }
+
+  /** A local relation of exactly (LONG, ARRAY<FLOAT>): its rows decode
+    * in place. */
+  private def rawQueryShape(r: LocalRelation): Boolean = r.output.map(_.dataType) match {
+    case Seq(LongType, ArrayType(FloatType, _)) => true
+    case _ => false
   }
 
   /** Driver-side probe of a bounded query batch: chunk-parallel, ordered

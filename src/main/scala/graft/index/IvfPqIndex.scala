@@ -194,7 +194,7 @@ class IvfPqIndex(
     val nprobe = math.min(params.nprobe, nlist)
     val probeMetric = params.metric.getOrElse(metric)
     // one row per qid before the probe explosion — see
-    // IvfFlatIndex.searchJoinPruned (duplicated qids probe different
+    // IvfFlatIndex.searchJoin (duplicated qids probe different
     // list sets; dedup after the fact cannot prevent cross-qvec mixing)
     val uniq = IvfFlatIndex.onePerQid(queries)
     val probed = IvfFlatIndex.probeRows(uniq, centroids, nprobe, probeMetric)

@@ -52,71 +52,69 @@ object Knn {
       queries: DataFrame,
       vectors: DataFrame,
       k: Int,
-      metric: Metric.Value = Metric.L2): (DataFrame, () => Unit) = {
+      metric: Metric.Value = Metric.L2): (DataFrame, () => Unit) =
+    IvfFlatIndex.snapshotQueries(queries).batch match {
+      case Some(batch) => exactBatchManaged(batch, vectors, k, metric)
+      case None => (exactJoin(queries, vectors, k, metric), () => ())
+    }
+
+  /** The whole corpus as ONE virtual list. */
+  private def oneList(vectors: DataFrame): DataFrame =
+    vectors.select(col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec"))
+
+  /** Exact bounded entry, over a decoded batch. Null query vectors
+    * yield no rows, counted and logged like every bounded entry's
+    * ([[IvfFlatIndex.dropNullQueries]], which also keeps one qvec per
+    * qid). */
+  private[graft] def exactBatchManaged(
+      batch: Array[(Long, Array[Float])],
+      vectors: DataFrame,
+      k: Int,
+      metric: Metric.Value): (DataFrame, () => Unit) = {
+    val spark = vectors.sparkSession
+    val live = IvfFlatIndex.dropNullQueries(batch)
+    val bc = spark.sparkContext.broadcast(
+      ProbeIndex(live, live.map(q => (q._1, 0)), nlist = 1))
+    val parts = Sizing.mergeParts(spark, Sizing.bytes(vectors))
+    (TopKAggregator.finalizePartial(
+      ListScanTopK(oneList(vectors), new FlatListScorer(bc, metric.id), k), k, parts)
+      .select("qid", "id", "dist", "rank"),
+      () => bc.destroy())
+  }
+
+  /** Exact flood entry, over a query frame. Below the size gate the
+    * batch ships through the lazy broadcast exchange into the same stable
+    * scan operator over one virtual list; above it nothing is broadcast
+    * (an unconditional hint would bypass autoBroadcastJoinThreshold for
+    * an arbitrarily big set, round 7). */
+  private[graft] def exactJoin(
+      queries: DataFrame,
+      vectors: DataFrame,
+      k: Int,
+      metric: Metric.Value): DataFrame = {
     val qdf = queries.select(col("qid"), col("qvec"))
     val spark = qdf.sparkSession
-    // the whole corpus as ONE virtual list
-    val corpus = vectors.select(
-      col("id").cast("long"), lit(0).cast("int").as("list_id"), col("vec"))
-    IvfFlatIndex.snapshotQueries(qdf).batch match {
-      case Some(batch) =>
-        // null query vectors yield no rows either way (the join path's
-        // null distance is skipped inside the top-k) — drop them here;
-        // then one qvec per qid, the static paths' first-wins rule
-        val live = IvfFlatIndex.firstPerQid(batch.filter(_._2 != null))
-        val bc = spark.sparkContext.broadcast(
-          ProbeIndex(live, live.map(q => (q._1, 0)), nlist = 1))
-        val parts = Sizing.mergeParts(spark, Sizing.bytes(vectors))
-        (TopKAggregator.finalizePartial(
-          ListScanTopK(corpus, new FlatListScorer(bc, metric.id), k), k, parts)
-          .select("qid", "id", "dist", "rank"),
-          () => bc.destroy())
-      case None =>
-        // unbounded query set. Below the size gate the batch ships through
-        // the lazy broadcast exchange into the same stable scan operator
-        // (one virtual list spanning the corpus — each stored vector
-        // decodes once and scores every query in scalac-compiled code);
-        // above it nothing is broadcast — this branch fires precisely
-        // because the batch is large, so an unconditional hint would
-        // bypass autoBroadcastJoinThreshold for an arbitrarily big set
-        // (round-7 fix): the plain cross join lets AQE plan the flood.
-        val qB = Sizing.bytes(qdf)
-        val cB = Sizing.bytes(vectors)
-        if (Sizing.fitsBroadcastGate(spark, qB, 1)) {
-          val probed = qdf.withColumn("list_id", lit(0))
-          (TopKAggregator.finalizePartial(BroadcastProbeTopK.flat(
-            probed, IvfFlatIndex.widenScan(corpus, cB), k, metric.id), k,
-            Sizing.mergeParts(spark, qB * cB))
-            .select("qid", "id", "dist", "rank"), () => ())
-        } else {
-          // r21: the above-gate flood scores through CoGroupTopK's
-          // deopt-immune co-partition loops over ONE virtual list with
-          // the salt pinned to the byte-derived scoring parallelism.
-          // This replaces the r20 cross-join + per-pair codegen shape,
-          // which was wrong twice over:
-          //  - its repartition(n, qid) pre-satisfied finalizePartial's
-          //    exchange; the optimizer elided it and the WHOLE quadratic
-          //    scoring pipeline landed on the map side of a consumer's
-          //    range-partitioning exchange — whose bounds-sampling job
-          //    re-executes its child, so the scoring ran TWICE per
-          //    action (measured: two identical 32-task stages each
-          //    reading the query shuffle; guide §2.4);
-          //  - every (query, vector) pair materialized as a generated-
-          //    code candidate row (measured ~1.9 us/pair vs ~0.1 us for
-          //    the same kernel inside the scalac scan loop — the exact
-          //    overhead ListScanTopK removed from the static path).
-          // The salt (corpus sub-buckets = scoring tasks) is
-          // Sizing.floodParts of the query x corpus byte product.
-          // One row per qid BEFORE scoring: two duplicate rows would
-          // both replicate into the salt buckets, and per-bucket
-          // first-wins could score DIFFERENT qvecs of one qid in
-          // different buckets — same invariant as every other path.
-          val probed = IvfFlatIndex.onePerQid(qdf).withColumn("list_id", lit(0))
-          (CoGroupTopK.flatSearch(probed, corpus, k, metric.id,
-            nlist = 1, salt = Sizing.floodParts(spark, qB, cB))
-            .select("qid", "id", "dist", "rank"),
-            () => ())
-        }
+    val corpus = oneList(vectors)
+    val qB = Sizing.bytes(qdf)
+    val cB = Sizing.bytes(vectors)
+    if (Sizing.fitsBroadcastGate(spark, qB, 1)) {
+      val probed = qdf.withColumn("list_id", lit(0))
+      TopKAggregator.finalizePartial(BroadcastProbeTopK.flat(
+        probed, IvfFlatIndex.widenScan(corpus, cB), k, metric.id), k,
+        Sizing.mergeParts(spark, qB * cB))
+        .select("qid", "id", "dist", "rank")
+    } else {
+      // r21: CoGroupTopK's co-partition loops over ONE virtual list,
+      // salted by Sizing.floodParts of the query x corpus byte product.
+      // The r20 cross join ran its quadratic scoring twice per action
+      // (a range exchange's sampling job re-executed it) and built a
+      // generated-code row per pair (~1.9 us vs ~0.1 us in the scan
+      // loop). One row per qid BEFORE scoring: duplicates replicate
+      // into every salt bucket and could score different qvecs.
+      val probed = IvfFlatIndex.onePerQid(qdf).withColumn("list_id", lit(0))
+      CoGroupTopK.flatSearch(probed, corpus, k, metric.id,
+        nlist = 1, salt = Sizing.floodParts(spark, qB, cB))
+        .select("qid", "id", "dist", "rank")
     }
   }
 

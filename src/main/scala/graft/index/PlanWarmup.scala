@@ -133,8 +133,7 @@ object PlanWarmup {
     val flat = new IvfFlatIndex(spark,
       IvfFlatIndex.assign(vecs, idx.centroids), idx.centroids, Metric.L2)
     Sizing.withGate(spark, "1") {
-      consume(flat.searchWhere(queries, params, None, IvfFlatIndex.ForceJoin)
-        .orderBy("qid", "rank"))
+      consume(flat.searchJoin(queries, params).orderBy("qid", "rank"))
     }
   }
 

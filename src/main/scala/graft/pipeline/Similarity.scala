@@ -184,23 +184,22 @@ object Similarity {
    * evaluations) shrinks the row cap to the same byte budget (stats can
    * underestimate — e.g. optimistic filter selectivity — and a row gate
    * alone is dimension-blind: 256k x 2048D is ~2 GB of driver heap); the
-   * `limit(cap + 1)` collect then proves the corpus actually fits. A
-   * corpus wider than its centroids would break distance semantics
-   * before it broke this gate (the kernels truncate to min length). Null
-   * vecs are dropped — they are neither queries nor candidates in the
-   * blocked paths either (an exploded null probe list emits nothing).
+   * bounded snapshot ([[IvfFlatIndex.snapshotQueries]], cap + 1 rows) then
+   * proves the corpus actually fits. A corpus wider than its centroids
+   * would break distance semantics before it broke this gate (the
+   * kernels truncate to min length). Null vecs are dropped — they are
+   * neither queries nor candidates in the blocked paths either (an
+   * exploded null probe list emits nothing).
    */
   private[pipeline] def selfIndexBatch(
       vectors: DataFrame, bytes: BigInt, maxRows: Int, dimHint: Int,
       maxBytes: Long = Sizing.MaxSelfIndexBytes): Array[(Long, Array[Float])] = {
     val effMax = Sizing.selfIndexRows(bytes, maxRows, dimHint, maxBytes)
     if (effMax < 0) return null
-    // rdd.take, not limit().collect() — a limit plan can never hit the
-    // codegen cache (see IvfFlatIndex.snapshotQueries), so the probe
-    // would recompile on every gate evaluation
-    val rows = vectors.select(col("id"), col("vec")).rdd.take(effMax + 1)
-    if (rows.length > effMax) null
-    else IvfFlatIndex.decodeQueryRows(rows).filter(_._2 != null)
+    // corpus rows, not queries: null ids drop without touching the query
+    // counter
+    val snap = IvfFlatIndex.snapshotQueries(vectors, effMax, corpus = true)
+    if (!snap.bounded) null else snap.sample.filter(_._2 != null)
   }
 
   /** The snapshot as the fast path's corpus side, read back from the SAME

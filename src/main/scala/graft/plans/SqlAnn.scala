@@ -1665,7 +1665,7 @@ object SqlAnn {
      *
      * — which Spark has already turned into `WindowGroupLimit` over
      * `Project` over an unconditioned inner `Join` — into the probe-pruned
-     * equi-join plan the facade's `searchBatch`/`searchJoinPruned`
+     * equi-join plan the facade's `searchBatch`/`searchJoin`
      * composes: the queries side gains `explode(probe_lists(qvec))` (a
      * [[Generate]] emitting one row per probed list), the join becomes an
      * EQUI-join on `probe = t.list_id` (broadcast-hash for small batches,

@@ -212,19 +212,18 @@ object VectorQueries {
   }
 
   /**
-   * Large-batch IVF search through the fully-distributed join-pruned path
-   * (ForceJoin — no driver snapshot, the shape for unbounded query sets);
+   * Large-batch IVF search through the fully-distributed flood entry
+   * (`searchJoin` — no driver snapshot, the shape for unbounded query sets);
    * with nprobe = nlist it is exhaustive, so the exact-kNN SQL is its
    * oracle.
    */
   private def ivfSearchBatchAll(spark: SparkSession, dir: String): DataFrame = {
     import graft.SearchParams
-    import graft.index.IvfFlatIndex
     val e = emb(spark, dir)
     val queries = e.filter(col("vec_id") < 300)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     ivfIndex(spark, dir, 16)
-      .searchWhere(queries, SearchParams(k = 5, nprobe = 16), None, IvfFlatIndex.ForceJoin)
+      .searchJoin(queries, SearchParams(k = 5, nprobe = 16))
       .orderBy("qid", "rank")
   }
 
@@ -239,14 +238,12 @@ object VectorQueries {
    */
   private def ivfSearchFloodSalted(spark: SparkSession, dir: String): DataFrame = {
     import graft.SearchParams
-    import graft.index.IvfFlatIndex
     val e = emb(spark, dir)
     val queries = e.filter(col("vec_id") < 300)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val index = ivfIndex(spark, dir, 16)
     graft.index.Sizing.withGate(spark, "1") {
-      index.searchWhere(queries, SearchParams(k = 5, nprobe = 16), None,
-        IvfFlatIndex.ForceJoin)
+      index.searchJoin(queries, SearchParams(k = 5, nprobe = 16))
     }.orderBy("qid", "rank")
   }
 

@@ -64,7 +64,7 @@ object StreamingSearch {
             val (res, release) = index.searchBatchManaged(b, params)
             try sink(res, batchId) finally release()
           case None => // flood between triggers: stay fully distributed
-            sink(index.searchWhere(batch, params, None, IvfFlatIndex.ForceJoin), batchId)
+            sink(index.searchJoin(batch, params), batchId)
         }
       }
       .start()
@@ -144,19 +144,17 @@ object StreamingSearch {
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val named = batch.select(col("index"), col("qid"), col("qvec"))
-        // same bounded-snapshot contract as serve(): one limited take
-        // answers emptiness, grouping, AND the serving input (rdd.take:
-        // a limit plan never hits the codegen cache — per-micro-batch
-        // recompiles would tax the serving loop; see snapshotQueries)
-        val sample = named.rdd.take(IvfFlatIndex.MaxStaticBatch + 1)
-        if (sample.length > IvfFlatIndex.MaxStaticBatch) {
+        // same bounded-snapshot contract as serve(): one read answers
+        // emptiness, grouping (the index name rides as the label), AND
+        // the serving input
+        val snap = IvfFlatIndex.snapshotQueries(batch, label = Some("index"))
+        if (!snap.bounded) {
           // flood: stay distributed, one join-pruned pass per index that
           // actually has queued rows (cheap driver distinct on the names).
           // Pin the batch first: the distinct plus one filter per present
           // index would otherwise re-evaluate the streaming source 1 + K
           // times — on exactly the biggest batches
-          val pinned = named.persist(
+          val pinned = batch.select(col("index"), col("qid"), col("qvec")).persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val present = pinned.select("index").distinct().collect().map(_.getString(0))
@@ -164,18 +162,14 @@ object StreamingSearch {
               val (idx, params) = indices.getOrElse(name,
                 throw new IllegalArgumentException(s"unregistered index in stream: $name"))
               sink(name,
-                idx.searchWhere(pinned.filter(col("index") === name).select("qid", "qvec"),
-                  params, None, IvfFlatIndex.ForceJoin), batchId)
+                idx.searchJoin(pinned.filter(col("index") === name), params), batchId)
             }
           } finally pinned.unpersist(false)
-        } else if (sample.nonEmpty) {
-          sample.groupBy(_.getString(0)).foreach { case (name, rows) =>
+        } else {
+          snap.sample.indices.groupBy(snap.labels(_)).foreach { case (name, rows) =>
             val (idx, params) = indices.getOrElse(name,
               throw new IllegalArgumentException(s"unregistered index in stream: $name"))
-            // shared decode contract (null qvec stays null), offset past
-            // the leading index-name column
-            val b = IvfFlatIndex.decodeQueryRows(rows.toArray, offset = 1)
-            val (res, release) = idx.searchBatchManaged(b, params)
+            val (res, release) = idx.searchBatchManaged(rows.map(snap.sample).toArray, params)
             try sink(name, res, batchId) finally release()
           }
         }

@@ -638,4 +638,37 @@ class VectorDBSpec extends SparkSpec {
     val fallback = db.search("test_index", qs, 3, metric = "NotAMetric")
     assert(fallback.collect().map(_.getDouble(2)).forall(_ >= 0))
   }
+
+  test("rangeSearch and searchExact read a flood frame once, a local batch with no job") {
+    ready
+    val s = spark
+    import s.implicits._
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.sql.graftshims.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      try { body; org.apache.spark.sql.graftshims.drainListenerBus(spark) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      n.get()
+    }
+    // a distributed frame above MaxStaticBatch: validation reads its
+    // prefix once, and the flood entry builds on the frame without a
+    // second read of the caller's plan
+    val flood = spark.sparkContext
+      .parallelize(randomVectors(graft.index.IvfFlatIndex.MaxStaticBatch + 8, 8, seed = 3), 4)
+      .toDF("qid", "qvec")
+    val once = jobs(graft.index.IvfFlatIndex.snapshotQueries(flood))
+    assert(once > 0)
+    assert(jobs(db.rangeSearch("test_index", flood, 1.0)) === once)
+    assert(jobs(db.searchExact("test_index", flood, 3)) === once)
+    // a bounded local batch: no job before the plan returns, like search
+    db.rangeSearch("test_index", qs, 1.0).count() // settle lazy init
+    assert(jobs(db.rangeSearch("test_index", qs, 1.0)) === 0)
+    assert(jobs(db.searchExact("test_index", qs, 3)) === 0)
+  }
 }

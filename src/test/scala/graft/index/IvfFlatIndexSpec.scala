@@ -97,8 +97,8 @@ class IvfFlatIndexSpec extends SparkSpec {
     // distributed flood path (round 7): below the gate the probed side
     // ships through the lazy broadcast exchange into the stable scan
     // operator — no candidate join, no cartesian blowup, corpus unshuffled
-    val joinPlan = index.searchWhere(q, SearchParams(k = 10, nprobe = 2), None,
-      IvfFlatIndex.ForceJoin).queryExecution.executedPlan.toString
+    val joinPlan = index.searchJoin(q, SearchParams(k = 10, nprobe = 2))
+      .queryExecution.executedPlan.toString
     assert(joinPlan.contains("BroadcastProbeTopK"),
       s"flood path missing the broadcast-probe operator:\n$joinPlan")
     assert(joinPlan.contains("BroadcastExchange IdentityBroadcastMode"),
@@ -117,8 +117,7 @@ class IvfFlatIndexSpec extends SparkSpec {
     val q = queriesDF(queries)
     for ((df, label) <- Seq(
         (index.search(q, SearchParams(k = 10, nprobe = 2)), "static"),
-        (index.searchWhere(q, SearchParams(k = 10, nprobe = 2), None,
-          IvfFlatIndex.ForceJoin), "join"))) {
+        (index.searchJoin(q, SearchParams(k = 10, nprobe = 2)), "join"))) {
       val plan = df.queryExecution.executedPlan.toString
       for (kernel <- Seq("distance_to_query", "l2_distance", "vectordistance"))
         assert(!plan.toLowerCase.contains(s"isnotnull($kernel"),
@@ -255,6 +254,15 @@ class IvfFlatIndexSpec extends SparkSpec {
     assert(res.count() === 10)
   }
 
+  test("Knn.exact's bounded entry drops null query vectors, counted and logged") {
+    val before = IvfFlatIndex.droppedNullQueries.get()
+    val q = queriesDF(Seq((0L, queries.head._2), (1L, null: Array[Float])))
+    val rows = Knn.exact(q, vectorsDF(data), 3).collect()
+    assert(rows.map(_.getLong(0)).distinct === Array(0L)) // qid 1 has no rows
+    assert(rows.length === 3)
+    assert(IvfFlatIndex.droppedNullQueries.get() === before + 1)
+  }
+
   test("exactManaged release destroys the batch broadcast after consumption") {
     // managed contract: consume the result, then release(); the released
     // plan must not be the caller's problem afterwards, and release must
@@ -304,19 +312,17 @@ class IvfFlatIndexSpec extends SparkSpec {
     val q = queriesDF(queries)
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getInt(3), r.getLong(1), r.getDouble(2))
-    val static = index.searchWhere(q, SearchParams(k = 7, nprobe = 3), None,
-      IvfFlatIndex.ForceStatic).collect().map(key).sortBy(x => (x._1, x._2))
-    val join = index.searchWhere(q, SearchParams(k = 7, nprobe = 3), None,
-      IvfFlatIndex.ForceJoin).collect().map(key).sortBy(x => (x._1, x._2))
+    val static = index.searchBatch(queries.toArray, SearchParams(k = 7, nprobe = 3))
+      .collect().map(key).sortBy(x => (x._1, x._2))
+    val join = index.searchJoin(q, SearchParams(k = 7, nprobe = 3))
+      .collect().map(key).sortBy(x => (x._1, x._2))
     assert(static === join)
   }
 
   test("ForceStatic snapshots the whole batch (no silent truncation above the threshold)") {
-    // all 1000 vectors as queries with ForceStatic: results must cover
-    // every qid, proving the snapshot wasn't cut at MaxStaticBatch+1
-    val q = queriesDF(data.map { case (i, v) => (i, v) })
-    val res = index.searchWhere(q, SearchParams(k = 1, nprobe = 8), None,
-      IvfFlatIndex.ForceStatic)
+    // all 1000 vectors as one batch through the bounded entry: results
+    // must cover every qid, proving the batch was not cut
+    val res = index.searchBatch(data.toArray, SearchParams(k = 1, nprobe = 8))
     assert(res.select("qid").distinct().count() === 1000)
   }
 

@@ -29,8 +29,7 @@ class ListScanTopKSpec extends SparkSpec {
   test("operator results are identical to the distributed join path") {
     val params = SearchParams(k = 7, nprobe = 8) // all lists -> exact too
     val static = sortedHits(flat.searchBatch(queries.toArray, params))
-    val join = sortedHits(flat.searchWhere(queriesDF(queries), params, None,
-      IvfFlatIndex.ForceJoin))
+    val join = sortedHits(flat.searchJoin(queriesDF(queries), params))
     val exact = sortedHits(flat.searchExact(queriesDF(queries), 7))
     assert(static === join)
     assert(static === exact)
@@ -102,8 +101,7 @@ class ListScanTopKSpec extends SparkSpec {
       for (nprobe <- Seq(1, nlist / 2 + 1, nlist)) {
         val params = SearchParams(k = 4 + seed, nprobe = nprobe)
         val static = sortedHits(idx.searchBatch(qs.toArray, params))
-        val join = sortedHits(idx.searchWhere(queriesDF(qs), params, None,
-          IvfFlatIndex.ForceJoin))
+        val join = sortedHits(idx.searchJoin(queriesDF(qs), params))
         assert(static === join, s"nlist=$nlist metric=$metric nprobe=$nprobe")
         if (nprobe == nlist) {
           val exact = sortedHits(idx.searchExact(queriesDF(qs), 4 + seed))

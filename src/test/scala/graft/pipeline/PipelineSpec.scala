@@ -235,6 +235,27 @@ class PipelineSpec extends SparkSpec {
     assert(ok != null && ok.length === 100)
   }
 
+  test("a null-id corpus row leaves the query null-drop counter alone") {
+    val s = spark
+    import s.implicits._
+    val clean = randomVectors(60, 8, seed = 21)
+    val withNull = (clean.map { case (i, v) => (Option(i), v) } :+
+      ((None: Option[Long]), clean.head._2)).toDF("id", "vec")
+    val cents = IvfFlatIndex.broadcastCentroids(spark,
+      IvfFlatIndex.train(spark, vectorsDF(clean), 4))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val before = IvfFlatIndex.droppedNullQueries.get()
+    val knn = Similarity.knnSelfJoin(withNull, cents, k = 3)
+    val dups = Dedup.embeddingNearDup(withNull, cents, maxCosineDist = 0.5)
+    assert(IvfFlatIndex.droppedNullQueries.get() === before,
+      "a corpus snapshot counted its null ids as dropped queries")
+    // the fast paths drop the null-id row, as they always did
+    assert(knn.queryExecution.executedPlan.toString.contains("ListScanTopK"))
+    assert(rows(knn) === rows(Similarity.knnSelfJoin(vectorsDF(clean), cents, k = 3)))
+    assert(rows(dups) === rows(Dedup.embeddingNearDup(vectorsDF(clean), cents, maxCosineDist = 0.5)))
+  }
+
   test("adaptive filtered ANN evaluates a non-deterministic query plan exactly once") {
     val s = spark
     import s.implicits._
