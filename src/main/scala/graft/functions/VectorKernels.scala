@@ -7,9 +7,11 @@ import org.apache.spark.unsafe.Platform
 /**
  * Tight primitive-array kernels, called both from interpreted `eval` and
  * from generated code (static method call keeps whole-stage codegen spans
- * intact). Distances accumulate in Double, sequentially over the array —
- * the same left-to-right order DuckDB's list arithmetic uses, so oracle
- * results are bit-identical.
+ * intact). Distances accumulate in Double, and each (row, query) pair
+ * keeps its own left-to-right sum over the array — the order DuckDB's
+ * list arithmetic uses, so oracle results are bit-identical. Kernels may
+ * advance several pairs' sums in one pass ([[distancesTo]]), never
+ * reassociate one pair's.
  *
  * Semantics mirror reference/engine/kernels.cuh:
  *  - l2: squared L2, no sqrt (:36-47)
@@ -70,6 +72,99 @@ object VectorKernels {
       case _             => l2(a, b)
     }
 
+  /**
+   * Row `v` against the queries `qvecs(pos(j))`, j < `pos.length`:
+   * `out(j)` = [[distance]]`(v, qvecs(pos(j)), metric)`, bit for bit (a
+   * NaN stays a NaN; Java leaves its sign bit to the JIT either way). Each
+   * pass over the row advances four queries' sums, so one row load feeds
+   * four independent add chains instead of one dependent chain per pair —
+   * the reference's exact-search kernel reuses each loaded stored vector
+   * for all its queries the same way (kernels.cuh:84-185). Every pair
+   * keeps its own left-to-right double sum; cosine's row norm is one such
+   * sum, the same for all four. A remainder of fewer than four queries,
+   * and any four whose lengths differ from the row's, go through
+   * [[distance]]. `out` holds at least `pos.length` slots.
+   */
+  def distancesTo(v: Array[Float], qvecs: Array[Array[Float]], pos: Array[Int],
+      metric: Int, out: Array[Double]): Unit = {
+    val n = v.length
+    val m = pos.length
+    var j = 0
+    while (j + 4 <= m) {
+      val q0 = qvecs(pos(j))
+      val q1 = qvecs(pos(j + 1))
+      val q2 = qvecs(pos(j + 2))
+      val q3 = qvecs(pos(j + 3))
+      if (q0.length == n && q1.length == n && q2.length == n && q3.length == n) metric match {
+        case METRIC_IP     => ip4(v, q0, q1, q2, q3, out, j)
+        case METRIC_COSINE => cosine4(v, q0, q1, q2, q3, out, j)
+        case _             => l24(v, q0, q1, q2, q3, out, j)
+      } else {
+        out(j) = distance(v, q0, metric)
+        out(j + 1) = distance(v, q1, metric)
+        out(j + 2) = distance(v, q2, metric)
+        out(j + 3) = distance(v, q3, metric)
+      }
+      j += 4
+    }
+    while (j < m) { out(j) = distance(v, qvecs(pos(j)), metric); j += 1 }
+  }
+
+  // The four-query bodies of distancesTo: every q has v's length.
+
+  private def l24(v: Array[Float], q0: Array[Float], q1: Array[Float],
+      q2: Array[Float], q3: Array[Float], out: Array[Double], at: Int): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    while (i < v.length) {
+      val x = v(i).toDouble
+      val d0 = x - q0(i).toDouble
+      val d1 = x - q1(i).toDouble
+      val d2 = x - q2(i).toDouble
+      val d3 = x - q3(i).toDouble
+      s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
+      i += 1
+    }
+    out(at) = s0; out(at + 1) = s1; out(at + 2) = s2; out(at + 3) = s3
+  }
+
+  private def ip4(v: Array[Float], q0: Array[Float], q1: Array[Float],
+      q2: Array[Float], q3: Array[Float], out: Array[Double], at: Int): Unit = {
+    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+    var i = 0
+    while (i < v.length) {
+      val x = v(i).toDouble
+      s0 += x * q0(i).toDouble; s1 += x * q1(i).toDouble
+      s2 += x * q2(i).toDouble; s3 += x * q3(i).toDouble
+      i += 1
+    }
+    out(at) = -s0; out(at + 1) = -s1; out(at + 2) = -s2; out(at + 3) = -s3
+  }
+
+  private def cosine4(v: Array[Float], q0: Array[Float], q1: Array[Float],
+      q2: Array[Float], q3: Array[Float], out: Array[Double], at: Int): Unit = {
+    var na = 0.0
+    var d0 = 0.0; var d1 = 0.0; var d2 = 0.0; var d3 = 0.0
+    var n0 = 0.0; var n1 = 0.0; var n2 = 0.0; var n3 = 0.0
+    var i = 0
+    while (i < v.length) {
+      val x = v(i).toDouble
+      val y0 = q0(i).toDouble
+      val y1 = q1(i).toDouble
+      val y2 = q2(i).toDouble
+      val y3 = q3(i).toDouble
+      na += x * x
+      d0 += x * y0; d1 += x * y1; d2 += x * y2; d3 += x * y3
+      n0 += y0 * y0; n1 += y1 * y1; n2 += y2 * y2; n3 += y3 * y3
+      i += 1
+    }
+    val ra = math.sqrt(na)
+    out(at) = 1.0 - d0 / (ra * math.sqrt(n0) + 1e-8)
+    out(at + 1) = 1.0 - d1 / (ra * math.sqrt(n1) + 1e-8)
+    out(at + 2) = 1.0 - d2 / (ra * math.sqrt(n2) + 1e-8)
+    out(at + 3) = 1.0 - d3 / (ra * math.sqrt(n3) + 1e-8)
+  }
+
   /** A reusable decode buffer for ARRAY<FLOAT> operands: a fresh float[]
     * per decoded row was the dominant allocation of every rerank,
     * cross-join and list-scan distance stage (r21 stage profiles: GC-bound
@@ -78,11 +173,18 @@ object VectorKernels {
     * next decode on the same instance: kernels consume it transiently. */
   private[graft] final class Scratch {
     private var buf: Array[Float] = null
+    private var dists: Array[Double] = null
     def decode(a: ArrayData): Array[Float] = {
       val n = a.numElements()
       if (buf == null || buf.length != n) buf = new Array[Float](n)
       copyFloats(a, buf, n)
       buf
+    }
+    /** A reusable [[distancesTo]] output of at least n slots, valid until
+      * the next call on the same instance. */
+    def distances(n: Int): Array[Double] = {
+      if (dists == null || dists.length < n) dists = new Array[Double](n)
+      dists
     }
   }
 
@@ -301,15 +403,30 @@ object VectorKernels {
   /**
    * Fixed-radius coarse prune (the SQL range-JOIN rewrite's per-query
    * kernel): ids of every list whose covering ball intersects the query
-   * ball — list l survives iff sqrt(l2(q, c_l)) <= sqrt(radius) +
-   * radii(l). EXACT by the reverse triangle inequality
-   * ([[graft.index.IvfFlatIndex.rangeProbe]]'s proof); a NaN covering
-   * radius (poisoned by a NaN member) is treated as unbounded — never
-   * prune that list (rangeProbe's guard). A negative radius makes
-   * sqrt(radius) NaN, every comparison false, and only NaN-radius lists
-   * survive — their pairs then fail the retained `dist <= r` predicate,
-   * so the rewrite stays exact there too. Ascending list ids. L2 only:
-   * the bound needs a true metric.
+   * ball — list l survives iff
+   * {{{
+   *   sqrt(l2(q, c_l)) <= (sqrt(radius) + radii(l)) · (1 + (dim + 4)·2⁻⁵²)
+   * }}}
+   * The unwidened test is exact in real arithmetic, by the reverse
+   * triangle inequality ([[graft.index.IvfFlatIndex.rangeProbe]]'s
+   * proof), but not in the doubles it runs in: a near-collinear
+   * (q, member, centroid) triple with the radius at the member's exact
+   * distance lost its list by 1.8e-15. The factor is one rounding slack
+   * for both sides. With u = 2⁻⁵³, a computed [[l2]] over dim terms is
+   * within (dim + 2)·u of the true squared distance of its operands (the
+   * double difference and its square round once each, the sequential
+   * sum at most (dim − 1) times), so each of the three square roots —
+   * ‖q − c‖ here, ‖q − v‖ under `radius`, ‖v − c‖ under the covering
+   * radius — is within (dim + 4)·u/2 of its true value. Chaining them
+   * through the triangle inequality costs (dim + 4)·u, and the rounded
+   * sum and product on the right one u each: (dim + 4)·2⁻⁵² = 2(dim + 4)·u
+   * covers all of it, for a sliver more kept lists and no dismissal.
+   * A NaN covering radius (poisoned by a NaN member) is treated as
+   * unbounded — never prune that list (rangeProbe's guard). A negative
+   * radius makes sqrt(radius) NaN, every comparison false, and only
+   * NaN-radius lists survive — their pairs then fail the retained
+   * `dist <= r` predicate, so the rewrite stays exact there too.
+   * Ascending list ids. L2 only: the bound needs a true metric.
    */
   def rangeProbeLists(
       q: Array[Float],
@@ -317,10 +434,11 @@ object VectorKernels {
       radii: Array[Double],
       radius: Double): Array[Int] = {
     val r = math.sqrt(radius)
+    val grow = 1.0 + (q.length + 4) * math.ulp(1.0)
     val out = new scala.collection.mutable.ArrayBuilder.ofInt
     var l = 0
     while (l < centroids.length) {
-      if (radii(l).isNaN || math.sqrt(l2(q, centroids(l))) <= r + radii(l))
+      if (radii(l).isNaN || math.sqrt(l2(q, centroids(l))) <= (r + radii(l)) * grow)
         out += l
       l += 1
     }

@@ -68,7 +68,8 @@ object CoGroupTopK {
    * list_id INT) — one row per (query, probe); `corpus` is (id LONG,
    * list_id INT, vec ARRAY<FLOAT>). Returns (qid, id, dist, rank) with the
    * (dist, id) tie order, bit-identical to the static path (same
-   * [[VectorKernels.distance]] kernel, same [[TopKBuf]] keep-set and order).
+   * [[VectorKernels.distancesTo]] kernel, same [[TopKBuf]] keep-set and
+   * order).
    *
    * `salt` is the number of sub-buckets each list splits into
    * ([[Sizing.salt]], or for the exact-kNN flood over one virtual list
@@ -246,15 +247,15 @@ object CoGroupTopK {
     val n = qids.length
     if (n == 0) return Iterator.empty
     val bufs = Array.fill(n)(new TopKBuf(k))
+    val queries = qvecs.toArray
+    val all = Array.range(0, n)
+    val dists = new Array[Double](n)
     while (cs.hasNext) {
       val (_, id, vec) = cs.next()
       if (vec != null) {
+        VectorKernels.distancesTo(vec, queries, all, metricId, dists)
         var i = 0
-        while (i < n) {
-          val d = VectorKernels.distance(vec, qvecs(i), metricId)
-          bufs(i).insert(d, id)
-          i += 1
-        }
+        while (i < n) { bufs(i).insert(dists(i), id); i += 1 }
       }
     }
     Iterator.range(0, n).flatMap { i =>

@@ -6,7 +6,8 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession, graftshims}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -341,7 +342,9 @@ class IvfFlatIndex(
     * survives iff the query ball intersects the list's covering ball —
     * ||q − c|| <= sqrt(radius) + maxR(list). Reverse triangle inequality
     * makes the prune EXACT (no false dismissals): for any x in the list,
-    * ||q − x|| >= ||q − c|| − ||x − c|| >= ||q − c|| − maxR. A NaN
+    * ||q − x|| >= ||q − c|| − ||x − c|| >= ||q − c|| − maxR; the kernel
+    * widens the right side by the doubles' rounding slack, which keeps it
+    * exact in floating point too ([[VectorKernels.rangeProbeLists]]). A NaN
     * covering radius (one NaN vector component poisons the max() that
     * computed it) makes the IEEE test false, which would FALSELY DISMISS
     * the list's healthy members — treat it as unbounded instead (always
@@ -566,10 +569,14 @@ object IvfFlatIndex {
    * `corpus` (the self-join fast paths read (id, vec) corpus rows); a
    * null qvec stays null. `label` carries a leading STRING column per
    * row (the multi-index stream's index name). Two reads:
-   *  - a `LocalRelation` of exactly (LONG, ARRAY<FLOAT>) columns (the
-   *    serving path's `Seq.toDF`) decodes its rows in place: no job, no
-   *    codegen, no Row conversion (a folded `limit().collect()` was 72 %
-   *    of a resident search's driver prelude, ROADMAP item 3(c));
+   *  - a local relation of (LONG, ARRAY<FLOAT>) columns (the serving
+   *    path's `Seq.toDF`) decodes its rows in place: no job, no codegen,
+   *    no Row conversion (a folded `limit().collect()` was 72 % of a
+   *    resident search's driver prelude, ROADMAP item 3(c)). A bare
+   *    `LocalRelation`, or a `Project` of attribute aliases over one, is
+   *    read off the frame's analyzed plan with no Catalyst pass (the
+   *    select and optimize were 1.4-1.8 ms of a 6 ms search call); other
+   *    shapes the optimizer folds into one are read after it;
    *  - anything else takes `rdd.take`, NOT `limit(n).collect()`: Spark's
    *    BaseLimitExec mints a JVM-global `_limit_counter_N` per operator,
    *    so a limit plan never hits the codegen cache (r9). RDD take pulls
@@ -586,23 +593,30 @@ object IvfFlatIndex {
     // a corpus keeps its own column names: an aliasing projection would
     // be one more generated class to compile on a distributed corpus
     val cols = if (corpus) Seq("id", "vec") else Seq("qid", "qvec")
-    val sel = queries.select((label.toSeq ++ cols).map(col): _*)
-    // `isLocal` alone misses Project(LocalRelation) (any .toDF rename);
-    // the optimizer's ConvertToLocalRelation folds those, so test the
-    // OPTIMIZED plan (computing it runs no jobs and is cached)
-    val (sample, labels, read) = sel.queryExecution.optimizedPlan match {
-      case r: LocalRelation if rawQueryShape(r) =>
-        val rows = r.data.iterator.take(limit + 1).toArray
-        val live = rows.collect { case row if !row.isNullAt(0) =>
-          (row.getLong(0), if (row.isNullAt(1)) null else row.getArray(1).toFloatArray())
-        }
-        (live, Array.empty[String], rows.length)
-      case _ =>
-        val rows = sel.rdd.take(limit + 1)
-        val live = rows.filter(!_.isNullAt(at))
-        (live.map(decodeQueryRow(_, at)),
-          if (label.isEmpty) Array.empty[String] else live.map(_.getString(0)), rows.length)
+    def local(r: LocalRelation, q: Int, v: Int) = {
+      val rows = r.data.iterator.take(limit + 1).toArray
+      val live = rows.collect { case row if !row.isNullAt(q) =>
+        (row.getLong(q), if (row.isNullAt(v)) null else row.getArray(v).toFloatArray())
+      }
+      (live, Array.empty[String], rows.length)
     }
+    val (sample, labels, read) =
+      localColumns(queries, cols).filter(_ => label.isEmpty) match {
+        case Some((r, q, v)) => local(r, q, v)
+        case None =>
+          val sel = queries.select((label.toSeq ++ cols).map(col): _*)
+          // the optimizer's ConvertToLocalRelation folds any other local
+          // shape, so test the OPTIMIZED plan (it runs no jobs)
+          sel.queryExecution.optimizedPlan match {
+            case r: LocalRelation if rawQueryShape(r.output) => local(r, 0, 1)
+            case _ =>
+              val rows = sel.rdd.take(limit + 1)
+              val live = rows.filter(!_.isNullAt(at))
+              (live.map(decodeQueryRow(_, at)),
+                if (label.isEmpty) Array.empty[String] else live.map(_.getString(0)),
+                rows.length)
+          }
+      }
     val dropped = read - sample.length
     if (dropped > 0 && !corpus) {
       droppedNullQueries.addAndGet(dropped.toLong)
@@ -611,9 +625,40 @@ object IvfFlatIndex {
     QuerySnapshot(sample, read <= limit, labels)
   }
 
-  /** A local relation of exactly (LONG, ARRAY<FLOAT>): its rows decode
+  /** The relation and the ordinals of `cols` when the frame's analyzed
+    * plan is a `LocalRelation`, bare or under a `Project` of attributes
+    * and attribute aliases, and `cols` name one (LONG, ARRAY<FLOAT>) pair
+    * of its columns. */
+  private def localColumns(queries: DataFrame, cols: Seq[String])
+      : Option[(LocalRelation, Int, Int)] = {
+    val named: Option[(LocalRelation, Seq[(String, Attribute)])] =
+      queries.queryExecution.analyzed match {
+        case r: LocalRelation => Some((r, r.output.map(a => a.name -> a)))
+        case Project(list, r: LocalRelation) =>
+          val out = list.collect {
+            case a: Attribute => a.name -> a
+            case Alias(a: Attribute, name) => name -> a
+          }
+          if (out.length == list.length) Some((r, out)) else None
+        case _ => None
+      }
+    val resolver = queries.sparkSession.sessionState.conf.resolver
+    named.flatMap { case (r, out) =>
+      val ords = cols.map(c => out.filter(n => resolver(n._1, c)) match {
+        case Seq((_, a)) => r.output.indexWhere(_.exprId == a.exprId)
+        case _ => -1
+      })
+      ords match {
+        case Seq(q, v) if q >= 0 && v >= 0 &&
+            rawQueryShape(Seq(r.output(q), r.output(v))) => Some((r, q, v))
+        case _ => None
+      }
+    }
+  }
+
+  /** Exactly (LONG, ARRAY<FLOAT>) columns: a local relation's rows decode
     * in place. */
-  private def rawQueryShape(r: LocalRelation): Boolean = r.output.map(_.dataType) match {
+  private def rawQueryShape(cols: Seq[Attribute]): Boolean = cols.map(_.dataType) match {
     case Seq(LongType, ArrayType(FloatType, _)) => true
     case _ => false
   }

@@ -229,7 +229,8 @@ private[index] object VecScratch {
 }
 
 /** Flat-vector scorer: payload is the row's ARRAY<FLOAT> vector, decoded
-  * once and scored against each probing query with the metric kernel.
+  * once and scored against all its probing queries in one
+  * [[VectorKernels.distancesTo]] call.
   * `excludeSelf` skips qid == id pairs — the self-join reformulation
   * treats every corpus vector as a query and must not rank itself. */
 final class FlatListScorer(
@@ -249,12 +250,13 @@ object FlatListScorer {
     if (listId >= 0 && listId < pi.listPos.length) {
       val pos = pi.listPos(listId)
       if (pos != null) {
-        val v = VecScratch.local().decode(payload)
+        val scratch = VecScratch.local()
+        val dists = scratch.distances(pos.length)
+        VectorKernels.distancesTo(scratch.decode(payload), pi.qvecs, pos, metric, dists)
         var j = 0
         while (j < pos.length) {
-          val p = pos(j)
-          if (!(excludeSelf && pi.qids(p) == id))
-            out.insert(pi.qids(p), id, VectorKernels.distance(v, pi.qvecs(p), metric))
+          val qid = pi.qids(pos(j))
+          if (!(excludeSelf && qid == id)) out.insert(qid, id, dists(j))
           j += 1
         }
       }

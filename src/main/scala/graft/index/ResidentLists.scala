@@ -76,8 +76,8 @@ final class ResidentLists private (
       .filter(l => listPos(l) != null && l < partOf.length && partOf(l) >= 0)
       .map(partOf).toArray.distinct.sorted
     if (parts.isEmpty) return (finals, 0L)
-    val score = ResidentLists.scorer(qvecs, listPos, k, metric)
-    val drained = blocks.sparkContext.runJob(blocks, score, parts.toSeq)
+    val drained = blocks.sparkContext.runJob(blocks,
+      new ResidentLists.Scorer(qvecs, listPos, k, metric), parts.toSeq)
     var candidates = 0L
     drained.foreach { d =>
       candidates += d.candidates
@@ -105,38 +105,40 @@ object ResidentLists {
       pos: Array[Int], ids: Array[Array[Long]], dists: Array[Array[Double]],
       candidates: Long)
 
-  /** The task function, built here so its closure captures only the
-    * batch, never the RDD or its owner. */
-  private def scorer(
-      qvecs: Array[Array[Float]], listPos: Array[Array[Int]],
-      k: Int, metric: Int): Iterator[ListBlock] => Drained = { blocks =>
-    val bufs = new Array[TopKBuf](qvecs.length)
-    var candidates = 0L
-    while (blocks.hasNext) {
-      val b = blocks.next()
-      val pos = if (b.listId < listPos.length) listPos(b.listId) else null
-      if (pos != null) {
-        var r = 0
-        while (r < b.ids.length) {
-          val v = b.vecs(r)
-          val id = b.ids(r)
-          var j = 0
-          while (j < pos.length) {
-            val p = pos(j)
-            var buf = bufs(p)
-            if (buf == null) { buf = new TopKBuf(k); bufs(p) = buf }
-            buf.insert(VectorKernels.distance(v, qvecs(p), metric), id)
-            j += 1
+  /** The task function. A named class, not a lambda: `runJob` cleans a
+    * lambda by re-reading its enclosing class's bytecode on every search,
+    * and this captures only the batch, never the RDD or its owner. Each
+    * row is scored against all its list's queries in one
+    * [[VectorKernels.distancesTo]] call. */
+  private final class Scorer(
+      qvecs: Array[Array[Float]], listPos: Array[Array[Int]], k: Int, metric: Int)
+      extends (Iterator[ListBlock] => Drained) with Serializable {
+    override def apply(blocks: Iterator[ListBlock]): Drained = {
+      val bufs = new Array[TopKBuf](qvecs.length)
+      var dists: Array[Double] = Array.emptyDoubleArray
+      var candidates = 0L
+      while (blocks.hasNext) {
+        val b = blocks.next()
+        val pos = if (b.listId < listPos.length) listPos(b.listId) else null
+        if (pos != null && b.ids.nonEmpty) {
+          pos.foreach(p => if (bufs(p) == null) bufs(p) = new TopKBuf(k))
+          if (dists.length < pos.length) dists = new Array[Double](pos.length)
+          var r = 0
+          while (r < b.ids.length) {
+            VectorKernels.distancesTo(b.vecs(r), qvecs, pos, metric, dists)
+            val id = b.ids(r)
+            var j = 0
+            while (j < pos.length) { bufs(pos(j)).insert(dists(j), id); j += 1 }
+            r += 1
           }
-          candidates += pos.length
-          r += 1
+          candidates += pos.length.toLong * b.ids.length
         }
       }
+      val live = bufs.indices.filter(bufs(_) != null).toArray
+      val drained = live.map(bufs(_).drain())
+      Drained(live, drained.map(b => Array.tabulate(b.size)(b.id)),
+        drained.map(b => Array.tabulate(b.size)(b.dist)), candidates)
     }
-    val live = bufs.indices.filter(bufs(_) != null).toArray
-    val drained = live.map(bufs(_).drain())
-    Drained(live, drained.map(b => Array.tabulate(b.size)(b.id)),
-      drained.map(b => Array.tabulate(b.size)(b.dist)), candidates)
   }
 
   /** Extensions stacked on one full load before the next load re-reads

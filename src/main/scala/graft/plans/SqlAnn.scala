@@ -1136,7 +1136,10 @@ object SqlAnn {
               Some(VectorKernels.ipRangeProbeLists(
                 q, reg.centroids, radii, r).toSet)
             case _ =>
-              l2RadiusOf(q, r, m).map(intersecting(q, _, reg.centroids, radii))
+              // lists whose covering ball intersects the query ball: the
+              // same slack-carrying prune as IvfFlatIndex.rangeProbe
+              l2RadiusOf(q, r, m).map(
+                VectorKernels.rangeProbeLists(q, reg.centroids, radii, _).toSet)
           }
         }
       // every dist-under-bound conjunct contributes a covering-ball list
@@ -1283,22 +1286,6 @@ object SqlAnn {
         buildKeys = Seq(cList),
         broadcastKeyIndices = Seq(0),
         onlyInBroadcast = false))
-    }
-
-    /** Lists whose covering ball intersects the query ball:
-      * ||q − c_l|| <= sqrt(radius) + maxR(l) — the same exact prune as
-      * [[graft.index.IvfFlatIndex.rangeProbe]] (see its proof). A NaN
-      * covering radius (a NaN vector component poisons the max()
-      * aggregation that computed it) makes the IEEE test false, which
-      * would FALSELY DISMISS the list's healthy members — treat it as
-      * unbounded instead (never prune that list). */
-    private def intersecting(
-        q: Array[Float], radius: Double,
-        centroids: Array[Array[Float]], radii: Array[Double]): Set[Int] = {
-      val r = math.sqrt(radius)
-      (0 until centroids.length).iterator.filter(l =>
-        radii(l).isNaN ||
-          math.sqrt(VectorKernels.l2(q, centroids(l))) <= r + radii(l)).toSet
     }
 
     private def vecOfRelation(

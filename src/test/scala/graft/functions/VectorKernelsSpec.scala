@@ -98,4 +98,70 @@ class VectorKernelsSpec extends AnyFunSuite {
         s"dim=$dim (primitive)")
     }
   }
+
+  test("distancesTo is bit-identical to distance for every pair, metric, dim and remainder") {
+    import VectorKernels.{METRIC_COSINE, METRIC_IP, METRIC_L2}
+    val rnd = new scala.util.Random(16)
+    // mostly ordinary floats, with NaN, ±Inf, subnormals, signed zeros and
+    // magnitudes whose squares leave float range mixed in
+    def elem(): Float = rnd.nextInt(40) match {
+      case 0 => Float.NaN
+      case 1 => Float.PositiveInfinity
+      case 2 => Float.NegativeInfinity
+      case 3 => Float.MinPositiveValue * (1 + rnd.nextInt(1000))
+      case 4 => -0.0f
+      case 5 => 0.0f
+      case 6 => (rnd.nextGaussian() * 1e30).toFloat
+      case _ => (rnd.nextGaussian() * 3).toFloat
+    }
+    def vec(dim: Int, special: Boolean): Array[Float] = rnd.nextInt(12) match {
+      case 0 => new Array[Float](dim) // the zero vector
+      case _ => Array.fill(dim)(if (special) elem() else (rnd.nextGaussian() * 3).toFloat)
+    }
+    // every bit of every non-NaN value, signed zeros included. NaNs compare
+    // as one value: Java leaves a NaN result's sign and payload to the
+    // instruction order the JIT picks, for the scalar kernel alike, and
+    // every consumer (TopKBuf, range predicates) treats all NaNs the same
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    var pairs = 0L
+    for (dim <- 1 to 1031) {
+      val special = dim % 3 == 0
+      // a pool of queries; one of them has another length on some dims
+      val qvecs = Array.fill(12)(vec(dim, special))
+      if (dim % 5 == 0) qvecs(rnd.nextInt(12)) = vec(dim + 1, special)
+      // rows of the queries' length, plus one shorter row
+      val rows = Seq(vec(dim, special), vec(dim, special), vec(dim - 1, special))
+      for (m <- 1 to 9; metric <- Seq(METRIC_L2, METRIC_IP, METRIC_COSINE); v <- rows) {
+        // positions in any order, repeats allowed
+        val pos = Array.fill(m)(rnd.nextInt(qvecs.length))
+        val out = Array.fill(m + 2)(Double.NaN)
+        VectorKernels.distancesTo(v, qvecs, pos, metric, out)
+        var j = 0
+        while (j < m) {
+          val want = VectorKernels.distance(v, qvecs(pos(j)), metric)
+          assert(bits(out(j)) === bits(want),
+            s"dim=$dim m=$m metric=$metric j=$j: ${out(j)} != $want")
+          j += 1
+        }
+        pairs += m
+      }
+    }
+    assert(pairs === 1031L * 45 * 3 * 3)
+  }
+
+  test("rangeProbeLists keeps the list of a member at exactly the radius (near-collinear triple)") {
+    // one list: centroid c, member v, query q nearly collinear with them
+    // and the radius at the member's exact distance. The unwidened test
+    // sqrt(l2(q, c)) <= sqrt(radius) + R evaluates 1.8e-15 too large and
+    // pruned the list, dropping a true match
+    val c = Array(-0.35221314f, -3.2634487f)
+    val v = Array(-6.136591f, -0.77524078f)
+    val q = Array(-12.065843f, 1.7752861f)
+    val radius = VectorKernels.l2(q, v)
+    val coverR = math.sqrt(VectorKernels.l2(v, c))
+    assert(VectorKernels.rangeProbeLists(q, Array(c), Array(coverR), radius).toSeq === Seq(0))
+    // the widening is relative and tiny: a list farther than the radius
+    // plus its covering radius still prunes
+    assert(VectorKernels.rangeProbeLists(q, Array(c), Array(coverR), radius * 0.999).isEmpty)
+  }
 }

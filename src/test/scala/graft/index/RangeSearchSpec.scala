@@ -59,6 +59,27 @@ class RangeSearchSpec extends SparkSpec {
     assert(got === brute(radius, Metric.L2))
   }
 
+  test("IVF range search keeps a member at exactly the radius (near-collinear triple)") {
+    // one list with centroid c and member v; q nearly collinear with
+    // them; the radius is q's exact distance to v. In doubles the
+    // unwidened covering-ball test exceeded its right side by 1.8e-15 and
+    // pruned the list, so the index returned nothing where Knn.range
+    // returns the pair
+    val c = Array(-0.35221314f, -3.2634487f)
+    val v = Array(-6.136591f, -0.77524078f)
+    val q = Array(-12.065843f, 1.7752861f)
+    val radius = VectorKernels.l2(q, v)
+    val bc = IvfFlatIndex.broadcastCentroids(spark, Array(c))
+    val index = new IvfFlatIndex(spark,
+      IvfFlatIndex.assign(vectorsDF(Seq((1L, v))), bc), bc, Metric.L2)
+    val want = Knn.range(queriesDF(Seq((7L, q))), vectorsDF(Seq((1L, v))), radius)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(want === Seq((7L, 1L, radius)))
+    val got = index.rangeSearch(queriesDF(Seq((7L, q))), radius)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(got === want)
+  }
+
   test("IP range search via the Cauchy-Schwarz ball bound: exact, prunes a far cluster, negative radii valid") {
     // round 16: IP is not a metric, but the L2 covering ball bounds the
     // dot exactly (c.q + R*||q|| >= -r keeps a list) — exact vs brute

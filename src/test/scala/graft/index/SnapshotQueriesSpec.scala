@@ -140,4 +140,25 @@ class SnapshotQueriesSpec extends SparkSpec {
       intercept[ClassCastException](IvfFlatIndex.snapshotQueries(df))
     }
   }
+
+  test("a local frame is read off its analyzed plan, by name, whatever its column order") {
+    val s = spark
+    import s.implicits._
+    val rows = randomVectors(20, 8, seed = 23)
+    // a Project of aliases over a LocalRelation: renamed, reordered, with
+    // a column the snapshot does not read and names in another case
+    val local = rows.map { case (q, v) => (v, "x", q) }.toDF("QVEC", "tag", "Qid")
+    val plan = local.queryExecution.analyzed
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Project] &&
+      plan.children.head.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val distributed = spark.sparkContext.parallelize(rows, 2).toDF("qid", "qvec")
+    val Seq(a, b) = Seq(local, distributed).map(IvfFlatIndex.snapshotQueries(_))
+    assert(a.bounded && b.bounded)
+    assert(decoded(a) === decoded(b))
+    // a computed column is not an alias: the optimized read still decodes it
+    val shifted = local.select(($"Qid" + 1).as("qid"), $"QVEC".as("qvec"))
+    assert(IvfFlatIndex.snapshotQueries(shifted).sample.map(_._1).toSeq ===
+      rows.map(_._1 + 1))
+  }
 }
